@@ -425,6 +425,22 @@ def _make_fold_backend(src, fold_col, fold, feat_cols, y_cols, family_name,
                 return st[1]
             return super().eval_hess_multi(betas)
 
+        # the inherited fallbacks aggregate self.df directly: the raw,
+        # unmasked, unstandardized shared frame, held-out rows included.
+        # Every fold backend is built with both stashes set, so a missing
+        # one is a wiring bug, never a reason to scan
+        def lambda_max_gradient(self):
+            pre = getattr(self, "_lam_max_grad", None)
+            if pre is None:
+                raise RuntimeError("fold backend has no lambda_max "
+                                   "gradient stash")
+            return pre
+
+        def null_intercepts(self):
+            if getattr(self, "_null_mu", None) is None:
+                raise RuntimeError("fold backend has no null-model stash")
+            return super().null_intercepts()
+
         def subset(self, cols):
             cols = np.asarray(cols)
             if cols.size == self.p_total:
@@ -433,10 +449,19 @@ def _make_fold_backend(src, fold_col, fold, feat_cols, y_cols, family_name,
             if self.intercept:
                 assert cols[0] == 0, "active set must contain the intercept"
             idx = cols[off:] - off
-            return _make_fold_backend(
+            sub = _make_fold_backend(
                 src, fold_col, fold, [feat_cols[j] for j in idx], y_cols,
                 family_name, intercept, n, lgamma_sum,
                 self._x_center[idx], self._x_scale[idx])
+            # the stashes travel with the columns: the gradient is
+            # (p, m) raveled per target, the null model is column-free
+            grad = getattr(self, "_lam_max_grad", None)
+            if grad is not None:
+                sub._lam_max_grad = (
+                    grad.reshape((len(feat_cols), -1), order="F")[idx]
+                    .ravel(order="F"))
+            sub._null_mu = getattr(self, "_null_mu", None)
+            return sub
 
         def unpersist(self):
             # the shared source frame's lifecycle belongs to the CV
@@ -616,7 +641,12 @@ def _fused_cv_setup(df, feature_cols, label_col, key_col, number: int,
                 backends[(fold, rep)] = (bk, meta)
     except LookupError:
         enc.unpersist()
-        return None
+        return None  # a complement misses a class: per-cell route
+    except BaseException:
+        # any other exit (a negative poisson response) re-raises, never
+        # with the shared frame still persisted
+        enc.unpersist()
+        raise
     return {"src": enc, "backends": backends, "classes": classes,
             "y_cols": y_cols, "fcols": fcols, "m": m,
             "intercept": intercept, "family": family, "number": number,
@@ -685,7 +715,7 @@ def _spec_score_finish(family: str, meas: str, sums: np.ndarray,
                        n_held: float, n_classes: int) -> np.ndarray:
     """Driver-side finish for the speculative score partials: the mean
     (and the per-measure constant factors _score_spark applies)."""
-    vals = sums / max(n_held, 1.0)
+    vals = sums / n_held
     if meas == "deviance":
         return -2.0 * vals
     if family == "multinomial" and meas in ("mse", "mae"):
@@ -796,6 +826,11 @@ def _fused_warm_prefetch(fused: dict, warm_by_cell: dict,
                 pos += ln
             n_held = float(total[pos])
             pos += 1
+            if n_held == 0:
+                # an empty held-out fold has no mean: leave the cell to
+                # the grouped scoring, which fails on it exactly as the
+                # per-cell route does
+                continue
             spec[(bk._fold, rep)] = {
                 "base": base,
                 "scores": {meas: _spec_score_finish(fam, meas, s, n_held,

@@ -53,6 +53,28 @@ def copurchase_edges(lineitem: DataFrame, max_lines: int = 16) -> DataFrame:
                                 F.col("src").alias("dst")))
 
 
+def _pagerank_outlinks(edges: DataFrame) -> DataFrame:
+    """(src, dst, deg): every edge with its source's out-degree.
+
+    The degree is a map-side-combined groupBy(src), so a hub src's
+    out-edge list never lands in one task's buffer (a straggler on any
+    power-law graph at scale); it reduces per partition before its
+    node-sized shuffle. The join carries no broadcast hint: both inputs
+    arrive hash-partitioned on src with the same partition count, so the
+    sort-merge join adds no exchange, and AQE still switches to a
+    broadcast at runtime when the degree side turns out small. A forced
+    broadcast of a node-sized frame fails outright once the graph has
+    billions of nodes (Spark's 8 GB broadcast limit). The result stays
+    HASH-PARTITIONED ON src, so every iteration's contribution join
+    reuses that partitioning and only the node-sized ranks side
+    shuffles: at 100 TB the per-iteration shuffle is O(nodes), not
+    O(edges)."""
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    n_shuffle = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (edges.repartition(n_shuffle, "src")
+            .join(deg, "src").select("src", "dst", "deg"))
+
+
 def pagerank(edges: DataFrame, iterations: int = 2,
              damping: float = 0.85) -> DataFrame:
     """Fixed-iteration PageRank from the uniform start.
@@ -63,28 +85,17 @@ def pagerank(edges: DataFrame, iterations: int = 2,
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    from golem_spark.pipeline._cache import _swap_cache
+    from golem_spark.pipeline._cache import _release_cache, _swap_cache
 
-    # ONE edge-sized persisted frame: (src, dst, deg), built as a
-    # map-side-combined groupBy(src) degree + a join onto the edges
-    # hash-partitioned on src (VERDICT r14 item 3). The r14 window
-    # count had no partial aggregation — a hub src's entire out-edge
-    # list landed in one task's buffer, a straggler on any power-law
-    # graph at scale (guide §2.5); the groupBy reduces per partition
-    # before its node-sized shuffle. Both join inputs arrive
-    # hash-partitioned on src with the same partition count, so the
-    # join adds NO exchange (AQE is free to broadcast the node-sized
-    # degree side at runtime instead), and the persisted frame stays
-    # HASH-PARTITIONED ON src, so every iteration's contribution join
-    # reuses that partitioning and only the node-sized ranks side
-    # shuffles — at 100 TB the per-iteration shuffle is O(nodes), not
-    # O(edges)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    n_shuffle = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    outlinks = _swap_cache(
-        "pagerank_outlinks",
-        edges.repartition(n_shuffle, "src")
-        .join(F.broadcast(deg), "src").select("src", "dst", "deg"))
+    # drop the previous call's final ranks snapshot BEFORE this call
+    # persists its own: the two share one logical plan, so this call's
+    # persist would otherwise reuse the old cache entry, and releasing
+    # the old frame at the end would uncache this call's snapshot by
+    # plan match — every later call then recomputed the snapshot inside
+    # its final query, under a plan shape (and generated code) that
+    # differs from the first call's
+    _release_cache("pagerank_ranks")
+    outlinks = _swap_cache("pagerank_outlinks", _pagerank_outlinks(edges))
     nodes = _swap_cache(
         "pagerank_nodes",
         (outlinks.select(F.col("src").alias("node"))

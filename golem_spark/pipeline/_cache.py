@@ -65,3 +65,15 @@ def _adopt_cache(slot: str, df: DataFrame) -> DataFrame:
             prev.unpersist()
         _LIVE_CACHES[key] = df
     return df
+
+
+def _release_cache(slot: str) -> None:
+    """Unpersist and forget this thread's frame in ``slot``, if any.
+    For callers whose next frame in the slot has the SAME logical plan
+    as the live one: Spark's cache matches frames by plan, so persisting
+    the new frame while the old one lives reuses the old entry, and the
+    later release of the old frame would uncache the new one too."""
+    with _CACHE_LOCK:
+        prev = _LIVE_CACHES.pop((slot, threading.get_ident()), None)
+    if prev is not None:
+        prev.unpersist()

@@ -2,7 +2,19 @@
 
 On a real cluster these configs are supplied by spark-submit; the factory
 only sets session-level SQL knobs (AQE, shuffle partitions, Arrow) that are
-correct at any scale.
+correct at any scale, plus one static knob: the generated-class cache size.
+
+Spark compiles every whole-stage-codegen class with Janino and keeps the
+compiled classes in a JVM-wide LRU cache keyed by the generated source
+(``spark.sql.codegen.cache.maxEntries``, default 100). This engine's
+working set is far larger: the three graph/dedup queries alone generate
+about 147 classes per call, and one pass over all 166 queries compiles
+about 1,880 distinct classes at sf0.01. At 100 entries every class is
+evicted before its next use, so a second pass over the suite compiled
+2,726 classes again; at CODEGEN_CACHE_ENTRIES it compiles 40-50.
+CODEGEN_CACHE_ENTRIES is that working set with about 2x headroom, and
+``tools/codegen_working_set.py`` measures it again. The retained classes
+cost no measurable JVM Metaspace (CHANGES.md records the numbers).
 """
 
 from __future__ import annotations
@@ -10,6 +22,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# generated classes kept compiled per JVM (see the module docstring);
+# a static conf: it takes effect only when the session is created
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(app_name: str = "golem_spark", shuffle_partitions: int | None = None,
@@ -43,6 +59,8 @@ def get_spark(app_name: str = "golem_spark", shuffle_partitions: int | None = No
         # above ~500: at ~800 generated agg fields Spark 4.1 codegen
         # splits into a nested class that hits a Janino
         # IllegalAccessError on BufferedRowIterator.partitionIndex.
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         # events.parquet stores ts as TIMESTAMP(NANOS); Spark has no nanos
@@ -55,6 +73,14 @@ def get_spark(app_name: str = "golem_spark", shuffle_partitions: int | None = No
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compile_count(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far (Spark's
+    CodegenMetrics): the difference around a call is how many classes
+    that call compiled, 0 when every class came from the cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 TABLES = (

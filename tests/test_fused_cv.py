@@ -84,3 +84,126 @@ def test_fused_route_engaged(spark):
     finally:
         cv._fused_cv_setup = orig
     assert called.get("setup"), "fused CV setup did not engage"
+
+
+# -- error paths and degenerate folds (small synthetic frames) -------------
+
+_SIGMAS = np.array([2.0, 1.0, 0.5])
+
+
+def _zero_warm(qv, fold, rep):
+    return np.zeros((3, 1, len(_SIGMAS)))
+
+
+def _frame(spark, keys, y, seed=0):
+    rng = np.random.default_rng(seed)
+    rows = [(int(k), float(a), float(b), int(c)) for k, a, b, c in
+            zip(keys, rng.normal(size=len(keys)),
+                rng.normal(size=len(keys)), y)]
+    return spark.createDataFrame(rows, "id long, x1 double, x2 double, "
+                                       "y long")
+
+
+def test_fused_setup_unpersists_on_negative_poisson_response(
+        spark, monkeypatch):
+    """A negative poisson response raises inside the fused set-up, after
+    the shared frame was persisted: the frame must not outlive the
+    error."""
+    n = 240
+    df = _frame(spark, np.arange(n), np.tile([0, 1, 2, -1], n // 4))
+    persisted = []
+    orig = type(df).persist
+
+    def spy(self, *a, **kw):
+        persisted.append(self)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(type(df), "persist", spy)
+    jsc = spark.sparkContext._jsc
+    baseline = jsc.getPersistentRDDs().size()
+    with pytest.raises(ValueError, match="negative responses"):
+        train_owl_spark(df, ["x1", "x2"], "y", "id", q=(0.2,), number=3,
+                        family="poisson", sigma=_SIGMAS,
+                        beta_init_by_cell=_zero_warm, max_workers=1)
+    assert persisted, "the fused set-up did not run"
+    assert jsc.getPersistentRDDs().size() == baseline
+    for frame in persisted:
+        assert not frame.storageLevel.useMemory
+        assert not frame.storageLevel.useDisk
+
+
+def _empty_fold_frame(spark):
+    from golem_spark.cv import fold_ids
+
+    keys = np.arange(2000)
+    keys = keys[fold_ids(keys, 3) != 2][:300]  # fold 2 holds no row
+    rng = np.random.default_rng(1)
+    y = (rng.normal(size=len(keys)) > 0).astype(int)
+    return _frame(spark, keys, y, seed=2)
+
+
+def test_empty_fold_has_no_speculative_score(spark):
+    """The speculative held-out mean of an empty fold is undefined: no
+    entry, so the cell goes to the grouped scoring."""
+    from golem_spark.cv import _fused_cv_setup, _fused_warm_prefetch
+
+    df = _empty_fold_frame(spark)
+    fused = _fused_cv_setup(df, ["x1", "x2"], "y", "id", 3, 1, "binomial",
+                            {"sigma": _SIGMAS})
+    try:
+        _fused_warm_prefetch(
+            fused, {(f, 0): _zero_warm(0.2, f, 0) for f in range(3)},
+            ["deviance"])
+        assert sorted(fused["spec_scores"]) == [(0, 0), (1, 0)]
+    finally:
+        fused["src"].unpersist()
+
+
+def test_empty_fold_fails_alike_on_both_routes(spark):
+    df = _empty_fold_frame(spark)
+    errors = {}
+    for grouped in (None, False):  # fused, per-cell
+        with pytest.raises(Exception) as exc:
+            train_owl_spark(df, ["x1", "x2"], "y", "id", q=(0.2,), number=3,
+                            family="binomial", sigma=_SIGMAS,
+                            beta_init_by_cell=_zero_warm, max_workers=1,
+                            _grouped=grouped)
+        errors[grouped] = exc.type
+    assert errors[None] is errors[False] is TypeError
+
+
+def _fold_backend(spark, family, p, y_cols):
+    from golem_spark.cv import _make_fold_backend
+
+    cols = [f"__f{j}" for j in range(p)]
+    src = spark.createDataFrame(
+        [(0,) + (1.0,) * (p + len(y_cols))],
+        ", ".join(["__fold_0 long"] + [f"{c} double"
+                                       for c in cols + y_cols]))
+    return _make_fold_backend(src, "__fold_0", 1, cols, y_cols, family,
+                              True, 10, 0.0, np.zeros(p), np.ones(p))
+
+
+def test_fold_backend_without_stash_raises(spark):
+    bk = _fold_backend(spark, "binomial", 3, ["__y0"])
+    with pytest.raises(RuntimeError):
+        bk.lambda_max_gradient()
+    with pytest.raises(RuntimeError):
+        bk.null_intercepts()
+    with pytest.raises(RuntimeError):
+        bk.subset(np.array([0, 2])).lambda_max_gradient()
+
+
+def test_fold_backend_subset_slices_stash(spark):
+    # multinomial, m = 2 targets: the gradient is (p, m) raveled per target
+    bk = _fold_backend(spark, "multinomial", 3, ["__y0", "__y1"])
+    grad = np.array([1.0, 2.0, 3.0, 10.0, 20.0, 30.0])
+    bk._lam_max_grad = grad
+    bk._stash_null_mu("multinomial", np.array([0.3, 0.5]))
+    sub = bk.subset(np.array([0, 1, 3]))  # intercept + features 0 and 2
+    assert sub.feat_cols == ["__f0", "__f2"]
+    np.testing.assert_array_equal(sub.lambda_max_gradient(),
+                                  [1.0, 3.0, 10.0, 30.0])
+    np.testing.assert_array_equal(sub.null_intercepts(),
+                                  bk.null_intercepts())
+    np.testing.assert_array_equal(bk.lambda_max_gradient(), grad)

@@ -857,6 +857,21 @@ def test_pagerank_sums_to_one_and_converges_toward_degree(spark):
         pagerank(edges, iterations=0)
 
 
+def test_pagerank_outlinks_carry_no_broadcast_hint(spark):
+    """The degree side is node-sized: forcing its broadcast fails once a
+    graph has billions of nodes, so the join leaves the choice to AQE."""
+    from golem_spark.operators.graph import _pagerank_outlinks
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (1, 3), (3, 1), (4, 1)], "src long, dst long")
+    outlinks = _pagerank_outlinks(edges)
+    analyzed = outlinks._jdf.queryExecution().analyzed().toString()
+    assert "ResolvedHint" not in analyzed
+    assert "broadcast" not in analyzed.lower()
+    assert sorted(tuple(r) for r in outlinks.collect()) == [
+        (1, 2, 2), (1, 3, 2), (2, 1, 1), (3, 1, 1), (4, 1, 1)]
+
+
 def test_upsert_snapshot_latest_wins_and_deletes(spark):
     from golem_spark.operators.relational import upsert_snapshot
 

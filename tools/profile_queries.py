@@ -3,8 +3,11 @@
 For each named query (default: the TOP-N slowest from a bench archive):
 run it once to warm caches/codegen, then measure a steady rep inside
 its own job group, recording wall seconds, Spark JOB COUNT (the
-scheduling-overhead proxy the tall-n audits use), and the
-``explain("formatted")`` physical plan, written to
+scheduling-overhead proxy the tall-n audits use), the classes Janino
+compiled during the steady reps (``codegen_compiles``: 0 when every
+generated class of the warm rep was reused, so a nonzero count is
+per-call codegen churn, such as a plan literal that changes between
+calls), and the ``explain("formatted")`` physical plan, written to
 ``plans/<tag>/<name>_<suffix>.txt`` so plan claims in
 OPTIMIZATION_r*.md are checkable without running Spark.
 
@@ -28,7 +31,7 @@ import time
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod
-from golem_spark.session import get_spark
+from golem_spark.session import codegen_compile_count, get_spark
 
 
 def main() -> None:
@@ -77,6 +80,7 @@ def main() -> None:
         fn(spark, sf_dir).count()  # warm rep (codegen, shared caches)
         times = []
         jobs_ct = None
+        c0 = codegen_compile_count(spark)
         for r in range(reps):
             group = f"prof_{name}_{r}"
             sc.setJobGroup(group, name)
@@ -87,6 +91,7 @@ def main() -> None:
             sc.setJobGroup(None, None)
             times.append(round(dt, 4))
             jobs_ct = len(sc.statusTracker().getJobIdsForGroup(group))
+        compiles = codegen_compile_count(spark) - c0
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"))
@@ -98,9 +103,10 @@ def main() -> None:
                    ("BatchEvalPython", "ArrowEvalPython", "MapInArrow",
                     "MapInPandas", "FlatMapGroupsInPandas"))
         out[name] = {"sec": min(times), "all_sec": times, "jobs": jobs_ct,
+                     "codegen_compiles": compiles,
                      "exchanges": n_exch, "python_nodes": n_py}
         print(f"{name}: {min(times):.3f}s jobs={jobs_ct} "
-              f"exchanges={n_exch} py_nodes={n_py}")
+              f"compiles={compiles} exchanges={n_exch} py_nodes={n_py}")
 
     json_path = opts.get("json")
     if json_path:
