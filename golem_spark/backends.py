@@ -659,17 +659,12 @@ def _bounded_partials_src(df: DataFrame, out_len: int,
     the py4j collect path handles badly (measured 7-52 s, high variance,
     vs 1.4-3 s after coalescing to ~40 MB). Coalesce is a narrow
     dependency, so the map work itself runs in the merged tasks — fine
-    here because per-batch CPU is small next to the transfer. At real
-    cluster scale (1000 executors) the equivalent fix is a two-stage
-    tree reduce (full-parallel map, then a repartition-sum stage);
-    locally the extra shuffle measured slower than coalesce, so we keep
-    the simple form and bound ingress to ~40 MB."""
+    here because per-batch CPU is small next to the transfer. A
+    two-stage tree reduce (full-parallel map, then a repartition-sum
+    stage) measured slower than coalesce locally, because of its extra
+    shuffle, so ingress is bounded to ~40 MB this simple way."""
     part_bytes = out_len * 8
     if part_bytes <= (1 << 20):
-        return df
-    if _tree_reduce_enabled():
-        # the merge stage (_merge_partials_stage) bounds ingress
-        # instead; keep the map at full parallelism
         return df
     if not cached_n_parts:
         cached_n_parts.append(df.rdd.getNumPartitions())
@@ -678,59 +673,18 @@ def _bounded_partials_src(df: DataFrame, out_len: int,
     return df.coalesce(fanin) if fanin < n_in else df
 
 
-def _tree_reduce_enabled() -> bool:
-    """GOLEM_SPARK_TREE_REDUCE=1 selects the cluster-scale partial
-    merge: full-parallel map stage, then a repartition-sum stage so
-    the driver ingests O(fanout) rows regardless of executor count —
-    the 1000-executor form of the ingress bound. Off by default
-    locally, where the extra shuffle measured slower than coalesce."""
-    import os
-
-    return os.environ.get("GOLEM_SPARK_TREE_REDUCE", "") == "1"
-
-
-def _merge_partials_stage(parts_df: DataFrame, out_len: int,
-                          fanout: int = 4) -> DataFrame:
-    """Executor-side partial merge: redistribute the partial rows over
-    ``fanout`` reducers and sum there, so driver ingress is ``fanout``
-    rows of out_len doubles however many map tasks ran."""
-    import pyarrow as pa
-
-    def op(batches):
-        total = None
-        for rb in batches:
-            flat = rb.column(0).flatten().to_numpy(zero_copy_only=False)
-            if flat.size:
-                s = flat.reshape(-1, out_len).sum(axis=0)
-                total = s if total is None else total + s
-        if total is not None:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([total], type=pa.list_(pa.float64()))], ["part"])
-
-    return parts_df.repartition(fanout).mapInArrow(op, "part array<double>")
-
-
 def _collect_partials(df: DataFrame, out_len: int) -> np.ndarray:
     """Sum array<double> partial rows on the driver WITHOUT collect()'s
     per-element Python float materialization: Arrow transfer keeps the
     values in one contiguous buffer (a p^2-sized Gram partial from 30
-    partitions is ~20M doubles — Row conversion alone costs seconds)."""
-    if _tree_reduce_enabled() and out_len * 8 > (1 << 20):
-        df = _merge_partials_stage(df, out_len)
+    partitions is ~20M doubles — Row conversion alone costs seconds).
+    A failing pass raises after its one job; nothing re-runs it."""
     total = np.zeros(out_len)
-    try:
-        tbl = df.toArrow()
-        col = tbl.column("part")
-        for chunk in col.chunks if hasattr(col, "chunks") else [col]:
-            flat = chunk.flatten().to_numpy(zero_copy_only=False)
-            if flat.size:
-                total += flat.reshape(-1, out_len).sum(axis=0)
-        return total
-    except Exception:
-        total = np.zeros(out_len)  # discard any partially-summed chunks
-        for r in df.collect():
-            total += np.asarray(r["part"])
-        return total
+    for chunk in df.toArrow().column("part").chunks:
+        flat = chunk.flatten().to_numpy(zero_copy_only=False)
+        if flat.size:
+            total += flat.reshape(-1, out_len).sum(axis=0)
+    return total
 
 
 class ArrowSparkBackend(SparkBackend):

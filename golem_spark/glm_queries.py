@@ -712,38 +712,14 @@ def _wide_sparse_frame(li, fam):
 # and four.
 # ---------------------------------------------------------------------------
 
-_WIDE_CTX: dict[str, dict] = {}
-_WIDE_CTX_LOCK = __import__("threading").Lock()
-
-
 def _wide_shared_context(spark, sf_dir: str) -> dict:
-    import math
+    from golem_spark.session import session_cached
 
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from golem_spark.backends import SparseArrowBackend, _apply_scale_guard
-    from golem_spark.families import get_family
-    from golem_spark.session import load_tables
-
-    cache_key = (id(spark), sf_dir)
-    ctx = _WIDE_CTX.get(cache_key)
-    if ctx is not None:
-        return ctx
-    # serialize the build: two concurrent first-callers (verify_oracle
-    # --jobs) would otherwise EACH build and persist an encoded frame,
-    # and the loser's stays pinned for the session lifetime
-    _WIDE_CTX_LOCK.acquire()
-    try:
-        ctx = _WIDE_CTX.get(cache_key)
-        if ctx is not None:
-            return ctx
-        return _build_wide_shared_context(spark, sf_dir, cache_key)
-    finally:
-        _WIDE_CTX_LOCK.release()
+    return session_cached(spark, (sf_dir, "wide_ctx"),
+                          lambda: _build_wide_shared_context(spark, sf_dir))
 
 
-def _build_wide_shared_context(spark, sf_dir: str, cache_key) -> dict:
+def _build_wide_shared_context(spark, sf_dir: str) -> dict:
     import math
 
     import numpy as np
@@ -953,9 +929,7 @@ def _build_wide_shared_context(spark, sf_dir: str, cache_key) -> dict:
     metas["multinomial"] = meta_for("multinomial", [str(c) for c in cls_m],
                                     n_tgt, np.zeros(n_tgt))
 
-    ctx = {"backends": backends, "metas": metas, "gram_cache": {}}
-    _WIDE_CTX[cache_key] = ctx
-    return ctx
+    return {"backends": backends, "metas": metas, "gram_cache": {}}
 
 
 def _wide_warm_start(fam: str, m: int, n: int, p: int | None = None,
@@ -1506,55 +1480,17 @@ CV_SPECS: dict[str, dict] = {
     },
 }
 
-# kept for backward reference by tools: the gaussian spec
-CV_SPEC = CV_SPECS["gaussian"]
-
-
-# Shared CV source (VERDICT r10 item 7 A/B): the four glm_cv_* queries
-# plus the three frozen-model scoring queries all read the same 7
-# lineitem columns, and every CV cell fit re-scans them once per solver
-# iteration. Variant A projects ONCE to the union of needed columns and
-# persists, so all ~40 downstream jobs scan memory instead of parquet —
-# the _WIDE_CTX pattern applied to the CV cells. A/B at sf0.1 on the
-# quiet protocol (BENCH_NOTES_r11): shared LOST — 23.61 s vs 22.58 s
-# steady-min, 39.6 s vs 32.1 s cold — the columnar parquet scan of 7
-# pruned columns is already page-cached at this size, so the persist's
-# materialization pass never pays back (the r5 crossover lesson:
-# adopt only on a measured win). Default OFF; SPARK_GRAFT_CV_SHARED=1
-# opts in for deployments where the source scan is genuinely remote
-# (cold object store), where one materialization amortizes across the
-# ~40 jobs. Correctness is mode-invariant: the projection changes no
-# row values or partitioning (gated green on all seven queries).
-_CV_SRC: dict = {}
-_CV_SRC_LOCK = __import__("threading").Lock()
-_CV_SOURCE_COLS = ("l_orderkey", "l_quantity", "l_extendedprice",
-                   "l_discount", "l_tax", "l_returnflag", "l_linestatus")
-
-
-def _cv_shared_enabled() -> bool:
-    import os
-
-    return os.environ.get("SPARK_GRAFT_CV_SHARED", "0") == "1"
-
-
 def _cv_source(spark, sf_dir: str, fam: str):
+    """Lineitem as the CV and scoring queries read it: the parquet scan,
+    unpersisted, plus the binomial ``is_r`` label. Not persisted: a
+    shared persisted projection measured slower (BENCH_NOTES_r11; the
+    pruned 7-column scan is already page-cached, so the persist's
+    materialization pass never pays back)."""
     from pyspark.sql import functions as F
 
     from golem_spark.session import load_tables
 
-    if _cv_shared_enabled():
-        key = (id(spark), sf_dir)
-        li = _CV_SRC.get(key)
-        if li is None:
-            with _CV_SRC_LOCK:
-                li = _CV_SRC.get(key)
-                if li is None:
-                    li = (load_tables(spark, sf_dir)["lineitem"]
-                          .select(*_CV_SOURCE_COLS).persist())
-                    li.count()
-                    _CV_SRC[key] = li
-    else:
-        li = load_tables(spark, sf_dir)["lineitem"]
+    li = load_tables(spark, sf_dir)["lineitem"]
     if fam == "binomial":
         li = li.withColumn(
             "is_r", F.when(F.col("l_returnflag") == "R", "R").otherwise("other"))
@@ -1616,8 +1552,8 @@ def _cv_cells(spark, sf_dir: str, fam: str = "gaussian", warm: bool = True):
     li = _cv_source(spark, sf_dir, fam)
     by_cell, full_bi = (None, None)
     if warm:
-        # the shared source is persisted with a materialized count, so
-        # this is metadata-cheap; frozen goldens are keyed by row count
+        # frozen goldens are keyed by row count: one parquet count()
+        # over the unpersisted source
         by_cell, full_bi = _cv_warm_starts(fam, li.count(),
                                            sp.get("m", 1),
                                            len(sp["sigmas"]))

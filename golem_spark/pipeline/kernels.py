@@ -13,7 +13,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from golem_spark.session import load_tables
+from golem_spark.session import load_tables, session_cached
 from golem_spark.operators import graph, relational
 from golem_spark.pipeline import dedup, similarity, text
 
@@ -53,38 +53,20 @@ def _add(name: str, fn, duck_sql: str | None):
 # cluster stats) derives from ONE MinHash-signature/LSH-pair
 # computation; recomputing signatures per query repeats the corpus
 # tokenize+hash four times in a bench session. Cache the small pairs /
-# components frames per sf_dir — values are identical (persist changes
-# nothing), each query stays independently runnable, and at 100 TB this
-# is the difference between one signature scan and four.
-_DEDUP_SHARED: dict = {}
-# reentrant: _components_cached builds THROUGH _minhash_pairs_cached.
-# Serializing first-builds means two concurrent callers (verify_oracle
-# --jobs) share one persisted frame instead of each persisting its own
-# (identical values, but the loser's frame would stay pinned for the
-# session lifetime).
-_DEDUP_LOCK = __import__("threading").RLock()
-
-
+# components frames per session and sf_dir — values are identical
+# (persist changes nothing), each query stays independently runnable,
+# and at 100 TB this is the difference between one signature scan and
+# four.
 def _minhash_pairs_cached(spark, sf_dir: str):
-    # keyed by session identity too: a harness that recreates sessions
-    # in one process must not see frames from a stopped session
-    key = (id(spark), sf_dir, "pairs")
-    if key not in _DEDUP_SHARED:
-        with _DEDUP_LOCK:
-            if key not in _DEDUP_SHARED:
-                docs = load_tables(spark, sf_dir)["documents"]
-                _DEDUP_SHARED[key] = dedup.minhash_lsh_pairs(docs).persist()
-    return _DEDUP_SHARED[key]
+    return session_cached(spark, (sf_dir, "minhash_pairs"), lambda: (
+        dedup.minhash_lsh_pairs(load_tables(spark, sf_dir)["documents"])
+        .persist()))
 
 
 def _components_cached(spark, sf_dir: str):
-    key = (id(spark), sf_dir, "comp")
-    if key not in _DEDUP_SHARED:
-        with _DEDUP_LOCK:
-            if key not in _DEDUP_SHARED:
-                _DEDUP_SHARED[key] = dedup.dup_components(
-                    _minhash_pairs_cached(spark, sf_dir)).persist()
-    return _DEDUP_SHARED[key]
+    return session_cached(spark, (sf_dir, "dup_components"), lambda: (
+        dedup.dup_components(_minhash_pairs_cached(spark, sf_dir))
+        .persist()))
 
 
 # -- text analysis ----------------------------------------------------------

@@ -20,6 +20,7 @@ cost no measurable JVM Metaspace (CHANGES.md records the numbers).
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -97,7 +98,34 @@ TABLES = (
 )
 
 
-_REGISTERED: dict[tuple[int, str], dict] = {}
+_SESSION_CACHE: dict[tuple, object] = {}
+_SESSION_CACHE_LOCK = threading.RLock()
+
+
+def session_cached(spark: SparkSession, key: tuple, build):
+    """The value ``build()`` returns, built once per session and ``key``.
+
+    The one place a per-session derived frame (registered tables, the
+    shared wide GLM context, the MinHash pair and component frames) is
+    cached. Entries are keyed by ``(id(spark),) + key``, so a process
+    that builds a second session never sees the first one's frames;
+    ``key`` must name everything else the value depends on (the sf_dir
+    and which frame). A hit is a lock-free dict read. A miss builds
+    under one process-wide reentrant lock with a second lookup, so two
+    concurrent first callers (verify_oracle --jobs) share one build
+    instead of each persisting a frame that would stay pinned for the
+    session lifetime. Reentrant, because a build may call the helper
+    again (the components frame builds from the pairs frame, the wide
+    context calls load_tables); a build must not start threads that
+    call back into it."""
+    full_key = (id(spark),) + key
+    value = _SESSION_CACHE.get(full_key)
+    if value is None:
+        with _SESSION_CACHE_LOCK:
+            value = _SESSION_CACHE.get(full_key)
+            if value is None:
+                value = _SESSION_CACHE[full_key] = build()
+    return value
 
 
 def load_tables(spark: SparkSession, sf_dir: str, register_views: bool = True):
@@ -105,11 +133,16 @@ def load_tables(spark: SparkSession, sf_dir: str, register_views: bool = True):
 
     Parquet scans get predicate pushdown + column pruning from Catalyst for
     free; callers should select only needed columns so ReadSchema stays
-    narrow.
+    narrow. With ``register_views`` the tables are also registered as temp
+    views, once per session and sf_dir.
     """
-    cache_key = (id(spark), sf_dir)
-    if register_views and cache_key in _REGISTERED:
-        return _REGISTERED[cache_key]
+    if register_views:
+        return session_cached(spark, (sf_dir, "tables"),
+                              lambda: _read_tables(spark, sf_dir, True))
+    return _read_tables(spark, sf_dir, False)
+
+
+def _read_tables(spark: SparkSession, sf_dir: str, register_views: bool):
     # the caller may hand us a session built without our factory (the
     # driver's verify does); the nanos conf is runtime-settable
     try:
@@ -131,6 +164,4 @@ def load_tables(spark: SparkSession, sf_dir: str, register_views: bool = True):
         dfs[name] = df
         if register_views:
             df.createOrReplaceTempView(name)
-    if register_views:
-        _REGISTERED[cache_key] = dfs
     return dfs

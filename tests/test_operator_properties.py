@@ -151,6 +151,24 @@ def test_triangle_half_fast_path_identical(spark):
     assert n_e == n_h
 
 
+def test_triangle_half_contract_checked_under_debug_switch(spark,
+                                                           monkeypatch):
+    """GOLEM_SPARK_DEBUG_CHECKS=1 makes a half= frame that breaks the
+    strict src < dst contract (here a symmetric one, every edge in both
+    directions) raise instead of silently double-counting wedges."""
+    import pandas as pd
+    import pytest
+
+    from golem_spark.operators.graph import triangle_count
+
+    tri = [(0, 1), (1, 2), (0, 2)]
+    sym = spark.createDataFrame(pd.DataFrame(
+        tri + [(b, a) for a, b in tri], columns=["src", "dst"]))
+    monkeypatch.setenv("GOLEM_SPARK_DEBUG_CHECKS", "1")
+    with pytest.raises(ValueError, match="3 rows with src >= dst"):
+        triangle_count(half=sym).collect()
+
+
 def test_triangle_wedges_bounded_at_hub(spark):
     """Degree-rank edge orientation must neutralize a hub: a 200-spoke
     star whose hub id sits MID-RANGE (the worst case for plain

@@ -149,9 +149,9 @@ def test_shared_caches_survive_concurrent_verifiers(spark):
 
     qs = entry.queries()
     sf = "/root/testdata/sf0.001"
-    # covers all three cross-thread shared caches: kernels._DEDUP_SHARED
-    # (p08 pairs / p92 components), glm_queries._WIDE_CTX (wide stats +
-    # encoded frame + gram_cache)
+    # covers every session_cached frame: the MinHash pairs / components
+    # (p08 / p92) and the wide GLM context (wide stats + encoded frame +
+    # gram_cache)
     names = ["p08_minhash_lsh_pairs", "p92_dup_cluster_stats",
              "glm_gaussian_wide_sparse", "glm_poisson_wide_sparse"]
 
@@ -172,6 +172,55 @@ def test_shared_caches_survive_concurrent_verifiers(spark):
         assert run(n) == a, f"serial re-run of {n} disagrees"
     assert jsc.getPersistentRDDs().size() <= baseline, \
         "serial re-run after concurrent warm-up persisted new frames"
+
+
+def test_session_cached_builds_each_key_once_under_contention():
+    """session_cached under more threads than cores and a shortened
+    switch interval: every key is built exactly once and every caller
+    gets that one value; a build that calls the helper again (the
+    components-from-pairs shape) does not deadlock; another session
+    object gets its own build."""
+    import sys
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from golem_spark.session import session_cached
+
+    session, other = object(), object()
+    builds = []
+
+    def build(tag):
+        builds.append(tag)
+        time.sleep(0.01)  # widen the check-then-build window
+        return [tag]
+
+    def outer():
+        inner = session_cached(session, ("stress", "inner"),
+                               lambda: build("inner"))
+        return build("outer") + inner
+
+    def call(i):
+        if i % 2:
+            return session_cached(session, ("stress", "outer"), outer)
+        return session_cached(session, ("stress", "inner"),
+                              lambda: build("inner"))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            futs = [pool.submit(call, i) for i in range(64)]
+            got = [f.result(timeout=60) for f in futs]
+    finally:
+        sys.setswitchinterval(old)
+    assert sorted(builds) == ["inner", "outer"], builds
+    assert len({id(v) for v in got[0::2]}) == 1
+    assert len({id(v) for v in got[1::2]}) == 1
+    assert got[1] == ["outer", "inner"]
+
+    mine = session_cached(session, ("stress", "inner"), lambda: ["rebuilt"])
+    theirs = session_cached(other, ("stress", "inner"), lambda: ["rebuilt"])
+    assert mine == ["inner"] and theirs == ["rebuilt"]
 
 
 def test_lsh_bucket_skew_bounded_on_adversarial_corpus(spark):
@@ -401,6 +450,38 @@ def test_gate_refuses_disabled_glm_certificates(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_GLM_CERTIFICATES", raising=False)
     mod.require_certificates()
     assert os.environ["SPARK_GRAFT_GLM_CERTIFICATES"] == "1"
+
+
+def test_library_reads_only_the_known_env_switches():
+    """Every environment variable golem_spark reads is one of these
+    four. A new switch must be added here on purpose, with a test that
+    turns it on: a default-off switch that no test or benchmark sets
+    is an untested code path."""
+    import ast
+    import pathlib
+
+    def env_name(node):
+        # os.environ.get("X"...), os.getenv("X"...), os.environ["X"]
+        if (isinstance(node, ast.Call) and node.args and ast.unparse(
+                node.func) in ("os.environ.get", "os.getenv")):
+            return node.args[0]
+        if (isinstance(node, ast.Subscript)
+                and ast.unparse(node.value) == "os.environ"):
+            return node.slice
+        return None
+
+    names = set()
+    root = pathlib.Path(__file__).resolve().parent.parent / "golem_spark"
+    for path in root.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            arg = env_name(node)
+            if arg is not None:
+                assert isinstance(arg, ast.Constant), \
+                    f"{path}: env var name is not a literal"
+                names.add(arg.value)
+    assert names == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM",
+                     "SPARK_GRAFT_GLM_CERTIFICATES",
+                     "GOLEM_SPARK_DEBUG_CHECKS"}
 
 
 def test_two_level_semdedup_subdivides_hot_cells(spark):

@@ -342,28 +342,3 @@ def test_sparse_ultrawide_local_equals_spark(spark):
                                rtol=1e-6, atol=1e-8)
     # the path actually selects features at this width
     assert (np.abs(fl.coefficients[1:, :, K - 1]) > 0).sum() > 0
-
-
-def test_tree_reduce_partials_matches_default(spark, monkeypatch):
-    """GOLEM_SPARK_TREE_REDUCE=1 (the 1000-executor ingress bound:
-    full-parallel map + repartition-sum merge stage) must produce the
-    same fits as the local coalesce bound — only the partial summation
-    grouping differs."""
-    import os
-
-    rng = np.random.default_rng(55)
-    n, p, nnz = 600, 400, 8
-    idx = [sorted(rng.choice(p, size=nnz, replace=False).tolist())
-           for _ in range(n)]
-    val = [rng.uniform(0.5, 2.0, size=nnz).tolist() for _ in range(n)]
-    y = [float(sum(v for v in vv)) + float(rng.normal(0, 0.1))
-         for vv in val]
-    df = spark.createDataFrame(pd.DataFrame({"idx": idx, "val": val,
-                                             "label": y})).repartition(8)
-    base = owl(df=df, sparse_features=("idx", "val"), sparse_p=p,
-               label_col="label", family="gaussian", n_sigma=3)
-    monkeypatch.setenv("GOLEM_SPARK_TREE_REDUCE", "1")
-    tree = owl(df=df, sparse_features=("idx", "val"), sparse_p=p,
-               label_col="label", family="gaussian", sigma=base.sigma)
-    np.testing.assert_allclose(tree.coefficients, base.coefficients,
-                               rtol=1e-7, atol=1e-9)

@@ -68,55 +68,50 @@ def test_wide_p_fit_matches_local(spark, family, response):
                                dist.coefficients[:, :, :K], atol=5e-3)
 
 
-def test_tree_reduce_collect_partials_bitwise(spark, monkeypatch):
-    """GOLEM_SPARK_TREE_REDUCE=1 selects the cluster-scale partial merge
-    (full-parallel map + repartition-sum stage, driver ingress O(fanout)
-    rows). This exercises the merge stage FOR SURE — out_len crosses the
-    1 MiB engage threshold — and the values are integer-valued doubles,
-    so tree-grouped and direct summation are BITWISE equal (exact in
-    float64 up to 2^53; no rounding-order escape hatch)."""
-    import pandas as pd
+def test_tree_reduce_collect_partials_bitwise(spark):
+    """_collect_partials sums the partial rows exactly, at partial rows
+    above 1 MiB (the Gram-sized partials _bounded_partials_src
+    coalesces). The values are integer-valued doubles, so the sum is
+    BITWISE exact in float64 (up to 2^53), whatever the chunk order."""
+    from golem_spark.backends import _collect_partials
 
-    from golem_spark.backends import (_collect_partials,
-                                      _merge_partials_stage)
-
-    out_len = 140_000  # > (1 << 20) / 8 -> merge stage engages
+    out_len = 140_000  # > (1 << 20) / 8
     n_parts = 12
     rows = [np.arange(out_len, dtype=np.float64) % 97 + i
             for i in range(n_parts)]
     expected = np.sum(rows, axis=0)
     df = spark.createDataFrame(
         pd.DataFrame({"part": [r.tolist() for r in rows]})).repartition(6)
-
-    monkeypatch.delenv("GOLEM_SPARK_TREE_REDUCE", raising=False)
-    direct = _collect_partials(df, out_len)
-    monkeypatch.setenv("GOLEM_SPARK_TREE_REDUCE", "1")
-    tree = _collect_partials(df, out_len)
-    # merge stage really ran: the staged frame collapses to <= fanout rows
-    assert _merge_partials_stage(df, out_len).count() <= 4
-
-    assert np.array_equal(direct, expected)
-    assert np.array_equal(tree, expected)
-    assert np.array_equal(tree, direct)
+    assert np.array_equal(_collect_partials(df, out_len), expected)
 
 
-def test_wide_p_fit_matches_under_tree_reduce(spark, monkeypatch):
-    """Fit-level metamorphic twin of the unit check above: the wide-p
-    Arrow DENSE backend path (p=250 routes to ArrowSparkBackend) under
-    GOLEM_SPARK_TREE_REDUCE=1 reproduces the default fit. (The sparse
-    twin lives in test_sparse_backend.py::
-    test_tree_reduce_partials_matches_default.)"""
-    x, y, _ = random_problem(n=260, p=250, q=0.01, seed=64)
-    df, feats = _to_spark(spark, x, y)
-    monkeypatch.delenv("GOLEM_SPARK_TREE_REDUCE", raising=False)
-    base = owl(df=df, feature_cols=feats, label_col="label",
-               family="gaussian", n_sigma=3, lambda_min_ratio=1e-1)
-    monkeypatch.setenv("GOLEM_SPARK_TREE_REDUCE", "1")
-    tree = owl(df=df, feature_cols=feats, label_col="label",
-               family="gaussian", sigma=base.sigma,
-               lambda_min_ratio=1e-1)
-    np.testing.assert_allclose(tree.coefficients, base.coefficients,
-                               rtol=1e-7, atol=1e-9)
+def test_collect_partials_fails_after_one_job(spark):
+    """A failing partials pass raises after exactly one failed job: the
+    error is not answered by re-running the whole lineage through a
+    second collect path."""
+    import uuid
+
+    from golem_spark.backends import _collect_partials
+
+    def boom(batches):
+        for _ in batches:
+            raise RuntimeError("partials closure failed")
+        yield from ()
+
+    df = spark.range(4, numPartitions=2).mapInArrow(boom,
+                                                    "part array<double>")
+    sc = spark.sparkContext
+    group = f"collect_partials_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "failing partials pass")
+    try:
+        with pytest.raises(Exception, match="partials closure failed"):
+            _collect_partials(df, 3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1, jobs
+    assert tracker.getJobInfo(jobs[0]).status == "FAILED"
 
 
 def test_wide_p_uses_arrow_backend(spark):
