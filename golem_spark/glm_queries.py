@@ -330,7 +330,10 @@ def _path_warm_start(fam: str, m: int, n: int):
     sufficient statistics (constant distributed passes, nothing to
     save) and ADMM's residual stop leaves enough slack that a warm
     iterate can land outside the 1e-6 coefficient-golden rounding
-    (measured on the CV cells). tools/freeze_glm.py fits these paths
+    (measured on the CV cells; starting the warm solve from the
+    consistent dual, owl()'s u=None first solve, still gave 1.817922
+    against the golden 1.817914 on glm_cv_gaussian at sf0.01).
+    tools/freeze_glm.py fits these paths
     cold via its own owl() calls, so re-freezing stays non-circular."""
     import numpy as np
 
@@ -940,7 +943,11 @@ def _wide_warm_start(fam: str, m: int, n: int, p: int | None = None,
     same tightened stopping criteria and the KKT band is still checked
     at the fit's own solution from raw data — the golden only replaces
     the cold/predecessor start, so the tightened gap costs polish
-    iterations instead of a full solve. tools/freeze_glm.py does NOT
+    iterations instead of a full solve. Gaussian (ADMM on the Gram)
+    starts each point from the dual consistent with the golden z and
+    converges in 1 iteration per point at sf0.01, with no O(p^3)
+    inverse; from the carried dual it took 1,462 and 132 iterations
+    and seven inverses. tools/freeze_glm.py does NOT
     go through this path (it fits the standalone frames cold), so
     re-freezing stays non-circular."""
     import numpy as np
@@ -1524,7 +1531,10 @@ def _cv_warm_starts(fam: str, n: int, m: int, n_sigma: int):
         # iterate lands measurably (~1e-4) away from the cold-frozen
         # coefficient goldens. Measured (r13): warm gaussian CV broke
         # the 1e-6 golden rounding at sf0.01 with zero wall-clock to
-        # gain. Stays cold.
+        # gain. Starting each warm cell from the dual consistent with
+        # its golden z (owl()'s u=None first solve) does not close the
+        # gap: 1.817922 against the golden 1.817914 at sf0.01. Stays
+        # cold.
         return None, None
     frz = GLM_CV_FROZEN_BY_N.get(int(n), {}).get(fam)
     if not frz:

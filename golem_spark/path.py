@@ -401,11 +401,17 @@ def owl(x=None, y=None, *, df=None, feature_cols=None, label_col=None,
     ever_active = np.array([0], dtype=np.int64) if intercept else np.array([], dtype=np.int64)
     z = np.zeros((p_total, m))
     u = np.zeros((p_total, m))
+    # True while z was just reset from beta_init and no solve has run
+    # from it: the next ADMM solve derives its dual from z (u=None)
+    dual_from_z = False
     if beta_init is not None and use_admm:
-        # ADMM consensus warm start: at the optimum z == beta, so a
-        # cold z under a warm beta would throw the first iterations
-        # away re-deriving it
+        # ADMM consensus warm start: at the optimum z == beta and
+        # rho * u == X'y - G beta, so a cold z (or a dual carried from
+        # elsewhere) under a warm beta would throw the first iterations
+        # away re-deriving them; the first solve takes the dual
+        # consistent with z
         z = beta_prev.copy()
+        dual_from_z = True
     screening_on = bool(screening)
     full_admm_state: dict[str, Any] = {}
     pn_caches: dict[tuple, dict] = {}  # (subset, lam_max) -> factorization
@@ -424,7 +430,7 @@ def owl(x=None, y=None, *, df=None, feature_cols=None, label_col=None,
     def fit_subset(sub_idx: np.ndarray, lam_k: np.ndarray, start_beta: np.ndarray,
                    init_eval: tuple | None = None) -> SolverResult:
         """Fit on the rows in sub_idx (full space indices)."""
-        nonlocal z, u
+        nonlocal z, u, dual_from_z
         if use_admm:
             gram_s = gram_full[np.ix_(sub_idx, sub_idx)]
             xty_s = xty_full[sub_idx]
@@ -439,8 +445,10 @@ def owl(x=None, y=None, *, df=None, feature_cols=None, label_col=None,
                 lmx = float(lam_k.max()) if lam_k.size else 0.0
                 rho = max((e ** (1.0 / 3.0)) * (lmx ** (2.0 / 3.0))
                           if lmx > 0 else max(e, 1.0), 1e-12)
+            u_in = None if dual_from_z else u[sub_idx]
+            dual_from_z = False
             res, z_s, u_s, _ = admm_gaussian(
-                gram_s, xty_s, start_beta[sub_idx], z[sub_idx], u[sub_idx],
+                gram_s, xty_s, start_beta[sub_idx], z[sub_idx], u_in,
                 lam_k, n=n, intercept=intercept, rho=rho,
                 max_passes=max_passes,
                 tol_abs=tol_abs, tol_rel=tol_rel, diagnostics=diagnostics)
@@ -596,6 +604,7 @@ def owl(x=None, y=None, *, df=None, feature_cols=None, label_col=None,
             beta_prev = warm_points[:, :, k].copy()
             if use_admm:
                 z = beta_prev.copy()
+                dual_from_z = True
         if (warm_prefetch is not None and k < len(warm_prefetch)
                 and np.array_equal(beta_prev, warm_points[:, :, k])):
             # this point's first evaluation came from the fused pass

@@ -475,7 +475,7 @@ def prox_newton(backend, beta: np.ndarray, lam: np.ndarray, *,
 
 
 def admm_gaussian(gram: np.ndarray, xty: np.ndarray, beta: np.ndarray,
-                  z: np.ndarray, u: np.ndarray, lam: np.ndarray, *,
+                  z: np.ndarray, u: np.ndarray | None, lam: np.ndarray, *,
                   n: int, intercept: bool, rho: float | None = None,
                   max_passes: int = 10**6, tol_abs: float = 1e-5,
                   tol_rel: float = 1e-4, alpha: float = 1.5,
@@ -489,6 +489,19 @@ def admm_gaussian(gram: np.ndarray, xty: np.ndarray, beta: np.ndarray,
     sorted-L1 prox couples all p·m penalized entries (column-major, like
     the reference's vectorized cube slice). z, u: warm-started ADMM state
     (p, m). Returns (result, z, u, rho).
+
+    ``u=None`` means "the scaled dual consistent with z": u = (xty -
+    gram @ z) / rho at this call's own rho, the value u takes at the
+    optimum (Boyd et al. 2011, sec 3.3). The first beta-step's right-hand
+    side is then (gram + rho I) z, so its solution is z itself and is
+    taken without a solve; a z that is already optimal converges in
+    one iteration. Callers pass it only when z was just reset from a
+    warm start, never for a carried (z, u) pair.
+
+    gram + rho I is inverted lazily: at the first beta-step that needs
+    it and, after a residual-balancing rho change, only once another
+    beta-step needs it. A call with an explicit u inverts at the same
+    rho before the same first use, so its trajectory is unchanged.
 
     rho heuristic: eig_max(gram)^(1/3) * lam_max^(2/3)
     (reference src/owl.cpp:190-192).
@@ -505,13 +518,18 @@ def admm_gaussian(gram: np.ndarray, xty: np.ndarray, beta: np.ndarray,
         eig_max = float(np.linalg.eigvalsh(gram).max())
         rho = (eig_max ** (1.0 / 3.0)) * (float(lam.max()) ** (2.0 / 3.0)) if lam.size else max(eig_max, 1.0)
         rho = max(rho, 1e-12)
-    # one O(p^3) factorization; every iteration is then one O(p^2)
-    # matmul (an np.linalg.solve per iteration would redo LU each time)
-    Hinv = np.linalg.inv(gram + rho * np.eye(p))
+    # one O(p^3) factorization per rho, made on first use; every
+    # iteration is then one O(p^2) matmul (an np.linalg.solve per
+    # iteration would redo LU each time)
+    Hinv = None
 
     beta = np.asarray(beta, dtype=np.float64).reshape(p, m).copy()
     z = np.asarray(z, dtype=np.float64).reshape(p, m).copy()
-    u = np.asarray(u, dtype=np.float64).reshape(p, m).copy()
+    consistent_u = u is None
+    if consistent_u:
+        u = (xty - gram @ z) / rho
+    else:
+        u = np.asarray(u, dtype=np.float64).reshape(p, m).copy()
 
     primals: list[float] = []
     duals: list[float] = []
@@ -526,8 +544,12 @@ def admm_gaussian(gram: np.ndarray, xty: np.ndarray, beta: np.ndarray,
     passes = 0
     while passes < max_passes:
         passes += 1
-        q = xty + rho * (z - u)
-        beta = Hinv @ q
+        if consistent_u and passes == 1:
+            beta = z.copy()  # solves (gram + rho I) beta = (gram + rho I) z
+        else:
+            if Hinv is None:
+                Hinv = np.linalg.inv(gram + rho * np.eye(p))
+            beta = Hinv @ (xty + rho * (z - u))
 
         z_old = z
         beta_hat = alpha * beta + (1 - alpha) * z_old
@@ -560,7 +582,7 @@ def admm_gaussian(gram: np.ndarray, xty: np.ndarray, beta: np.ndarray,
             if rho_new != rho:
                 u *= rho / rho_new  # scaled dual rescales with rho
                 rho = rho_new
-                Hinv = np.linalg.inv(gram + rho * np.eye(p))
+                Hinv = None
                 n_rho += 1
 
     res = SolverResult(z.copy(), passes, primals, duals, times, 0.0)

@@ -175,3 +175,79 @@ def test_warm_start_fixed_point_unchanged():
               **tight)
     np.testing.assert_allclose(rec.coefficients, cold.coefficients,
                                atol=1e-6)
+
+
+def test_warm_point_polishes_in_one_pass(monkeypatch):
+    """A path point warm-started from its own optimum starts ADMM from
+    the dual consistent with that z, so it converges in one iteration
+    and never inverts gram + rho I. p > 48 keeps residual balancing
+    and the power-iteration rho active."""
+    x, y, _ = random_problem(n=400, p=120, seed=7)
+    sigmas = [0.3, 0.1, 0.03]
+    tight = {"tol_abs": 1e-10, "tol_rel": 1e-9}
+    cold = owl(x, y, family="gaussian", sigma=sigmas, **tight)
+    assert all(pk > 1 for pk in cold.passes), cold.passes
+
+    inv_calls = []
+    real_inv = np.linalg.inv
+
+    def counting_inv(a):
+        inv_calls.append(a.shape)
+        return real_inv(a)
+
+    monkeypatch.setattr(np.linalg, "inv", counting_inv)
+    warm = owl(x, y, family="gaussian", sigma=sigmas,
+               beta_init=cold.coefficients, **tight)
+    assert [int(pk) for pk in warm.passes] == [1] * len(sigmas)
+    assert inv_calls == []
+    np.testing.assert_allclose(warm.coefficients, cold.coefficients,
+                               atol=1e-7)
+
+
+def test_wrong_warm_start_recovers_on_wide_problem():
+    """A dual derived from a wrong z is only a start: with residual
+    balancing active (p > 48) the fit still converges to the optimum."""
+    x, y, _ = random_problem(n=400, p=120, seed=7)
+    sigmas = [0.3, 0.1, 0.03]
+    tight = {"tol_abs": 1e-10, "tol_rel": 1e-9}
+    cold = owl(x, y, family="gaussian", sigma=sigmas, **tight)
+    bad = cold.coefficients.copy()
+    bad[1:, :, :] += 3.0  # push every penalized coef far off
+    rec = owl(x, y, family="gaussian", sigma=sigmas, beta_init=bad,
+              **tight)
+    np.testing.assert_allclose(rec.coefficients, cold.coefficients,
+                               atol=1e-6)
+    # first-point-only form: later points carry (z, u) from point 0
+    rec0 = owl(x, y, family="gaussian", sigma=sigmas,
+               beta_init=bad[:, :, 0], **tight)
+    np.testing.assert_allclose(rec0.coefficients, cold.coefficients,
+                               atol=1e-6)
+
+
+@pytest.mark.parametrize("p", [20, 120])
+def test_admm_consistent_dual_matches_explicit_dual(p):
+    """u=None is the dual (xty - gram @ z) / rho taken without the
+    first solve: same beta, z, u and pass count as passing that dual
+    explicitly, on both the fixed-rho (p <= 48) and residual-balancing
+    (p > 48) routes."""
+    from golem_spark.solvers import admm_gaussian
+
+    rng = np.random.default_rng(11)
+    x, y, _ = random_problem(n=300, p=p, seed=12)
+    x = (x - x.mean(axis=0)) / x.std(axis=0)
+    y = y - y.mean()
+    gram, xty = x.T @ x, (x.T @ y)[:, None]
+    lam = np.sort(rng.uniform(0.2, 1.0, p))[::-1] * float(
+        np.abs(xty).max())
+    z = rng.standard_normal((p, 1))
+    rho = 7.0
+    kw = {"n": x.shape[0], "intercept": False, "rho": rho,
+          "tol_abs": 1e-9, "tol_rel": 1e-8}
+    res_n, z_n, u_n, rho_n = admm_gaussian(gram, xty, z, z, None, lam, **kw)
+    res_e, z_e, u_e, rho_e = admm_gaussian(
+        gram, xty, z, z, (xty - gram @ z) / rho, lam, **kw)
+    assert res_n.passes == res_e.passes > 1
+    assert rho_n == rho_e
+    np.testing.assert_allclose(res_n.beta, res_e.beta, rtol=0, atol=1e-12)
+    np.testing.assert_allclose(z_n, z_e, rtol=0, atol=1e-12)
+    np.testing.assert_allclose(u_n, u_e, rtol=0, atol=1e-12)
