@@ -2,18 +2,24 @@
 
 The solvers (FISTA/ADMM, path loop) are backend-agnostic: per iteration
 they need a handful of scalar losses and a p×m gradient for a given
-driver-side beta. Two implementations of that contract:
+driver-side beta. One implementation per data layout and place:
 
 - ``LocalBackend``: X, Y as numpy arrays on the driver. Used when n·p fits
   in driver memory (all reference-scale fixtures) — identical operator
   contract, no cluster round-trips.
 
-- ``SparkBackend``: X, Y as columns of a cached standardized DataFrame.
-  Every quantity is ONE distributed aggregation pass built from column
-  expressions (JVM-side, whole-stage codegen, map-side partial
-  aggregation). beta enters as literals in the expressions; only p-sized
-  results come back to the driver. This is the 100 TB path: nothing
-  data-sized is ever collected.
+- ``SparkBackend``: X, Y as columns of a cached standardized DataFrame
+  — the one dense distributed backend. Every pass that carries beta is
+  ONE mapInPandas partial reduction (one local numpy compute per Arrow
+  batch, one driver-side sum of the p-sized partials), so the plan never
+  depends on beta. Only the beta-free one-shot passes stay Catalyst
+  aggregations: the builder's stats passes, the null-model mean
+  fallback and the narrow gaussian sufficient statistics. This is the
+  100 TB path: nothing data-sized is ever collected.
+
+- ``SparseArrowBackend``: the same contract over per-row (indices,
+  values) array columns, with CSR kernels in mapInArrow batches
+  (``LocalSparseBackend`` runs those kernels on driver-local arrays).
 
 Feature standardization (reference src/standardize.h:8-71) lives here too:
 center by mean, scale by l1/l2/sd/max with a zero-variance guard.
@@ -111,13 +117,6 @@ class LocalBackend:
     def subset(self, cols: np.ndarray) -> "LocalBackend":
         return LocalBackend(self.x[:, cols], self.y, self.family, self.intercept)
 
-    def weighted_gram(self, beta: np.ndarray) -> np.ndarray:
-        """X^T diag(w) X with the family's local curvature weights at
-        beta (used by the prox-Newton solver for poisson)."""
-        lp = self.x @ beta
-        w = _curvature_weights(self.family.name, self.y, lp)
-        return (self.x * w[:, None]).T @ self.x
-
     def eval_hess(self, beta: np.ndarray):
         """(primal, dual, gradient, hessian) — local mirror of
         SparkBackend.eval_hess."""
@@ -167,9 +166,6 @@ class LocalBackend:
 # Spark backend
 # ---------------------------------------------------------------------------
 
-from golem_spark.functions.core import softplus as _softplus  # noqa: E402
-
-
 def _curvature_weights(fam: str, y: np.ndarray, lp: np.ndarray) -> np.ndarray:
     """Per-row second-derivative weights for the prox-Newton solver."""
     if fam == "binomial":
@@ -199,10 +195,21 @@ class SparkBackend:
     """Distributed execution of the data-plane contract.
 
     ``df`` must already contain standardized feature columns ``feat_cols``
-    (NOT including an intercept column — the intercept is the constant
-    term of the linear-predictor expression) and encoded response columns
-    ``y_cols`` (length m). The DataFrame is cached; every eval() is one
-    aggregation job over it.
+    (NOT including an intercept column — the intercept is a column of
+    ones added batch-side) and encoded response columns ``y_cols``
+    (length m). The DataFrame is cached.
+
+    Every pass that carries beta is a mapInPandas partial reduction
+    (Arrow batches -> numpy -> one partial-sum row per batch, summed on
+    the driver): one local compute and one reduce per pass. The JVM
+    side is a generic PythonMapInPandas node whose plan does not depend
+    on beta, so pass N reuses pass 1's compiled classes; baking beta
+    into Column literals instead generated fresh code on every pass
+    (2 classes compiled per call; cold binomial eval at p = 30 and
+    n = 60,000 on 4 cores: 993 ms against 413 ms). Collected partials are
+    O(#partitions x p*m) doubles — fine up to p ~ 100k. The closures
+    call module-level helpers such as ``_family_numpy``, which pickle by
+    reference, so Python workers must be able to import golem_spark.
     """
 
     def __init__(self, df: DataFrame, feat_cols: list[str], y_cols: list[str],
@@ -217,9 +224,9 @@ class SparkBackend:
         self.p_total = len(feat_cols) + (1 if intercept else 0)
         self.m = len(y_cols)
         # constant sum(lgamma(y+1)) for poisson; may be a ZERO-ARG THUNK
-        # (lazy: only the SQL expression path ever reads the constant —
-        # the Arrow closures compute lgamma in-batch — so a poisson fit
-        # that never touches _family_exprs never pays the scan)
+        # (lazy: the closures compute lgamma in-batch, and only the
+        # closed-form null deviance, path._spark_primal_at_zero, reads
+        # the constant — a fit that never asks never pays the scan)
         self._lgamma_sum = lgamma_sum
         if persist:
             self.df = self.df.persist()
@@ -232,471 +239,7 @@ class SparkBackend:
             self._lgamma_sum = v
         return v
 
-    # -- expression builders -------------------------------------------------
-
-    def _lp_exprs(self, beta: np.ndarray):
-        """Linear predictor columns, one per target, beta as literals."""
-        off = 1 if self.intercept else 0
-        lps = []
-        for k in range(self.m):
-            expr = F.lit(float(beta[0, k])) if self.intercept else F.lit(0.0)
-            for j, c in enumerate(self.feat_cols):
-                b = float(beta[j + off, k])
-                if b != 0.0:
-                    expr = expr + F.lit(b) * F.col(c)
-            lps.append(expr)
-        return lps
-
-    def _family_exprs(self, lps):
-        """(primal_expr, dual_expr, pseudograd_cols) — aggregate exprs for
-        primal/dual and per-row Column exprs for the pseudo-gradient."""
-        fam = self.family.name
-        ys = [F.col(c) for c in self.y_cols]
-        if fam == "gaussian":
-            # sums run over all targets (Frobenius loss, multi-task role)
-            rr = (ys[0] - lps[0]) * (ys[0] - lps[0])
-            yy = ys[0] * ys[0]
-            ll = lps[0] * lps[0]
-            for k in range(1, self.m):
-                rr = rr + (ys[k] - lps[k]) * (ys[k] - lps[k])
-                yy = yy + ys[k] * ys[k]
-                ll = ll + lps[k] * lps[k]
-            primal = F.lit(0.5) * F.sum(rr)
-            dual = F.lit(0.5) * F.sum(yy) - F.lit(0.5) * F.sum(ll)
-            grads = [lps[k] - ys[k] for k in range(self.m)]
-        elif fam == "binomial":
-            z = -ys[0] * lps[0]
-            primal = F.sum(_softplus(z))
-            r = F.lit(1.0) / (F.lit(1.0) + F.exp(F.least(ys[0] * lps[0], F.lit(700.0))))
-            eps = F.lit(1e-300)
-            dual = F.sum((r - 1.0) * F.log(F.greatest(F.lit(1.0) - r, eps))
-                         - r * F.log(F.greatest(r, eps)))
-            grads = [-ys[0] / (F.lit(1.0) + F.exp(F.least(ys[0] * lps[0], F.lit(700.0))))]
-        elif fam == "poisson":
-            e = F.exp(F.least(lps[0], F.lit(700.0)))
-            primal = -F.sum(ys[0] * lps[0] - e) + F.lit(self._lgs)
-            dual = -F.sum(e * (lps[0] - 1.0)) + F.lit(self._lgs)
-            grads = [e - ys[0]]
-        elif fam == "multinomial":
-            lp_max = lps[0]
-            for k in range(1, self.m):
-                lp_max = F.greatest(lp_max, lps[k])
-            sum_exp = F.exp(-lp_max)
-            for k in range(self.m):
-                sum_exp = sum_exp + F.exp(lps[k] - lp_max)
-            lse = F.log(sum_exp) + lp_max
-            ydotlp = ys[0] * lps[0]
-            for k in range(1, self.m):
-                ydotlp = ydotlp + ys[k] * lps[k]
-            primal = F.sum(lse) - F.sum(ydotlp)
-            lpdotsm = (lps[0]) * F.exp(lps[0] - lse)
-            for k in range(1, self.m):
-                lpdotsm = lpdotsm + lps[k] * F.exp(lps[k] - lse)
-            dual = F.sum(lse) - F.sum(lpdotsm)
-            grads = [F.exp(lps[k] - lse) - ys[k] for k in range(self.m)]
-        else:
-            raise ValueError(fam)
-        return primal, dual, grads
-
-    # -- contract ------------------------------------------------------------
-
-    def eval(self, beta: np.ndarray):
-        lps = self._lp_exprs(beta)
-        primal, dual, grads = self._family_exprs(lps)
-        aggs = [primal.alias("__primal"), dual.alias("__dual")]
-        for k, g in enumerate(grads):
-            if self.intercept:
-                aggs.append(F.sum(g).alias(f"__g_0_{k}"))
-            for j, c in enumerate(self.feat_cols):
-                aggs.append(F.sum(F.col(c) * g).alias(f"__g_{j + (1 if self.intercept else 0)}_{k}"))
-        row = self.df.agg(*aggs).collect()[0]
-        grad = np.zeros((self.p_total, self.m))
-        for k in range(self.m):
-            for j in range(self.p_total):
-                grad[j, k] = row[f"__g_{j}_{k}"]
-        return float(row["__primal"]), float(row["__dual"]), grad
-
-    def primal(self, beta: np.ndarray) -> float:
-        lps = self._lp_exprs(beta)
-        primal, _, _ = self._family_exprs(lps)
-        return float(self.df.agg(primal.alias("__primal")).collect()[0]["__primal"])
-
-    # Quadratic-output ops (Gram / Hessians) need p(p+1)/2 aggregation
-    # expressions — fine to ~50 features, catastrophic for Catalyst
-    # beyond that. Above the threshold they delegate to the Arrow
-    # partial-reduction implementations.
-    _QUAD_EXPR_MAX_P = 48
-
-    def _arrow_view(self) -> "ArrowSparkBackend":
-        return ArrowSparkBackend(self.df, self.feat_cols, self.y_cols,
-                                 self.family, self.intercept, self.n,
-                                 self._lgamma_sum, persist=False)
-
-    def eval_hess(self, beta: np.ndarray):
-        """(primal, dual, gradient, hessian) in ONE data pass — the
-        prox-Newton hot loop. hessian is X' diag(w) X for binomial/
-        poisson, the exact block Hessian for multinomial (caller gates
-        on m*p).
-
-        Always runs as an Arrow partial reduction (mapInPandas), not a
-        Catalyst aggregation-expression list: the expression form bakes
-        beta in as literals, so EVERY iteration generates fresh codegen
-        source and pays a ~0.5-0.7 s Janino compile before touching data
-        (measured: fresh-beta pass 1.1 s vs 0.35 s via Arrow on the same
-        cached frame; same-beta expression passes are fast because the
-        code cache hits). The Arrow plan is beta-independent — the JVM
-        side is a generic PythonMapInPandas node — so iteration N reuses
-        iteration 1's plan. The expression form is kept as
-        _eval_hess_expr for cross-checking."""
-        return self._arrow_view().eval_hess(beta)
-
-    def eval_multi(self, betas: list) -> list:
-        """[(primal, dual, grad)] for every beta from ONE data pass —
-        the Arrow machinery (same closures as :meth:`eval_hess`'s view),
-        so each result is bitwise what a per-beta Arrow pass returns."""
-        return self._arrow_view().eval_multi(betas)
-
-    def eval_hess_multi(self, betas: list) -> list:
-        """[(primal, dual, grad, hess)] for every beta from ONE pass."""
-        return self._arrow_view().eval_hess_multi(betas)
-
-    def _eval_hess_expr(self, beta: np.ndarray):
-        if self.p_total > self._QUAD_EXPR_MAX_P and self.family.name != "multinomial":
-            return self._arrow_view().eval_hess(beta)
-        fam = self.family.name
-        lps = self._lp_exprs(beta)
-        primal, dual, grads = self._family_exprs(lps)
-        p = self.p_total
-        m = self.m
-        cols = ([F.lit(1.0)] if self.intercept else []) + [F.col(c) for c in self.feat_cols]
-        aggs = [primal.alias("__primal"), dual.alias("__dual")]
-        for k, g in enumerate(grads):
-            for j, c in enumerate(cols):
-                aggs.append(F.sum(c * g).alias(f"__g_{j}_{k}"))
-        if fam == "binomial":
-            s = F.lit(1.0) / (F.lit(1.0) + F.exp(-F.greatest(F.least(lps[0], F.lit(700.0)), F.lit(-700.0))))
-            weights = {(0, 0): s * (F.lit(1.0) - s)}
-        elif fam == "poisson":
-            weights = {(0, 0): F.exp(F.least(lps[0], F.lit(700.0)))}
-        elif fam == "multinomial":
-            mx = lps[0]
-            for k in range(1, m):
-                mx = F.greatest(mx, lps[k])
-            mx = F.greatest(mx, F.lit(0.0))
-            denom = F.exp(-mx)
-            for k in range(m):
-                denom = denom + F.exp(lps[k] - mx)
-            probs = [F.exp(lps[k] - mx) / denom for k in range(m)]
-            weights = {}
-            for k in range(m):
-                for l in range(k, m):
-                    weights[(k, l)] = probs[k] * ((F.lit(1.0) - probs[l]) if k == l else (-probs[l]))
-        else:
-            raise ValueError(fam)
-        for (k, l), w in weights.items():
-            for i in range(p):
-                for j in range(i, p):
-                    aggs.append(F.sum(cols[i] * cols[j] * w).alias(f"__h_{k}_{l}_{i}_{j}"))
-        row = self.df.agg(*aggs).collect()[0]
-        grad = np.zeros((p, m))
-        for k in range(m):
-            for j in range(p):
-                grad[j, k] = row[f"__g_{j}_{k}"]
-        H = np.zeros((p * m, p * m))
-        for (k, l) in weights:
-            blk = np.zeros((p, p))
-            for i in range(p):
-                for j in range(i, p):
-                    blk[i, j] = blk[j, i] = row[f"__h_{k}_{l}_{i}_{j}"]
-            H[k * p:(k + 1) * p, l * p:(l + 1) * p] = blk
-            if l != k:
-                H[l * p:(l + 1) * p, k * p:(k + 1) * p] = blk
-        return float(row["__primal"]), float(row["__dual"]), grad, H
-
-    def gaussian_sufficient_stats(self):
-        """(gram, xty, yty) in ONE distributed pass — the complete data
-        dependence of the gaussian path (factorize-once design,
-        src/owl.cpp:171-215). After this single pass the entire ADMM
-        path loop, including lambda_max (= |xty| rows sans intercept),
-        is driver-local: one data pass for the whole fit."""
-        if self.p_total > self._QUAD_EXPR_MAX_P:
-            return self._arrow_view().gaussian_sufficient_stats()
-        cols = ([F.lit(1.0)] if self.intercept else []) + [F.col(c) for c in self.feat_cols]
-        p = self.p_total
-        aggs = []
-        for i in range(p):
-            for j in range(i, p):
-                aggs.append(F.sum(cols[i] * cols[j]).alias(f"__xx_{i}_{j}"))
-        for k, yc in enumerate(self.y_cols):
-            for i, c in enumerate(cols):
-                aggs.append(F.sum(c * F.col(yc)).alias(f"__xty_{i}_{k}"))
-            aggs.append(F.sum(F.col(yc) * F.col(yc)).alias(f"__yy_{k}"))
-        row = self.df.agg(*aggs).collect()[0]
-        g = np.zeros((p, p))
-        for i in range(p):
-            for j in range(i, p):
-                g[i, j] = g[j, i] = row[f"__xx_{i}_{j}"]
-        xty = np.zeros((p, self.m))
-        yty = 0.0
-        for k in range(self.m):
-            for i in range(p):
-                xty[i, k] = row[f"__xty_{i}_{k}"]
-            yty += float(row[f"__yy_{k}"])
-        return g, xty, yty
-
-    def gram(self) -> np.ndarray:
-        """X^T X including the intercept column — one distributed pass,
-        p(p+1)/2 partial-aggregated sums, p×p to the driver. For the
-        gaussian/ADMM path this is the ONLY data pass of the whole fit."""
-        if self.p_total > self._QUAD_EXPR_MAX_P:
-            return self._arrow_view().gram()
-        cols = ([F.lit(1.0)] if self.intercept else []) + [F.col(c) for c in self.feat_cols]
-        p = self.p_total
-        aggs = []
-        for i in range(p):
-            for j in range(i, p):
-                aggs.append(F.sum(cols[i] * cols[j]).alias(f"__xx_{i}_{j}"))
-        row = self.df.agg(*aggs).collect()[0]
-        g = np.zeros((p, p))
-        for i in range(p):
-            for j in range(i, p):
-                g[i, j] = g[j, i] = row[f"__xx_{i}_{j}"]
-        return g
-
-    def xty(self) -> np.ndarray:
-        cols = ([F.lit(1.0)] if self.intercept else []) + [F.col(c) for c in self.feat_cols]
-        aggs = []
-        for k, yc in enumerate(self.y_cols):
-            for i, c in enumerate(cols):
-                aggs.append(F.sum(c * F.col(yc)).alias(f"__xty_{i}_{k}"))
-        row = self.df.agg(*aggs).collect()[0]
-        out = np.zeros((self.p_total, self.m))
-        for k in range(self.m):
-            for i in range(self.p_total):
-                out[i, k] = row[f"__xty_{i}_{k}"]
-        return out
-
-    def weighted_gram(self, beta: np.ndarray) -> np.ndarray:
-        """X^T diag(w) X at beta — one distributed pass (prox-Newton for
-        poisson; binomial/multinomial use fixed Bohning bounds instead)."""
-        if self.p_total > self._QUAD_EXPR_MAX_P:
-            _, _, _, H = self._arrow_view().eval_hess(beta)
-            return H
-        lps = self._lp_exprs(beta)
-        fam = self.family.name
-        if fam == "binomial":
-            s = F.lit(1.0) / (F.lit(1.0) + F.exp(-F.greatest(F.least(lps[0], F.lit(700.0)), F.lit(-700.0))))
-            w = s * (F.lit(1.0) - s)
-        elif fam == "poisson":
-            w = F.exp(F.least(lps[0], F.lit(700.0)))
-        else:
-            raise ValueError(f"no scalar curvature weights for family {fam!r}")
-        cols = ([F.lit(1.0)] if self.intercept else []) + [F.col(c) for c in self.feat_cols]
-        p = self.p_total
-        aggs = []
-        for i in range(p):
-            for j in range(i, p):
-                aggs.append(F.sum(cols[i] * cols[j] * w).alias(f"__wx_{i}_{j}"))
-        row = self.df.agg(*aggs).collect()[0]
-        g = np.zeros((p, p))
-        for i in range(p):
-            for j in range(i, p):
-                g[i, j] = g[j, i] = row[f"__wx_{i}_{j}"]
-        return g
-
-    def multinomial_hessian(self, beta: np.ndarray) -> np.ndarray:
-        """Exact softmax block Hessian in one distributed pass:
-        m(m+1)/2 blocks x p(p+1)/2 sums with probability-weight
-        expressions. Use only when m*p is modest (the prox-Newton solver
-        gates on that); otherwise the Bohning bound avoids this pass."""
-        lps = self._lp_exprs(beta)
-        m = self.m
-        p = self.p_total
-        mx = lps[0]
-        for k in range(1, m):
-            mx = F.greatest(mx, lps[k])
-        mx = F.greatest(mx, F.lit(0.0))
-        denom = F.exp(-mx)
-        for k in range(m):
-            denom = denom + F.exp(lps[k] - mx)
-        probs = [F.exp(lps[k] - mx) / denom for k in range(m)]
-        cols = ([F.lit(1.0)] if self.intercept else []) + [F.col(c) for c in self.feat_cols]
-        aggs = []
-        for k in range(m):
-            for l in range(k, m):
-                w = probs[k] * ((F.lit(1.0) - probs[l]) if k == l else (-probs[l]))
-                for i in range(p):
-                    for j in range(i, p):
-                        aggs.append(F.sum(cols[i] * cols[j] * w).alias(f"__h_{k}_{l}_{i}_{j}"))
-        row = self.df.agg(*aggs).collect()[0]
-        H = np.zeros((p * m, p * m))
-        for k in range(m):
-            for l in range(k, m):
-                blk = np.zeros((p, p))
-                for i in range(p):
-                    for j in range(i, p):
-                        blk[i, j] = blk[j, i] = row[f"__h_{k}_{l}_{i}_{j}"]
-                H[k * p:(k + 1) * p, l * p:(l + 1) * p] = blk
-                if l != k:
-                    H[l * p:(l + 1) * p, k * p:(k + 1) * p] = blk
-        return H
-
-    def subset(self, cols: np.ndarray) -> "SparkBackend":
-        """Backend over a column subset (active set). Intercept position 0
-        must be included when intercept=True (mirrors src/owl.cpp:221)."""
-        cols = np.asarray(cols)
-        if self.intercept:
-            assert cols[0] == 0, "active set must contain the intercept"
-            feat = [self.feat_cols[j - 1] for j in cols[1:]]
-        else:
-            feat = [self.feat_cols[j] for j in cols]
-        return SparkBackend(self.df, feat, self.y_cols, self.family,
-                            self.intercept, self.n, self._lgamma_sum, persist=False)
-
-    def lambda_max_gradient(self) -> np.ndarray:
-        """|X^T y~| in ONE fused aggregation pass (lambdaMax.h:8-60) —
-        or ZERO passes when build_spark_backend already derived it from
-        the fused stats pass (poisson's X'y ride-along, the
-        binomial/multinomial grouped per-class sums — the common path).
-
-        The family-specific centered forms distribute over the sum:
-        sum(c*(y - mu)) = sum(c*y) - mu*sum(c), and the multinomial's
-        standardize-then-rescale (divide by sd, multiply back) cancels —
-        so per-target means come from the same pass instead of a
-        separate statistics job."""
-        pre = getattr(self, "_lam_max_grad", None)
-        if pre is not None:
-            return pre
-        fam = self.family.name
-        cols = [F.col(c) for c in self.feat_cols]
-        y0 = F.col(self.y_cols[0])
-        if fam == "binomial":
-            yts = [(y0 + 1) / 2]
-        elif fam == "poisson":
-            yts = [F.lit(1.0) - y0]
-        else:
-            # gaussian (possibly multi-target) and multinomial: all y cols
-            yts = [F.col(c) for c in self.y_cols]
-        need_center = fam in ("binomial", "multinomial")
-        aggs = []
-        for k, yk in enumerate(yts):
-            for j, c in enumerate(cols):
-                aggs.append(F.sum(c * yk).alias(f"__cy_{j}_{k}"))
-            # sum(yt) rides along unconditionally: besides the centered
-            # gradient forms it yields the response means, so
-            # null_intercepts() never needs its own pass
-            aggs.append(F.sum(yk).alias(f"__y_{k}"))
-        if need_center:
-            aggs += [F.sum(c).alias(f"__c_{j}") for j, c in enumerate(cols)]
-        row = self.df.agg(*aggs).collect()[0]
-        g = np.zeros((len(cols), len(yts)))
-        yt_mean = np.zeros(len(yts))
-        for k in range(len(yts)):
-            yt_mean[k] = row[f"__y_{k}"] / self.n
-            mu = yt_mean[k] if need_center else 0.0
-            for j in range(len(cols)):
-                g[j, k] = row[f"__cy_{j}_{k}"] - (mu * row[f"__c_{j}"] if need_center else 0.0)
-        self._stash_null_mu(fam, yt_mean)
-        return np.abs(g.ravel(order="F"))
-
-    def _stash_null_mu(self, fam: str, yt_mean: np.ndarray) -> None:
-        """Decode the gradient pass's transformed-response means back to
-        encoded-y means (binomial yt=(y+1)/2, poisson yt=1-y)."""
-        if fam == "binomial":
-            self._null_mu = 2.0 * yt_mean - 1.0
-        elif fam == "poisson":
-            self._null_mu = 1.0 - yt_mean
-        else:
-            self._null_mu = yt_mean.copy()
-
-    def null_intercepts(self) -> np.ndarray:
-        mu = getattr(self, "_null_mu", None)
-        if mu is None:  # lambda_max_gradient not called (e.g. user sigma_max)
-            means = self.df.agg(*[F.avg(F.col(c)).alias(f"m{k}")
-                                  for k, c in enumerate(self.y_cols)]).collect()[0]
-            mu = np.array([means[f"m{k}"] for k in range(self.m)])
-        return _null_intercepts_from_mu(self.family.name, np.asarray(mu))
-
-    def unpersist(self):
-        self.df.unpersist()
-
-
-def _flatten_lists(arrs, dtype) -> np.ndarray:
-    """Concatenate a pandas object column of per-row sequences. Arrow
-    delivers ndarray elements, which concatenate C-speed; generic
-    sequences fall back to a per-row conversion."""
-    seq = list(arrs)
-    if not seq:
-        return np.zeros(0, dtype=dtype)
-    if isinstance(seq[0], np.ndarray):
-        return np.concatenate(seq).astype(dtype, copy=False)
-    out = [np.asarray(v, dtype=dtype) for v in seq]
-    return np.concatenate(out) if out else np.zeros(0, dtype=dtype)
-
-
-def _csr_batch(pdf, idx_col: str, val_col: str):
-    """Shared CSR row-building for every sparse Arrow closure:
-    (nrow, lens, rows, flat_idx, flat_val). Null array cells are
-    rejected (the dense path rejects null features the same way)."""
-    il = pdf[idx_col].to_numpy()
-    vl = pdf[val_col].to_numpy()
-    nrow = len(il)
-    if any(v is None for v in il) or any(v is None for v in vl):
-        raise ValueError(f"missing values in columns: ['{idx_col}', '{val_col}']")
-    lens = np.fromiter((len(v) for v in il), dtype=np.int64, count=nrow)
-    flat_idx = _flatten_lists(il, np.int64)
-    flat_val = _flatten_lists(vl, np.float64)
-    rows = np.repeat(np.arange(nrow), lens)
-    return nrow, lens, rows, flat_idx, flat_val
-
-
-def _bounded_partials_src(df: DataFrame, out_len: int,
-                          cached_n_parts: list) -> DataFrame:
-    """Cap the bytes of partial rows a reduction pass sends the driver.
-
-    A Gram partial is out_len = p_total^2 doubles (~5 MB at p=807); with
-    31 partitions the driver would ingest ~160 MB of task results, which
-    the py4j collect path handles badly (measured 7-52 s, high variance,
-    vs 1.4-3 s after coalescing to ~40 MB). Coalesce is a narrow
-    dependency, so the map work itself runs in the merged tasks — fine
-    here because per-batch CPU is small next to the transfer. A
-    two-stage tree reduce (full-parallel map, then a repartition-sum
-    stage) measured slower than coalesce locally, because of its extra
-    shuffle, so ingress is bounded to ~40 MB this simple way."""
-    part_bytes = out_len * 8
-    if part_bytes <= (1 << 20):
-        return df
-    if not cached_n_parts:
-        cached_n_parts.append(df.rdd.getNumPartitions())
-    n_in = cached_n_parts[0]
-    fanin = max(1, min(n_in, (40 << 20) // part_bytes))
-    return df.coalesce(fanin) if fanin < n_in else df
-
-
-def _collect_partials(df: DataFrame, out_len: int) -> np.ndarray:
-    """Sum array<double> partial rows on the driver WITHOUT collect()'s
-    per-element Python float materialization: Arrow transfer keeps the
-    values in one contiguous buffer (a p^2-sized Gram partial from 30
-    partitions is ~20M doubles — Row conversion alone costs seconds).
-    A failing pass raises after its one job; nothing re-runs it."""
-    total = np.zeros(out_len)
-    for chunk in df.toArrow().column("part").chunks:
-        flat = chunk.flatten().to_numpy(zero_copy_only=False)
-        if flat.size:
-            total += flat.reshape(-1, out_len).sum(axis=0)
-    return total
-
-
-class ArrowSparkBackend(SparkBackend):
-    """Wide-p variant: data passes are mapInPandas partial reductions
-    (Arrow batches -> numpy -> one partial-sum row per batch) instead of
-    p-wide aggregation expression lists, which stop scaling past a few
-    hundred columns of Catalyst expressions.
-
-    Collected partials are O(#partitions x p*m) doubles — fine up to
-    p ~ 100k. Closures are self-contained (pure numpy, no package
-    imports) so executors need no PYTHONPATH setup.
-    """
+    # -- partial-reduction plumbing ------------------------------------------
 
     def _partial_reduce(self, build_batch_fn, out_len: int) -> np.ndarray:
         if not hasattr(self, "_n_parts_cache"):
@@ -704,34 +247,6 @@ class ArrowSparkBackend(SparkBackend):
         src = _bounded_partials_src(self.df, out_len, self._n_parts_cache)
         return _collect_partials(self._map_partials(src, build_batch_fn),
                                  out_len)
-
-    def _eval_closure(self, beta: np.ndarray):
-        """(batch_fn, out_len) for one beta — the exact per-batch
-        arithmetic of :meth:`eval`, shared by the single and fused
-        multi-beta passes so both produce identical partials."""
-        fam = self.family.name
-        b = np.ascontiguousarray(beta, dtype=np.float64)
-        intercept = self.intercept
-        m = self.m
-        p_total = self.p_total
-
-        def batch(X, Y):
-            lp = (b[0][None, :] + X @ b[1:]) if intercept else X @ b
-            primal, dual, g = _family_numpy(fam, Y, lp)
-            grad = X.T @ g
-            if intercept:
-                grad = np.vstack([g.sum(axis=0), grad])
-            return np.concatenate([[primal, dual], grad.ravel(order="F")])
-
-        return batch, 2 + p_total * m
-
-    def _eval_finish(self, out: np.ndarray):
-        grad = out[2:].reshape((self.p_total, self.m), order="F")
-        return float(out[0]), float(out[1]), grad
-
-    def eval(self, beta: np.ndarray):
-        batch, out_len = self._eval_closure(beta)
-        return self._eval_finish(self._partial_reduce(batch, out_len))
 
     def _multi_reduce(self, built: list) -> list[np.ndarray]:
         """ONE distributed pass evaluating several closures (guide §2.4:
@@ -775,6 +290,37 @@ class ArrowSparkBackend(SparkBackend):
                 yield pd.DataFrame({"part": [build_batch_fn(X, Y)]})
 
         return src.mapInPandas(op, "part array<double>")
+
+    # -- contract ------------------------------------------------------------
+
+    def _eval_closure(self, beta: np.ndarray):
+        """(batch_fn, out_len) for one beta — the exact per-batch
+        arithmetic of :meth:`eval`, shared by the single and fused
+        multi-beta passes so both produce identical partials."""
+        fam = self.family.name
+        b = np.ascontiguousarray(beta, dtype=np.float64)
+        intercept = self.intercept
+        m = self.m
+        p_total = self.p_total
+
+        def batch(X, Y):
+            lp = (b[0][None, :] + X @ b[1:]) if intercept else X @ b
+            primal, dual, g = _family_numpy(fam, Y, lp)
+            grad = X.T @ g
+            if intercept:
+                grad = np.vstack([g.sum(axis=0), grad])
+            return np.concatenate([[primal, dual], grad.ravel(order="F")])
+
+        return batch, 2 + p_total * m
+
+    def _eval_finish(self, out: np.ndarray):
+        grad = out[2:].reshape((self.p_total, self.m), order="F")
+        return float(out[0]), float(out[1]), grad
+
+    def eval(self, beta: np.ndarray):
+        """(primal, dual, gradient p_total×m) at beta — one pass."""
+        batch, out_len = self._eval_closure(beta)
+        return self._eval_finish(self._partial_reduce(batch, out_len))
 
     def eval_multi(self, betas: list) -> list:
         """[(primal, dual, grad)] for every beta from ONE data pass."""
@@ -880,10 +426,16 @@ class ArrowSparkBackend(SparkBackend):
         return float(out[0]), float(out[1]), grad, H
 
     def eval_hess(self, beta: np.ndarray):
+        """(primal, dual, gradient, hessian) in ONE data pass — the
+        prox-Newton hot loop. hessian is X' diag(w) X for binomial/
+        poisson, the exact block Hessian for multinomial (caller gates
+        on m*p)."""
         batch, out_len = self._eval_hess_closure(beta)
         return self._eval_hess_finish(self._partial_reduce(batch, out_len))
 
     def gram(self) -> np.ndarray:
+        """X^T X including the intercept column — one pass, p×p to the
+        driver."""
         intercept = self.intercept
         p_total = self.p_total
 
@@ -893,23 +445,6 @@ class ArrowSparkBackend(SparkBackend):
 
         return self._partial_reduce(batch, p_total * p_total).reshape(
             (p_total, p_total))
-
-    def gaussian_sufficient_stats(self):
-        """(gram, xty, yty) via one mapInPandas partial-reduction pass."""
-        intercept = self.intercept
-        p_total = self.p_total
-        m = self.m
-
-        def batch(X, Y):
-            Xi = np.hstack([np.ones((X.shape[0], 1)), X]) if intercept else X
-            return np.concatenate([(Xi.T @ Xi).ravel(),
-                                   (Xi.T @ Y).ravel(order="F"),
-                                   [float(np.sum(Y * Y))]])
-
-        out = self._partial_reduce(batch, p_total * p_total + p_total * m + 1)
-        gram = out[:p_total * p_total].reshape((p_total, p_total))
-        xty = out[p_total * p_total:-1].reshape((p_total, m), order="F")
-        return gram, xty, float(out[-1])
 
     def xty(self) -> np.ndarray:
         intercept = self.intercept
@@ -923,39 +458,197 @@ class ArrowSparkBackend(SparkBackend):
         return self._partial_reduce(batch, p_total * m).reshape(
             (p_total, m), order="F")
 
+    # The one Catalyst aggregation left on this plane: the pass carries
+    # no beta and runs once per gaussian fit, so its generated code is
+    # compiled once per design, and on the unpersisted frame a narrow
+    # fit reads it is faster than the Arrow closure (lineitem, p = 4, 4
+    # cores: 346 against 526 ms at sf0.01, 820 against 1,073 ms at sf0.1).
+    # Past a few dozen columns the p(p+1)/2 expression list stops
+    # scaling, so the choice follows the input's p.
+    _CATALYST_STATS_MAX_P = 48
+
+    def gaussian_sufficient_stats(self):
+        """(gram, xty, yty) in ONE distributed pass — the complete data
+        dependence of the gaussian path (factorize-once design,
+        src/owl.cpp:171-215). After this single pass the entire ADMM
+        path loop, including lambda_max (= |xty| rows sans intercept),
+        is driver-local: one data pass for the whole fit."""
+        p = self.p_total
+        m = self.m
+        if p > self._CATALYST_STATS_MAX_P:
+            intercept = self.intercept
+
+            def batch(X, Y):
+                Xi = np.hstack([np.ones((X.shape[0], 1)), X]) if intercept else X
+                return np.concatenate([(Xi.T @ Xi).ravel(),
+                                       (Xi.T @ Y).ravel(order="F"),
+                                       [float(np.sum(Y * Y))]])
+
+            out = self._partial_reduce(batch, p * p + p * m + 1)
+            gram = out[:p * p].reshape((p, p))
+            xty = out[p * p:-1].reshape((p, m), order="F")
+            return gram, xty, float(out[-1])
+        cols = ([F.lit(1.0)] if self.intercept else []) + [F.col(c) for c in self.feat_cols]
+        aggs = []
+        for i in range(p):
+            for j in range(i, p):
+                aggs.append(F.sum(cols[i] * cols[j]).alias(f"__xx_{i}_{j}"))
+        for k, yc in enumerate(self.y_cols):
+            for i, c in enumerate(cols):
+                aggs.append(F.sum(c * F.col(yc)).alias(f"__xty_{i}_{k}"))
+            aggs.append(F.sum(F.col(yc) * F.col(yc)).alias(f"__yy_{k}"))
+        row = self.df.agg(*aggs).collect()[0]
+        g = np.zeros((p, p))
+        for i in range(p):
+            for j in range(i, p):
+                g[i, j] = g[j, i] = row[f"__xx_{i}_{j}"]
+        xty = np.zeros((p, m))
+        yty = 0.0
+        for k in range(m):
+            for i in range(p):
+                xty[i, k] = row[f"__xty_{i}_{k}"]
+            yty += float(row[f"__yy_{k}"])
+        return g, xty, yty
+
+    def subset(self, cols: np.ndarray) -> "SparkBackend":
+        """Backend over a column subset (active set). Intercept position 0
+        must be included when intercept=True (mirrors src/owl.cpp:221)."""
+        cols = np.asarray(cols)
+        if self.intercept:
+            assert cols[0] == 0, "active set must contain the intercept"
+            feat = [self.feat_cols[j - 1] for j in cols[1:]]
+        else:
+            feat = [self.feat_cols[j] for j in cols]
+        return SparkBackend(self.df, feat, self.y_cols, self.family,
+                            self.intercept, self.n, self._lgamma_sum, persist=False)
+
     def lambda_max_gradient(self) -> np.ndarray:
+        """|X^T y~| (lambdaMax.h:8-60) — ZERO passes when
+        build_spark_backend already derived it from its stats pass
+        (poisson's X'y ride-along, the binomial/multinomial grouped
+        per-class sums: the common path), else one pass.
+
+        Per batch the closure returns [X'y~, sum(y~), X'1]. The centered
+        binomial/multinomial form distributes over the sum,
+        sum(x*(y~ - mu)) = X'y~ - mu*X'1, and the multinomial's
+        standardize-then-rescale (divide by sd, multiply back) cancels,
+        so the response means come from the same pass — and with them
+        null_intercepts() needs no pass of its own."""
         pre = getattr(self, "_lam_max_grad", None)
         if pre is not None:
-            # derived from the builder's fused stats pass (same
-            # short-circuit the expression parent takes) — zero scans
             return pre
         fam = self.family.name
         m = self.m
         p = len(self.feat_cols)
-        if fam in ("gaussian", "poisson"):
-            def batch(X, Y):
-                yt = Y if fam == "gaussian" else (1.0 - Y)
-                return (X.T @ yt).ravel(order="F")
 
-            g = self._partial_reduce(batch, p * m)
-            return np.abs(g)
-        # binomial/multinomial need global y statistics first — reuse the
-        # expression implementation (narrow: touches only y columns)
-        return super().lambda_max_gradient()
+        def batch(X, Y):
+            if fam == "binomial":
+                yt = (Y + 1) / 2.0
+            elif fam == "poisson":
+                yt = 1.0 - Y
+            else:
+                yt = Y
+            return np.concatenate([(X.T @ yt).ravel(order="F"),
+                                   yt.sum(axis=0), X.sum(axis=0)])
 
-    def subset(self, cols: np.ndarray) -> "SparkBackend":
-        cols = np.asarray(cols)
-        if self.intercept:
-            assert cols[0] == 0
-            feat = [self.feat_cols[j - 1] for j in cols[1:]]
+        out = self._partial_reduce(batch, p * m + m + p)
+        g = out[:p * m].reshape((p, m), order="F")
+        yt_mean = out[p * m:p * m + m] / self.n
+        if fam in ("binomial", "multinomial"):
+            g = g - np.outer(out[p * m + m:], yt_mean)
+        self._stash_null_mu(fam, yt_mean)
+        return np.abs(g.ravel(order="F"))
+
+    def _stash_null_mu(self, fam: str, yt_mean: np.ndarray) -> None:
+        """Decode the gradient pass's transformed-response means back to
+        encoded-y means (binomial yt=(y+1)/2, poisson yt=1-y)."""
+        if fam == "binomial":
+            self._null_mu = 2.0 * yt_mean - 1.0
+        elif fam == "poisson":
+            self._null_mu = 1.0 - yt_mean
         else:
-            feat = [self.feat_cols[j] for j in cols]
-        cls = SparkBackend if len(feat) <= 200 else ArrowSparkBackend
-        return cls(self.df, feat, self.y_cols, self.family,
-                   self.intercept, self.n, self._lgamma_sum, persist=False)
+            self._null_mu = yt_mean.copy()
+
+    def null_intercepts(self) -> np.ndarray:
+        mu = getattr(self, "_null_mu", None)
+        if mu is None:  # lambda_max_gradient not called (e.g. user sigma_max)
+            # beta-free one-shot Catalyst pass over the y columns only
+            means = self.df.agg(*[F.avg(F.col(c)).alias(f"m{k}")
+                                  for k, c in enumerate(self.y_cols)]).collect()[0]
+            mu = np.array([means[f"m{k}"] for k in range(self.m)])
+        return _null_intercepts_from_mu(self.family.name, np.asarray(mu))
+
+    def unpersist(self):
+        self.df.unpersist()
 
 
-class SparseArrowBackend(ArrowSparkBackend):
+def _flatten_lists(arrs, dtype) -> np.ndarray:
+    """Concatenate a pandas object column of per-row sequences. Arrow
+    delivers ndarray elements, which concatenate C-speed; generic
+    sequences fall back to a per-row conversion."""
+    seq = list(arrs)
+    if not seq:
+        return np.zeros(0, dtype=dtype)
+    if isinstance(seq[0], np.ndarray):
+        return np.concatenate(seq).astype(dtype, copy=False)
+    out = [np.asarray(v, dtype=dtype) for v in seq]
+    return np.concatenate(out) if out else np.zeros(0, dtype=dtype)
+
+
+def _csr_batch(pdf, idx_col: str, val_col: str):
+    """Shared CSR row-building for every sparse Arrow closure:
+    (nrow, lens, rows, flat_idx, flat_val). Null array cells are
+    rejected (the dense path rejects null features the same way)."""
+    il = pdf[idx_col].to_numpy()
+    vl = pdf[val_col].to_numpy()
+    nrow = len(il)
+    if any(v is None for v in il) or any(v is None for v in vl):
+        raise ValueError(f"missing values in columns: ['{idx_col}', '{val_col}']")
+    lens = np.fromiter((len(v) for v in il), dtype=np.int64, count=nrow)
+    flat_idx = _flatten_lists(il, np.int64)
+    flat_val = _flatten_lists(vl, np.float64)
+    rows = np.repeat(np.arange(nrow), lens)
+    return nrow, lens, rows, flat_idx, flat_val
+
+
+def _bounded_partials_src(df: DataFrame, out_len: int,
+                          cached_n_parts: list) -> DataFrame:
+    """Cap the bytes of partial rows a reduction pass sends the driver.
+
+    A Gram partial is out_len = p_total^2 doubles (~5 MB at p=807); with
+    31 partitions the driver would ingest ~160 MB of task results, which
+    the py4j collect path handles badly (measured 7-52 s, high variance,
+    vs 1.4-3 s after coalescing to ~40 MB). Coalesce is a narrow
+    dependency, so the map work itself runs in the merged tasks — fine
+    here because per-batch CPU is small next to the transfer. A
+    two-stage tree reduce (full-parallel map, then a repartition-sum
+    stage) measured slower than coalesce locally, because of its extra
+    shuffle, so ingress is bounded to ~40 MB this simple way."""
+    part_bytes = out_len * 8
+    if part_bytes <= (1 << 20):
+        return df
+    if not cached_n_parts:
+        cached_n_parts.append(df.rdd.getNumPartitions())
+    n_in = cached_n_parts[0]
+    fanin = max(1, min(n_in, (40 << 20) // part_bytes))
+    return df.coalesce(fanin) if fanin < n_in else df
+
+
+def _collect_partials(df: DataFrame, out_len: int) -> np.ndarray:
+    """Sum array<double> partial rows on the driver WITHOUT collect()'s
+    per-element Python float materialization: Arrow transfer keeps the
+    values in one contiguous buffer (a p^2-sized Gram partial from 30
+    partitions is ~20M doubles — Row conversion alone costs seconds).
+    A failing pass raises after its one job; nothing re-runs it."""
+    total = np.zeros(out_len)
+    for chunk in df.toArrow().column("part").chunks:
+        flat = chunk.flatten().to_numpy(zero_copy_only=False)
+        if flat.size:
+            total += flat.reshape(-1, out_len).sum(axis=0)
+    return total
+
+
+class SparseArrowBackend(SparkBackend):
     """Sparse-native wide-p backend: features arrive as per-row
     (indices, values) array columns — hashed one-hots / CSR rows, the
     reference's dgCMatrix role (R/owl.R:353-360). Standardization is
@@ -992,29 +685,6 @@ class SparseArrowBackend(ArrowSparkBackend):
         self.feat_cols = [f"s{j}" for j in range(self.p_feat)]  # names only
 
     # -- batch plumbing ------------------------------------------------------
-
-    def _csr_closure(self):
-        """Returns a self-contained fn(pdf) -> (nrow, rows, cols, vals, Y)
-        with scaling and column selection applied."""
-        idx_col, val_col, y_cols = self.idx_col, self.val_col, self.y_cols
-        inv_scale = self.inv_scale_full
-        p_orig = self.p_orig
-        col_map = None
-        if self.col_sel is not None:
-            col_map = np.full(p_orig, -1, dtype=np.int64)
-            col_map[self.col_sel] = np.arange(self.col_sel.size)
-
-        def csr(pdf):
-            nrow, lens, rows, flat_idx, flat_val = _csr_batch(pdf, idx_col, val_col)
-            flat_val = flat_val * inv_scale[flat_idx]
-            if col_map is not None:
-                remap = col_map[flat_idx]
-                keep = remap >= 0
-                rows, flat_idx, flat_val = rows[keep], remap[keep], flat_val[keep]
-            Y = pdf[y_cols].to_numpy(dtype=np.float64)
-            return nrow, rows, flat_idx, flat_val, Y
-
-        return csr
 
     def _map_partials(self, src: DataFrame, build_batch_fn) -> DataFrame:
         """mapInArrow partial reduction: the (indices, values) list
@@ -1109,10 +779,6 @@ class SparseArrowBackend(ArrowSparkBackend):
             return np.concatenate([[primal, dual], grad.ravel(order="F")])
 
         return batch, 2 + self.p_total * m
-
-    def eval(self, beta: np.ndarray):
-        batch, out_len = self._eval_closure(beta)
-        return self._eval_finish(self._partial_reduce(batch, out_len))
 
     def primal(self, beta: np.ndarray) -> float:
         fam = self.family.name
@@ -1288,10 +954,6 @@ class SparseArrowBackend(ArrowSparkBackend):
         else:
             H = out[2 + pm:].reshape((p_total, p_total))
         return float(out[0]), float(out[1]), grad, H
-
-    def eval_hess(self, beta: np.ndarray):
-        batch, out_len = self._eval_hess_closure(beta)
-        return self._eval_hess_finish(self._partial_reduce(batch, out_len))
 
     def lambda_max_gradient(self) -> np.ndarray:
         """|X_std^T ytilde| per family (lambdaMax.h:8-60). The centered
@@ -1848,6 +1510,8 @@ def build_spark_backend(df: DataFrame, feature_cols: list[str], label_col: str,
         # reference's factorize-once shape (src/owl.cpp:171-215) for
         # every dense family: gaussian's comes from the ADMM Gram pass,
         # poisson's from the X'y ride-along, these two from the groups.
+        # Like the flat pass below it carries no beta and runs once per
+        # build, so it stays a Catalyst aggregation.
         aggs = [F.count(F.lit(1)).alias("__n")]
         for c in feature_cols:
             aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"__null_{c}"))
@@ -1895,7 +1559,8 @@ def build_spark_backend(df: DataFrame, feature_cols: list[str], label_col: str,
     elif not wide:
         # ONE fused pass: null counts (rejected like the reference,
         # R/owl.R:350-351), row count, per-feature mean + raw second
-        # moment (closed-form l2/sd scales), label mean/min.
+        # moment (closed-form l2/sd scales), label mean/min. A beta-free
+        # one-shot Catalyst aggregation.
         aggs = [F.count(F.lit(1)).alias("__n")]
         for c in [*feature_cols, *label_cols]:
             aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"__null_{c}"))
@@ -2090,9 +1755,8 @@ def build_spark_backend(df: DataFrame, feature_cols: list[str], label_col: str,
                      .mapInArrow(_lgsum, "s double").collect())
             return float(sum(r["s"] for r in parts))
 
-    backend_cls = ArrowSparkBackend if wide else SparkBackend
-    backend = backend_cls(std_df, feat_std, y_cols, fam, intercept, n,
-                          lgamma_sum, persist=persist)
+    backend = SparkBackend(std_df, feat_std, y_cols, fam, intercept, n,
+                           lgamma_sum, persist=persist)
     if family_name == "poisson":
         # read through the persisted frame so the deferred scan is
         # cache-local (or IS the materializing scan)

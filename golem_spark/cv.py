@@ -381,10 +381,10 @@ def _fold_complement_stats(rows: list[dict], fold, feature_cols,
 
 def _make_fold_backend(src, fold_col, fold, feat_cols, y_cols, family_name,
                        intercept, n, lgamma_sum, x_center, x_scale):
-    from golem_spark.backends import ArrowSparkBackend
+    from golem_spark.backends import SparkBackend
     from golem_spark.families import get_family
 
-    class _Backend(ArrowSparkBackend):
+    class _Backend(SparkBackend):
         def __init__(self):
             super().__init__(src, feat_cols, y_cols, get_family(family_name),
                              intercept, n, lgamma_sum, persist=False)
@@ -428,7 +428,9 @@ def _make_fold_backend(src, fold_col, fold, feat_cols, y_cols, family_name,
         # the inherited fallbacks aggregate self.df directly: the raw,
         # unmasked, unstandardized shared frame, held-out rows included.
         # Every fold backend is built with both stashes set, so a missing
-        # one is a wiring bug, never a reason to scan
+        # one is a wiring bug, never a reason to scan. (The narrow
+        # gaussian_sufficient_stats aggregation reads self.df too; fold
+        # backends serve non-gaussian families only, so none calls it.)
         def lambda_max_gradient(self):
             pre = getattr(self, "_lam_max_grad", None)
             if pre is None:

@@ -11,9 +11,10 @@ Control flow mirrors the reference executor (/root/reference/src/owl.cpp:
 - other families use FISTA, one distributed aggregation per iteration.
 
 Scale notes (100 TB): for gaussian the whole path costs O(1) passes over
-the data regardless of path length; for FISTA families the per-iteration
-pass is a single Tungsten hash-aggregation of p·m + 2 partial sums with
-beta folded in as literals — no shuffle, no collect of data rows.
+the data regardless of path length; for the other families the
+per-iteration pass is one mapInPandas partial reduction, p·m + 2 partial
+sums per Arrow batch added up on the driver, with a plan that does not
+depend on beta — no shuffle, no collect of data rows.
 """
 
 from __future__ import annotations
@@ -230,517 +231,519 @@ def owl(x=None, y=None, *, df=None, feature_cols=None, label_col=None,
             "feature_names": [f"V{j+1}" for j in range(p_feat)],
         }
 
-    p_total = backend.p_total
-    n_lambda = p_feat * m
+    # release the persisted frame on every exit, an error included
+    try:
+        p_total = backend.p_total
+        n_lambda = p_feat * m
 
-    if screening is None:
-        # Strong-rule screening trades extra full-gradient KKT passes
-        # for smaller per-iteration subproblems. Locally that is nearly
-        # free (reference behavior, R/owl.R:283); on a cluster every
-        # KKT check is one more distributed pass, and with only a
-        # handful of features the subset savings can never repay it —
-        # the pass over p<=16 columns costs the same job as the pass
-        # over all of them. Auto mode screens only when the feature
-        # count makes pruning worthwhile; pass screening=True/False to
-        # force either.
-        screening = (df is None) or (p_feat > 16)
+        if screening is None:
+            # Strong-rule screening trades extra full-gradient KKT passes
+            # for smaller per-iteration subproblems. Locally that is nearly
+            # free (reference behavior, R/owl.R:283); on a cluster every
+            # KKT check is one more distributed pass, and with only a
+            # handful of features the subset savings can never repay it —
+            # the pass over p<=16 columns costs the same job as the pass
+            # over all of them. Auto mode screens only when the feature
+            # count makes pruning worthwhile; pass screening=True/False to
+            # force either.
+            screening = (df is None) or (p_feat > 16)
 
-    # -- defaults (R/owl.R:280-291) -----------------------------------------
-    if q is None:
-        q = 0.1 * min(1.0, n / p_feat)
-    if lambda_min_ratio is None:
-        lambda_min_ratio = 1e-2 if n < p_feat else 1e-4
-    if max_variables is None:
-        max_variables = n * m
+        # -- defaults (R/owl.R:280-291) -----------------------------------------
+        if q is None:
+            q = 0.1 * min(1.0, n / p_feat)
+        if lambda_min_ratio is None:
+            lambda_min_ratio = 1e-2 if n < p_feat else 1e-4
+        if max_variables is None:
+            max_variables = n * m
 
-    # -- lambda sequence ----------------------------------------------------
-    if isinstance(lam, str):
-        lambda_kind = lam
-        lambda_vec = lambda_sequence(lambda_kind, n, n_lambda, q=q)
-    else:
-        lambda_kind = "user"
-        lambda_vec = lambda_sequence("user", n, n_lambda, user_lambda=np.asarray(lam))
-        lambda_vec = lambda_vec * n  # reference convention (regularizationPath.h:54)
-
-    # -- solver routing (decided before the sigma grid so the gaussian
-    # Spark path can fuse lambda_max into its single sufficient-stats
-    # pass) --------------------------------------------------------------
-    # - gaussian with modest p: ADMM over the full Gram — O(1) data
-    #   passes for the whole path;
-    # - gaussian wide-p (full p x p Gram impractical): prox-Newton with
-    #   per-active-set Grams (active sets stay small via screening);
-    # - other families distributed: prox-Newton (one aggregation pass
-    #   per outer iteration — FISTA's per-iteration round trips are a
-    #   non-starter on a cluster); LocalBackend keeps reference-parity
-    #   FISTA.
-    is_gaussian = family == "gaussian"
-    # sufficient-stats ADMM whenever the p x p Gram is storable: at
-    # p = 2000 that is 32 MB driver-side — one data pass for the whole
-    # path. Beyond that, prox-Newton with per-active-set Grams.
-    use_admm = is_gaussian and (not isinstance(backend, SparkBackend) or p_total <= 2000)
-    use_prox_newton = isinstance(backend, SparkBackend) and not use_admm
-    gram_full = None
-    xty_full = None
-    yty = None
-
-    # -- sigma grid ---------------------------------------------------------
-    if use_admm and isinstance(backend, SparkBackend):
-        # ONE distributed pass covers gram + X'y + ||y||^2, and the
-        # gaussian lambda_max gradient |X^T y| is just the non-intercept
-        # rows of X'y — the whole remaining fit is driver-local.
-        if (gram_cache is not None and "gram" in gram_cache
-                and hasattr(backend, "xty_yty")):
-            # a sibling fit on the same design already paid the p^2
-            # Gram pass; xty_yty mirrors the fused pass's per-batch
-            # arithmetic, so these values are bitwise identical to the
-            # full gaussian_sufficient_stats run
-            gram_full = gram_cache["gram"]
-            xty_full, yty = backend.xty_yty()
+        # -- lambda sequence ----------------------------------------------------
+        if isinstance(lam, str):
+            lambda_kind = lam
+            lambda_vec = lambda_sequence(lambda_kind, n, n_lambda, q=q)
         else:
-            gram_full, xty_full, yty = backend.gaussian_sufficient_stats()
-            if gram_cache is not None:
-                # seed sibling fits: _accum_gram is the same closure
-                # gram() uses, so this matrix is bitwise what they
-                # would compute themselves
-                gram_cache.setdefault("gram", gram_full)
-        off = 1 if intercept else 0
-        lam_max_grad = np.abs(xty_full[off:, :]).ravel(order="F")
-    else:
-        lam_max_grad = backend.lambda_max_gradient()
-    sigma_max, auto_grid = sigma_grid(lam_max_grad, lambda_vec, n_sigma, lambda_min_ratio)
-    if sigma is None:
-        sigma_vec = auto_grid
-    else:
-        sigma_vec = np.atleast_1d(np.asarray(sigma, dtype=np.float64))
-        # user-specified sigma: never stop the path early (R/owl.R:301-307)
-        tol_dev_change = 0.0
-        tol_dev_ratio = 1.0
-        max_variables = (p_feat + int(intercept)) * m
-    n_sig = sigma_vec.size
+            lambda_kind = "user"
+            lambda_vec = lambda_sequence("user", n, n_lambda, user_lambda=np.asarray(lam))
+            lambda_vec = lambda_vec * n  # reference convention (regularizationPath.h:54)
 
-    # -- sufficient statistics for the gaussian/ADMM path -------------------
-    if use_admm and gram_full is None:
-        # local backend: gram/xty/yty are cheap numpy products
-        gram_full = backend.gram()
-        xty_full = backend.xty()
-        yty = _yty(backend)
-    elif use_prox_newton and p_total <= 2000 and (
-            is_gaussian
-            or (family in ("binomial", "multinomial")
-                and not pn_local_hessian(family, p_total * m))):
-        # the Gram is only consumed by the majorization strategies
-        # (gaussian quadratic model, binomial/multinomial Bohning
-        # bounds); narrow binomial and poisson refresh a local Hessian
-        # every iteration and would waste this pass
-        if gram_cache is not None and "gram" in gram_cache:
-            gram_full = gram_cache["gram"]
+        # -- solver routing (decided before the sigma grid so the gaussian
+        # Spark path can fuse lambda_max into its single sufficient-stats
+        # pass) --------------------------------------------------------------
+        # - gaussian with modest p: ADMM over the full Gram — O(1) data
+        #   passes for the whole path;
+        # - gaussian wide-p (full p x p Gram impractical): prox-Newton with
+        #   per-active-set Grams (active sets stay small via screening);
+        # - other families distributed: prox-Newton (one aggregation pass
+        #   per outer iteration — FISTA's per-iteration round trips are a
+        #   non-starter on a cluster); LocalBackend keeps reference-parity
+        #   FISTA.
+        is_gaussian = family == "gaussian"
+        # sufficient-stats ADMM whenever the p x p Gram is storable: at
+        # p = 2000 that is 32 MB driver-side — one data pass for the whole
+        # path. Beyond that, prox-Newton with per-active-set Grams.
+        use_admm = is_gaussian and (not isinstance(backend, SparkBackend) or p_total <= 2000)
+        use_prox_newton = isinstance(backend, SparkBackend) and not use_admm
+        gram_full = None
+        xty_full = None
+        yty = None
+
+        # -- sigma grid ---------------------------------------------------------
+        if use_admm and isinstance(backend, SparkBackend):
+            # ONE distributed pass covers gram + X'y + ||y||^2, and the
+            # gaussian lambda_max gradient |X^T y| is just the non-intercept
+            # rows of X'y — the whole remaining fit is driver-local.
+            if (gram_cache is not None and "gram" in gram_cache
+                    and hasattr(backend, "xty_yty")):
+                # a sibling fit on the same design already paid the p^2
+                # Gram pass; xty_yty mirrors the fused pass's per-batch
+                # arithmetic, so these values are bitwise identical to the
+                # full gaussian_sufficient_stats run
+                gram_full = gram_cache["gram"]
+                xty_full, yty = backend.xty_yty()
+            else:
+                gram_full, xty_full, yty = backend.gaussian_sufficient_stats()
+                if gram_cache is not None:
+                    # seed sibling fits: _accum_gram is the same closure
+                    # gram() uses, so this matrix is bitwise what they
+                    # would compute themselves
+                    gram_cache.setdefault("gram", gram_full)
+            off = 1 if intercept else 0
+            lam_max_grad = np.abs(xty_full[off:, :]).ravel(order="F")
         else:
+            lam_max_grad = backend.lambda_max_gradient()
+        sigma_max, auto_grid = sigma_grid(lam_max_grad, lambda_vec, n_sigma, lambda_min_ratio)
+        if sigma is None:
+            sigma_vec = auto_grid
+        else:
+            sigma_vec = np.atleast_1d(np.asarray(sigma, dtype=np.float64))
+            # user-specified sigma: never stop the path early (R/owl.R:301-307)
+            tol_dev_change = 0.0
+            tol_dev_ratio = 1.0
+            max_variables = (p_feat + int(intercept)) * m
+        n_sig = sigma_vec.size
+
+        # -- sufficient statistics for the gaussian/ADMM path -------------------
+        if use_admm and gram_full is None:
+            # local backend: gram/xty/yty are cheap numpy products
             gram_full = backend.gram()
-            if gram_cache is not None:
-                gram_cache["gram"] = gram_full
-
-    # -- null deviance ------------------------------------------------------
-    # primal at beta=0 is closed-form for every family (no data pass):
-    # gaussian 0.5*||y||^2, binomial n*log2, poisson n + sum lgamma(y+1),
-    # multinomial n*log(m+1) — src/owl.cpp:94-96 computes the same
-    # quantity with a data pass.
-    beta = np.zeros((p_total, m))
-    if use_admm:
-        null_deviance = yty
-    elif isinstance(backend, SparkBackend):
-        null_deviance = 2.0 * _spark_primal_at_zero(backend)
-    else:
-        null_deviance = 2.0 * backend.primal(beta)
-
-    # -- path loop (src/owl.cpp:146-364) ------------------------------------
-    betas = np.zeros((p_total, m, n_sig))
-    beta_prev = np.zeros((p_total, m))
-    if intercept and not use_admm:
-        # start the path at the NULL MODEL rather than beta=0: the
-        # intercept row is unpenalized, so (null intercept, 0) is the
-        # exact sigma_max solution, and for poisson with ybar >> 1 the
-        # intercept alone otherwise absorbs several cold-start
-        # prox-Newton iterations (each one distributed pass). Costs one
-        # tiny column-pruned agg (free on local backends). DELIBERATE
-        # deviation from the reference at the sigma_max path point: the
-        # reference's FISTA stops at beta=0 there because its duality
-        # gap |f-G| vanishes at any constant linear predictor with
-        # c=0 (family.h:141-156) — the emitted intercept 0 is an
-        # artifact, not the optimum; we emit the true intercept-only
-        # optimum (where the same gap is LEGITIMATELY zero). Interior
-        # path points converge to identical solutions either way.
-        # (ADMM gaussian is untouched: y is centered, the null
-        # intercept is exactly 0 already.)
-        beta_prev[0, :] = backend.null_intercepts()
-    warm_points: np.ndarray | None = None
-    if beta_init is not None:
-        # raw-unit warm start (see the docstring): invert _rescale per
-        # path point. Initialization only — every solve still runs to
-        # the same stopping criteria and fixed point either way.
-        bi = np.asarray(beta_init, dtype=np.float64)
-        if bi.ndim == 3:
-            warm_points = np.stack(
-                [_unrescale(bi[:, :, k], meta["x_center"], meta["x_scale"],
-                            meta["y_center"], meta["y_scale"], intercept)
-                 for k in range(bi.shape[2])], axis=2)
-            beta_prev = warm_points[:, :, 0].copy()
-        else:
-            beta_prev = _unrescale(
-                bi.reshape(p_total, m),
-                meta["x_center"], meta["x_scale"],
-                meta["y_center"], meta["y_scale"], intercept)
-    passes = np.zeros(n_sig, dtype=np.int64)
-    n_unique = np.zeros(n_sig, dtype=np.int64)
-    deviances: list[float] = []
-    deviance_ratios: list[float] = []
-    active_sets: list[np.ndarray] = []
-    violations_all: list[list[int]] = []
-    diag_rows: list[tuple] = []
-
-    active_set = np.arange(p_total, dtype=np.int64)
-    ever_active = np.array([0], dtype=np.int64) if intercept else np.array([], dtype=np.int64)
-    z = np.zeros((p_total, m))
-    u = np.zeros((p_total, m))
-    # True while z was just reset from beta_init and no solve has run
-    # from it: the next ADMM solve derives its dual from z (u=None)
-    dual_from_z = False
-    if beta_init is not None and use_admm:
-        # ADMM consensus warm start: at the optimum z == beta and
-        # rho * u == X'y - G beta, so a cold z (or a dual carried from
-        # elsewhere) under a warm beta would throw the first iterations
-        # away re-deriving them; the first solve takes the dual
-        # consistent with z
-        z = beta_prev.copy()
-        dual_from_z = True
-    screening_on = bool(screening)
-    full_admm_state: dict[str, Any] = {}
-    pn_caches: dict[tuple, dict] = {}  # (subset, lam_max) -> factorization
-    # kron-path eigensystems are lambda-INDEPENDENT (rho enters
-    # _kron_solve as a diagonal update), so they live under a
-    # subset-only key and survive lambda changes that evict pn_caches
-    # entries — the O(p^3) eigh of the active Gram runs once per
-    # distinct subset, not once per path point
-    kron_eig_caches: dict[bytes, tuple] = {}
-
-    def full_gradient(b: np.ndarray) -> np.ndarray:
-        if use_admm:
-            return gram_full @ b - xty_full  # driver-side, zero data passes
-        return backend.eval(b)[2]
-
-    def fit_subset(sub_idx: np.ndarray, lam_k: np.ndarray, start_beta: np.ndarray,
-                   init_eval: tuple | None = None) -> SolverResult:
-        """Fit on the rows in sub_idx (full space indices)."""
-        nonlocal z, u, dual_from_z
-        if use_admm:
-            gram_s = gram_full[np.ix_(sub_idx, sub_idx)]
-            xty_s = xty_full[sub_idx]
-            rho = None
-            if sub_idx.size > 48:
-                # wide subsets: a fresh eigvalsh per call is O(p^3);
-                # a deterministic power iteration on the subset Gram
-                # (a dozen O(p^2) matmuls) estimates eig_max well
-                # enough for the rho heuristic, which only steers the
-                # ADMM step size, not the fixed point
-                e = _power_eig_max(gram_s)
-                lmx = float(lam_k.max()) if lam_k.size else 0.0
-                rho = max((e ** (1.0 / 3.0)) * (lmx ** (2.0 / 3.0))
-                          if lmx > 0 else max(e, 1.0), 1e-12)
-            u_in = None if dual_from_z else u[sub_idx]
-            dual_from_z = False
-            res, z_s, u_s, _ = admm_gaussian(
-                gram_s, xty_s, start_beta[sub_idx], z[sub_idx], u_in,
-                lam_k, n=n, intercept=intercept, rho=rho,
-                max_passes=max_passes,
-                tol_abs=tol_abs, tol_rel=tol_rel, diagnostics=diagnostics)
-            z[sub_idx] = z_s
-            u[sub_idx] = u_s
-            # deviance from sufficient stats, summed over targets:
-            # ||Y-XB||_F^2 = yty - 2 tr(B'X'Y) + tr(B'GB)
-            B = res.beta
-            res.deviance = (yty - 2.0 * float(np.sum(B * xty_s))
-                            + float(np.sum(B * (gram_s @ B))))
-            return res
-        sub_backend = backend.subset(sub_idx)
-        sub_beta = start_beta[sub_idx]
-        if use_prox_newton:
-            if gram_full is not None:
-                gram_s = gram_full[np.ix_(sub_idx, sub_idx)]
-            elif pn_local_hessian(family, sub_idx.size * m):
-                gram_s = None  # local-Hessian strategy: never consumed
+            xty_full = backend.xty()
+            yty = _yty(backend)
+        elif use_prox_newton and p_total <= 2000 and (
+                is_gaussian
+                or (family in ("binomial", "multinomial")
+                    and not pn_local_hessian(family, p_total * m))):
+            # the Gram is only consumed by the majorization strategies
+            # (gaussian quadratic model, binomial/multinomial Bohning
+            # bounds); narrow binomial and poisson refresh a local Hessian
+            # every iteration and would waste this pass
+            if gram_cache is not None and "gram" in gram_cache:
+                gram_full = gram_cache["gram"]
             else:
-                gram_s = sub_backend.gram()
-            # fixed-Hessian strategies: the (H + rho I) inverse survives
-            # KKT re-entries via a (subset, lambda)-keyed cache, and for
-            # wide subsets rho preseeds from the full-Gram eigenvalue
-            # bound (eig of any principal submatrix <= eig of the full
-            # Gram) — no O(p^3) eigvalsh per solve
-            fixed_h = (family == "gaussian"
-                       or (family in ("binomial", "multinomial")
-                           and not pn_local_hessian(family,
-                                                    sub_idx.size * m)))
-            s_cache = None
-            if fixed_h:
-                # keyed on (subset, lambda): although the fixed Hessian
-                # itself is lambda-independent, the ADMM step size rho
-                # follows lam_max (rho ~ eig^(1/3) lam^(2/3)); an A/B
-                # with a subset-only key that pinned rho to the first
-                # path point made the wide binomial query 3.5x SLOWER —
-                # stale rho degrades the inner subproblem solutions and
-                # the outer loop pays in extra distributed passes. The
-                # per-point rebuild is one O(p^3) inverse (~30 ms at
-                # p=807), noise next to a single data pass.
-                key = (sub_idx.tobytes(),
-                       float(lam_k.max()) if lam_k.size else 0.0)
-                s_cache = pn_caches.setdefault(key, {})
-                # dense-Hinv entries (m == 1) hold (p*m)^2 inverses
-                # whose rho is baked in, which is why the key carries
-                # lam_max; kron-path entries (m > 1) hold (s_p, U, s_m,
-                # Q) eigensystems for which rho is a free diagonal
-                # update — those are seeded from the subset-only
-                # kron_eig_caches below so a subset reused across path
-                # points never re-runs the O(p^3) eigh. lam changes at
-                # every path point so old pn_caches keys never recur —
-                # keep only the most recent few (KKT re-entries reuse
-                # the newest)
-                while len(pn_caches) > 4:
-                    pn_caches.pop(next(iter(pn_caches)))
-                if m > 1:
-                    prior_eig = kron_eig_caches.get(sub_idx.tobytes())
-                    if prior_eig is not None:
-                        s_cache.setdefault("kron_eig", prior_eig)
-                if (gram_s is not None and sub_idx.size > 48
-                        and "rho" not in s_cache):
-                    # power-iteration eig estimate of the strategy's
-                    # fixed Hessian (see the ADMM branch note)
-                    scale_f = {"gaussian": 1.0, "binomial": 0.25,
-                               "multinomial": 0.5}[family]
-                    e = scale_f * _power_eig_max(gram_s)
-                    lmx = float(lam_k.max()) if lam_k.size else 0.0
-                    s_cache["rho"] = max(
-                        (e ** (1.0 / 3.0)) * (lmx ** (2.0 / 3.0))
-                        if lmx > 0 else max(e, 1.0), 1e-12)
-            res = prox_newton(sub_backend, sub_beta, lam_k, gram=gram_s,
-                              max_passes=max_passes, tol_rel_gap=tol_rel_gap,
-                              tol_infeas=tol_infeas, diagnostics=diagnostics,
-                              init_eval=init_eval, solver_cache=s_cache)
-            if s_cache is not None and "kron_eig" in s_cache:
-                kron_eig_caches[sub_idx.tobytes()] = s_cache["kron_eig"]
-                while len(kron_eig_caches) > 4:
-                    kron_eig_caches.pop(next(iter(kron_eig_caches)))
-            return res
-        return fista(sub_backend, sub_beta, lam_k, max_passes=max_passes,
-                     tol_rel_gap=tol_rel_gap, tol_infeas=tol_infeas,
-                     diagnostics=diagnostics)
+                gram_full = backend.gram()
+                if gram_cache is not None:
+                    gram_cache["gram"] = gram_full
 
-    # eval_cache: full-space (primal, dual, grad, hess) at a known beta —
-    # produced by the KKT check or the solver's final evaluation, consumed
-    # by the strong rule (gradient) AND as the next fit's first-iteration
-    # evaluation (init_eval). Every reuse is one full data pass saved.
-    eval_cache: dict | None = None
-
-    # -- fused warm-point prefetch (guide §2: shuffle/scan fewer times) --
-    # Per-point golden warm starts make every point's first evaluation a
-    # pass at a beta known BEFORE the loop runs, so all of them fuse into
-    # ONE distributed pass. Each per-beta result is computed by the exact
-    # closure a per-point pass would run, over the identical batch
-    # grouping, so the seeded eval_cache is bitwise what the solver (or
-    # the strong rule) would have computed itself. Screening-on fits
-    # evaluate in SUBSET space inside the solver, so there only the
-    # full-space screening gradient is substituted (primal=None keeps
-    # cache_slice from feeding the solver a differently-summed eval).
-    warm_prefetch: list[dict] | None = None
-    if (warm_points is not None and use_prox_newton
-            and isinstance(backend, SparkBackend)):
-        bs = [np.ascontiguousarray(warm_points[:, :, kk])
-              for kk in range(warm_points.shape[2])]
-        if screening_on:
-            warm_prefetch = [
-                {"grad": g, "hess": None, "primal": None, "dual": None}
-                for _, _, g in backend.eval_multi(bs)]
-        elif pn_local_hessian(family, p_total * m):
-            warm_prefetch = [
-                {"grad": g, "hess": H, "primal": pr, "dual": du}
-                for pr, du, g, H in backend.eval_hess_multi(bs)]
-        else:
-            warm_prefetch = [
-                {"grad": g, "hess": None, "primal": pr, "dual": du}
-                for pr, du, g in backend.eval_multi(bs)]
-
-    def full_eval(b: np.ndarray):
-        """(primal, dual, grad, hess|None) over ALL columns. ADMM: zero
-        data passes. Prox-Newton: eval_hess when the solver's local-
-        Hessian strategy will want H at this beta anyway, else eval."""
+        # -- null deviance ------------------------------------------------------
+        # primal at beta=0 is closed-form for every family (no data pass):
+        # gaussian 0.5*||y||^2, binomial n*log2, poisson n + sum lgamma(y+1),
+        # multinomial n*log(m+1) — src/owl.cpp:94-96 computes the same
+        # quantity with a data pass.
+        beta = np.zeros((p_total, m))
         if use_admm:
-            return None, None, gram_full @ b - xty_full, None
-        fam_name = backend.family.name
-        need_h = (use_prox_newton
-                  and pn_local_hessian(fam_name, p_total * m))
-        if need_h:
-            return backend.eval_hess(b)
-        pr, du, g = backend.eval(b)
-        return pr, du, g, None
+            null_deviance = yty
+        elif isinstance(backend, SparkBackend):
+            null_deviance = 2.0 * _spark_primal_at_zero(backend)
+        else:
+            null_deviance = 2.0 * backend.primal(beta)
 
-    def cache_slice(sub_idx: np.ndarray, start_beta: np.ndarray):
-        """init_eval for a subset fit starting at start_beta, when the
-        cache holds an evaluation at exactly that point (start_beta is
-        zero outside sub_idx, so the scalar primal/dual carry over)."""
-        if (eval_cache is None or eval_cache.get("primal") is None
-                or not np.array_equal(eval_cache["beta"], start_beta)):
-            return None
-        g = eval_cache["grad"][sub_idx, :]
-        H = eval_cache["hess"]
-        if H is not None:
-            idx = np.concatenate([kk * p_total + sub_idx for kk in range(m)])
-            H = H[np.ix_(idx, idx)]
-        return eval_cache["primal"], eval_cache["dual"], g, H
+        # -- path loop (src/owl.cpp:146-364) ------------------------------------
+        betas = np.zeros((p_total, m, n_sig))
+        beta_prev = np.zeros((p_total, m))
+        if intercept and not use_admm:
+            # start the path at the NULL MODEL rather than beta=0: the
+            # intercept row is unpenalized, so (null intercept, 0) is the
+            # exact sigma_max solution, and for poisson with ybar >> 1 the
+            # intercept alone otherwise absorbs several cold-start
+            # prox-Newton iterations (each one distributed pass). Costs one
+            # tiny column-pruned agg (free on local backends). DELIBERATE
+            # deviation from the reference at the sigma_max path point: the
+            # reference's FISTA stops at beta=0 there because its duality
+            # gap |f-G| vanishes at any constant linear predictor with
+            # c=0 (family.h:141-156) — the emitted intercept 0 is an
+            # artifact, not the optimum; we emit the true intercept-only
+            # optimum (where the same gap is LEGITIMATELY zero). Interior
+            # path points converge to identical solutions either way.
+            # (ADMM gaussian is untouched: y is centered, the null
+            # intercept is exactly 0 already.)
+            beta_prev[0, :] = backend.null_intercepts()
+        warm_points: np.ndarray | None = None
+        if beta_init is not None:
+            # raw-unit warm start (see the docstring): invert _rescale per
+            # path point. Initialization only — every solve still runs to
+            # the same stopping criteria and fixed point either way.
+            bi = np.asarray(beta_init, dtype=np.float64)
+            if bi.ndim == 3:
+                warm_points = np.stack(
+                    [_unrescale(bi[:, :, k], meta["x_center"], meta["x_scale"],
+                                meta["y_center"], meta["y_scale"], intercept)
+                     for k in range(bi.shape[2])], axis=2)
+                beta_prev = warm_points[:, :, 0].copy()
+            else:
+                beta_prev = _unrescale(
+                    bi.reshape(p_total, m),
+                    meta["x_center"], meta["x_scale"],
+                    meta["y_center"], meta["y_scale"], intercept)
+        passes = np.zeros(n_sig, dtype=np.int64)
+        n_unique = np.zeros(n_sig, dtype=np.int64)
+        deviances: list[float] = []
+        deviance_ratios: list[float] = []
+        active_sets: list[np.ndarray] = []
+        violations_all: list[list[int]] = []
+        diag_rows: list[tuple] = []
 
-    k = 0
-    while k < n_sig:
-        violations_k: list[int] = []
-        sig_k = float(sigma_vec[k])
-        if warm_points is not None and 0 < k < warm_points.shape[2]:
-            # per-point warm start: this point's own prior solution
-            # beats the predecessor's (see the beta_init docstring)
-            beta_prev = warm_points[:, :, k].copy()
+        active_set = np.arange(p_total, dtype=np.int64)
+        ever_active = np.array([0], dtype=np.int64) if intercept else np.array([], dtype=np.int64)
+        z = np.zeros((p_total, m))
+        u = np.zeros((p_total, m))
+        # True while z was just reset from beta_init and no solve has run
+        # from it: the next ADMM solve derives its dual from z (u=None)
+        dual_from_z = False
+        if beta_init is not None and use_admm:
+            # ADMM consensus warm start: at the optimum z == beta and
+            # rho * u == X'y - G beta, so a cold z (or a dual carried from
+            # elsewhere) under a warm beta would throw the first iterations
+            # away re-deriving them; the first solve takes the dual
+            # consistent with z
+            z = beta_prev.copy()
+            dual_from_z = True
+        screening_on = bool(screening)
+        full_admm_state: dict[str, Any] = {}
+        pn_caches: dict[tuple, dict] = {}  # (subset, lam_max) -> factorization
+        # kron-path eigensystems are lambda-INDEPENDENT (rho enters
+        # _kron_solve as a diagonal update), so they live under a
+        # subset-only key and survive lambda changes that evict pn_caches
+        # entries — the O(p^3) eigh of the active Gram runs once per
+        # distinct subset, not once per path point
+        kron_eig_caches: dict[bytes, tuple] = {}
+
+        def full_gradient(b: np.ndarray) -> np.ndarray:
             if use_admm:
-                z = beta_prev.copy()
-                dual_from_z = True
-        if (warm_prefetch is not None and k < len(warm_prefetch)
-                and np.array_equal(beta_prev, warm_points[:, :, k])):
-            # this point's first evaluation came from the fused pass
-            eval_cache = {"beta": beta_prev.copy(), **warm_prefetch[k]}
+                return gram_full @ b - xty_full  # driver-side, zero data passes
+            return backend.eval(b)[2]
 
-        strong = None
-        if screening_on:
-            if eval_cache is not None and np.array_equal(eval_cache["beta"], beta_prev):
-                grad_prev = eval_cache["grad"]
+        def fit_subset(sub_idx: np.ndarray, lam_k: np.ndarray, start_beta: np.ndarray,
+                       init_eval: tuple | None = None) -> SolverResult:
+            """Fit on the rows in sub_idx (full space indices)."""
+            nonlocal z, u, dual_from_z
+            if use_admm:
+                gram_s = gram_full[np.ix_(sub_idx, sub_idx)]
+                xty_s = xty_full[sub_idx]
+                rho = None
+                if sub_idx.size > 48:
+                    # wide subsets: a fresh eigvalsh per call is O(p^3);
+                    # a deterministic power iteration on the subset Gram
+                    # (a dozen O(p^2) matmuls) estimates eig_max well
+                    # enough for the rho heuristic, which only steers the
+                    # ADMM step size, not the fixed point
+                    e = _power_eig_max(gram_s)
+                    lmx = float(lam_k.max()) if lam_k.size else 0.0
+                    rho = max((e ** (1.0 / 3.0)) * (lmx ** (2.0 / 3.0))
+                              if lmx > 0 else max(e, 1.0), 1e-12)
+                u_in = None if dual_from_z else u[sub_idx]
+                dual_from_z = False
+                res, z_s, u_s, _ = admm_gaussian(
+                    gram_s, xty_s, start_beta[sub_idx], z[sub_idx], u_in,
+                    lam_k, n=n, intercept=intercept, rho=rho,
+                    max_passes=max_passes,
+                    tol_abs=tol_abs, tol_rel=tol_rel, diagnostics=diagnostics)
+                z[sub_idx] = z_s
+                u[sub_idx] = u_s
+                # deviance from sufficient stats, summed over targets:
+                # ||Y-XB||_F^2 = yty - 2 tr(B'X'Y) + tr(B'GB)
+                B = res.beta
+                res.deviance = (yty - 2.0 * float(np.sum(B * xty_s))
+                                + float(np.sum(B * (gram_s @ B))))
+                return res
+            sub_backend = backend.subset(sub_idx)
+            sub_beta = start_beta[sub_idx]
+            if use_prox_newton:
+                if gram_full is not None:
+                    gram_s = gram_full[np.ix_(sub_idx, sub_idx)]
+                elif pn_local_hessian(family, sub_idx.size * m):
+                    gram_s = None  # local-Hessian strategy: never consumed
+                else:
+                    gram_s = sub_backend.gram()
+                # fixed-Hessian strategies: the (H + rho I) inverse survives
+                # KKT re-entries via a (subset, lambda)-keyed cache, and for
+                # wide subsets rho preseeds from the full-Gram eigenvalue
+                # bound (eig of any principal submatrix <= eig of the full
+                # Gram) — no O(p^3) eigvalsh per solve
+                fixed_h = (family == "gaussian"
+                           or (family in ("binomial", "multinomial")
+                               and not pn_local_hessian(family,
+                                                        sub_idx.size * m)))
+                s_cache = None
+                if fixed_h:
+                    # keyed on (subset, lambda): although the fixed Hessian
+                    # itself is lambda-independent, the ADMM step size rho
+                    # follows lam_max (rho ~ eig^(1/3) lam^(2/3)); an A/B
+                    # with a subset-only key that pinned rho to the first
+                    # path point made the wide binomial query 3.5x SLOWER —
+                    # stale rho degrades the inner subproblem solutions and
+                    # the outer loop pays in extra distributed passes. The
+                    # per-point rebuild is one O(p^3) inverse (~30 ms at
+                    # p=807), noise next to a single data pass.
+                    key = (sub_idx.tobytes(),
+                           float(lam_k.max()) if lam_k.size else 0.0)
+                    s_cache = pn_caches.setdefault(key, {})
+                    # dense-Hinv entries (m == 1) hold (p*m)^2 inverses
+                    # whose rho is baked in, which is why the key carries
+                    # lam_max; kron-path entries (m > 1) hold (s_p, U, s_m,
+                    # Q) eigensystems for which rho is a free diagonal
+                    # update — those are seeded from the subset-only
+                    # kron_eig_caches below so a subset reused across path
+                    # points never re-runs the O(p^3) eigh. lam changes at
+                    # every path point so old pn_caches keys never recur —
+                    # keep only the most recent few (KKT re-entries reuse
+                    # the newest)
+                    while len(pn_caches) > 4:
+                        pn_caches.pop(next(iter(pn_caches)))
+                    if m > 1:
+                        prior_eig = kron_eig_caches.get(sub_idx.tobytes())
+                        if prior_eig is not None:
+                            s_cache.setdefault("kron_eig", prior_eig)
+                    if (gram_s is not None and sub_idx.size > 48
+                            and "rho" not in s_cache):
+                        # power-iteration eig estimate of the strategy's
+                        # fixed Hessian (see the ADMM branch note)
+                        scale_f = {"gaussian": 1.0, "binomial": 0.25,
+                                   "multinomial": 0.5}[family]
+                        e = scale_f * _power_eig_max(gram_s)
+                        lmx = float(lam_k.max()) if lam_k.size else 0.0
+                        s_cache["rho"] = max(
+                            (e ** (1.0 / 3.0)) * (lmx ** (2.0 / 3.0))
+                            if lmx > 0 else max(e, 1.0), 1e-12)
+                res = prox_newton(sub_backend, sub_beta, lam_k, gram=gram_s,
+                                  max_passes=max_passes, tol_rel_gap=tol_rel_gap,
+                                  tol_infeas=tol_infeas, diagnostics=diagnostics,
+                                  init_eval=init_eval, solver_cache=s_cache)
+                if s_cache is not None and "kron_eig" in s_cache:
+                    kron_eig_caches[sub_idx.tobytes()] = s_cache["kron_eig"]
+                    while len(kron_eig_caches) > 4:
+                        kron_eig_caches.pop(next(iter(kron_eig_caches)))
+                return res
+            return fista(sub_backend, sub_beta, lam_k, max_passes=max_passes,
+                         tol_rel_gap=tol_rel_gap, tol_infeas=tol_infeas,
+                         diagnostics=diagnostics)
+
+        # eval_cache: full-space (primal, dual, grad, hess) at a known beta —
+        # produced by the KKT check or the solver's final evaluation, consumed
+        # by the strong rule (gradient) AND as the next fit's first-iteration
+        # evaluation (init_eval). Every reuse is one full data pass saved.
+        eval_cache: dict | None = None
+
+        # -- fused warm-point prefetch (guide §2: shuffle/scan fewer times) --
+        # Per-point golden warm starts make every point's first evaluation a
+        # pass at a beta known BEFORE the loop runs, so all of them fuse into
+        # ONE distributed pass. Each per-beta result is computed by the exact
+        # closure a per-point pass would run, over the identical batch
+        # grouping, so the seeded eval_cache is bitwise what the solver (or
+        # the strong rule) would have computed itself. Screening-on fits
+        # evaluate in SUBSET space inside the solver, so there only the
+        # full-space screening gradient is substituted (primal=None keeps
+        # cache_slice from feeding the solver a differently-summed eval).
+        warm_prefetch: list[dict] | None = None
+        if (warm_points is not None and use_prox_newton
+                and isinstance(backend, SparkBackend)):
+            bs = [np.ascontiguousarray(warm_points[:, :, kk])
+                  for kk in range(warm_points.shape[2])]
+            if screening_on:
+                warm_prefetch = [
+                    {"grad": g, "hess": None, "primal": None, "dual": None}
+                    for _, _, g in backend.eval_multi(bs)]
+            elif pn_local_hessian(family, p_total * m):
+                warm_prefetch = [
+                    {"grad": g, "hess": H, "primal": pr, "dual": du}
+                    for pr, du, g, H in backend.eval_hess_multi(bs)]
             else:
-                grad_prev = full_gradient(beta_prev)
-            sigma_prev = sigma_max if k == 0 else float(sigma_vec[k - 1])
-            strong = strong_set(grad_prev, lambda_vec * sig_k,
-                                lambda_vec * sigma_prev, intercept)
-            prev_nz = np.flatnonzero(np.any(beta_prev != 0, axis=1))
-            ever_active = set_union(ever_active, prev_nz)
-            active_set = ever_active.copy()
+                warm_prefetch = [
+                    {"grad": g, "hess": None, "primal": pr, "dual": du}
+                    for pr, du, g in backend.eval_multi(bs)]
 
-        if active_set.size == p_total or not screening_on:
-            screening_on = False
-            active_set = np.arange(p_total, dtype=np.int64)
-            res = fit_subset(active_set, lambda_vec * sig_k, beta_prev,
-                             init_eval=cache_slice(active_set, beta_prev))
-            beta = np.zeros((p_total, m))
-            beta[active_set] = res.beta.reshape(active_set.size, m)
-            passes[k] = res.passes
-            # solver's final evaluation covers the full space: feeds the
-            # next path point's warm chain directly
-            eval_cache = None if res.grad is None else {
-                "beta": beta.copy(), "grad": res.grad.reshape(p_total, m),
-                "hess": res.hess, "primal": res.primal, "dual": res.dual}
-        else:
-            start = beta_prev
-            while True:
-                if active_set.size == 0:
-                    beta = np.zeros((p_total, m))
-                    # deviance at beta=0 IS the null deviance
-                    res = SolverResult(beta.copy(), 0, deviance=null_deviance)
-                else:
-                    n_active_pen = (active_set.size - int(intercept)) * m
-                    lam_k = (lambda_vec[:n_active_pen] * sig_k)
-                    res = fit_subset(active_set, lam_k, start,
-                                     init_eval=cache_slice(active_set, start))
-                    beta = np.zeros((p_total, m))
-                    beta[active_set] = res.beta.reshape(active_set.size, m)
-                    passes[k] = res.passes
+        def full_eval(b: np.ndarray):
+            """(primal, dual, grad, hess|None) over ALL columns. ADMM: zero
+            data passes. Prox-Newton: eval_hess when the solver's local-
+            Hessian strategy will want H at this beta anyway, else eval."""
+            if use_admm:
+                return None, None, gram_full @ b - xty_full, None
+            fam_name = backend.family.name
+            need_h = (use_prox_newton
+                      and pn_local_hessian(fam_name, p_total * m))
+            if need_h:
+                return backend.eval_hess(b)
+            pr, du, g = backend.eval(b)
+            return pr, du, g, None
 
-                if active_set.size == p_total and res.grad is not None:
-                    # the solver's final evaluation already produced the
-                    # gradient over ALL columns — no extra KKT pass
-                    grad = res.grad.reshape(p_total, m)
-                    eval_cache = {"beta": beta.copy(), "grad": grad,
-                                  "hess": res.hess, "primal": res.primal,
-                                  "dual": res.dual}
+        def cache_slice(sub_idx: np.ndarray, start_beta: np.ndarray):
+            """init_eval for a subset fit starting at start_beta, when the
+            cache holds an evaluation at exactly that point (start_beta is
+            zero outside sub_idx, so the scalar primal/dual carry over)."""
+            if (eval_cache is None or eval_cache.get("primal") is None
+                    or not np.array_equal(eval_cache["beta"], start_beta)):
+                return None
+            g = eval_cache["grad"][sub_idx, :]
+            H = eval_cache["hess"]
+            if H is not None:
+                idx = np.concatenate([kk * p_total + sub_idx for kk in range(m)])
+                H = H[np.ix_(idx, idx)]
+            return eval_cache["primal"], eval_cache["dual"], g, H
+
+        k = 0
+        while k < n_sig:
+            violations_k: list[int] = []
+            sig_k = float(sigma_vec[k])
+            if warm_points is not None and 0 < k < warm_points.shape[2]:
+                # per-point warm start: this point's own prior solution
+                # beats the predecessor's (see the beta_init docstring)
+                beta_prev = warm_points[:, :, k].copy()
+                if use_admm:
+                    z = beta_prev.copy()
+                    dual_from_z = True
+            if (warm_prefetch is not None and k < len(warm_prefetch)
+                    and np.array_equal(beta_prev, warm_points[:, :, k])):
+                # this point's first evaluation came from the fused pass
+                eval_cache = {"beta": beta_prev.copy(), **warm_prefetch[k]}
+
+            strong = None
+            if screening_on:
+                if eval_cache is not None and np.array_equal(eval_cache["beta"], beta_prev):
+                    grad_prev = eval_cache["grad"]
                 else:
-                    pr_f, du_f, grad, H_f = full_eval(beta)
-                    eval_cache = {"beta": beta.copy(), "grad": grad,
-                                  "hess": H_f, "primal": pr_f, "dual": du_f}
-                possible = kkt_check(grad, beta, lambda_vec * sig_k, tol_infeas, intercept)
-                strong_failures = set_intersect(possible, strong)
-                check_failures = set_diff(strong_failures, active_set)
-                kkt_violation = check_failures.size > 0
-                violations_k.append(int(check_failures.size))
-                if not kkt_violation:
-                    check_failures = set_diff(possible, active_set)
+                    grad_prev = full_gradient(beta_prev)
+                sigma_prev = sigma_max if k == 0 else float(sigma_vec[k - 1])
+                strong = strong_set(grad_prev, lambda_vec * sig_k,
+                                    lambda_vec * sigma_prev, intercept)
+                prev_nz = np.flatnonzero(np.any(beta_prev != 0, axis=1))
+                ever_active = set_union(ever_active, prev_nz)
+                active_set = ever_active.copy()
+
+            if active_set.size == p_total or not screening_on:
+                screening_on = False
+                active_set = np.arange(p_total, dtype=np.int64)
+                res = fit_subset(active_set, lambda_vec * sig_k, beta_prev,
+                                 init_eval=cache_slice(active_set, beta_prev))
+                beta = np.zeros((p_total, m))
+                beta[active_set] = res.beta.reshape(active_set.size, m)
+                passes[k] = res.passes
+                # solver's final evaluation covers the full space: feeds the
+                # next path point's warm chain directly
+                eval_cache = None if res.grad is None else {
+                    "beta": beta.copy(), "grad": res.grad.reshape(p_total, m),
+                    "hess": res.hess, "primal": res.primal, "dual": res.dual}
+            else:
+                start = beta_prev
+                while True:
+                    if active_set.size == 0:
+                        beta = np.zeros((p_total, m))
+                        # deviance at beta=0 IS the null deviance
+                        res = SolverResult(beta.copy(), 0, deviance=null_deviance)
+                    else:
+                        n_active_pen = (active_set.size - int(intercept)) * m
+                        lam_k = (lambda_vec[:n_active_pen] * sig_k)
+                        res = fit_subset(active_set, lam_k, start,
+                                         init_eval=cache_slice(active_set, start))
+                        beta = np.zeros((p_total, m))
+                        beta[active_set] = res.beta.reshape(active_set.size, m)
+                        passes[k] = res.passes
+
+                    if active_set.size == p_total and res.grad is not None:
+                        # the solver's final evaluation already produced the
+                        # gradient over ALL columns — no extra KKT pass
+                        grad = res.grad.reshape(p_total, m)
+                        eval_cache = {"beta": beta.copy(), "grad": grad,
+                                      "hess": res.hess, "primal": res.primal,
+                                      "dual": res.dual}
+                    else:
+                        pr_f, du_f, grad, H_f = full_eval(beta)
+                        eval_cache = {"beta": beta.copy(), "grad": grad,
+                                      "hess": H_f, "primal": pr_f, "dual": du_f}
+                    possible = kkt_check(grad, beta, lambda_vec * sig_k, tol_infeas, intercept)
+                    strong_failures = set_intersect(possible, strong)
+                    check_failures = set_diff(strong_failures, active_set)
                     kkt_violation = check_failures.size > 0
                     violations_k.append(int(check_failures.size))
-                active_set = set_union(check_failures, active_set)
-                if not kkt_violation:
+                    if not kkt_violation:
+                        check_failures = set_diff(possible, active_set)
+                        kkt_violation = check_failures.size > 0
+                        violations_k.append(int(check_failures.size))
+                    active_set = set_union(check_failures, active_set)
+                    if not kkt_violation:
+                        break
+
+            # bookkeeping (src/owl.cpp:314-359)
+            deviance = res.deviance
+            deviance_ratio = 1.0 - deviance / null_deviance
+            deviances.append(deviance)
+            deviance_ratios.append(deviance_ratio)
+            betas[:, :, k] = beta
+            beta_prev = beta.copy()
+            active_sets.append(active_set.copy())
+            violations_all.append(violations_k)
+            n_coefs = int(np.sum(np.any(beta != 0, axis=1)))
+            nz = np.abs(beta[beta != 0])
+            n_unique[k] = np.unique(nz).size
+            if diagnostics and res.primals:
+                for it, (pr, du, tm) in enumerate(zip(res.primals, res.duals, res.time)):
+                    diag_rows.append((k, it, tm, pr, du))
+
+            if n_coefs > 0 and k > 0:
+                dev_change = abs((deviances[k - 1] - deviance) / deviances[k - 1]) \
+                    if deviances[k - 1] != 0 else 0.0
+                if dev_change < tol_dev_change or deviance_ratio > tol_dev_ratio:
+                    k += 1
                     break
-
-        # bookkeeping (src/owl.cpp:314-359)
-        deviance = res.deviance
-        deviance_ratio = 1.0 - deviance / null_deviance
-        deviances.append(deviance)
-        deviance_ratios.append(deviance_ratio)
-        betas[:, :, k] = beta
-        beta_prev = beta.copy()
-        active_sets.append(active_set.copy())
-        violations_all.append(violations_k)
-        n_coefs = int(np.sum(np.any(beta != 0, axis=1)))
-        nz = np.abs(beta[beta != 0])
-        n_unique[k] = np.unique(nz).size
-        if diagnostics and res.primals:
-            for it, (pr, du, tm) in enumerate(zip(res.primals, res.duals, res.time)):
-                diag_rows.append((k, it, tm, pr, du))
-
-        if n_coefs > 0 and k > 0:
-            dev_change = abs((deviances[k - 1] - deviance) / deviances[k - 1]) \
-                if deviances[k - 1] != 0 else 0.0
-            if dev_change < tol_dev_change or deviance_ratio > tol_dev_ratio:
-                k += 1
+            if n_unique[k] > max_variables:
                 break
-        if n_unique[k] > max_variables:
-            break
-        k += 1
+            k += 1
 
-    K = max(k, 1)
-    betas = betas[:, :, :K]
-    sigma_out = sigma_vec[:K]
-    passes = passes[:K]
-    n_unique = n_unique[:K]
+        K = max(k, 1)
+        betas = betas[:, :, :K]
+        sigma_out = sigma_vec[:K]
+        passes = passes[:K]
+        n_unique = n_unique[:K]
 
-    # -- rescale to original units (src/rescale.h:8-31) ---------------------
-    betas = _rescale(betas, meta["x_center"], meta["x_scale"],
-                     meta["y_center"], meta["y_scale"], intercept)
+        # -- rescale to original units (src/rescale.h:8-31) ---------------------
+        betas = _rescale(betas, meta["x_center"], meta["x_scale"],
+                         meta["y_center"], meta["y_scale"], intercept)
 
-    if isinstance(backend, SparkBackend):
-        backend.unpersist()
-
-    return OwlFit(
-        coefficients=betas,
-        sigma=sigma_out,
-        lambda_=lambda_vec / n,
-        family=family,
-        intercept=intercept,
-        class_names=meta.get("class_names"),
-        feature_names=meta.get("feature_names", [f"V{j+1}" for j in range(p_feat)]),
-        passes=passes,
-        active_sets=active_sets,
-        n_unique=n_unique,
-        deviance_ratio=np.asarray(deviance_ratios[:K]),
-        null_deviance=null_deviance,
-        violations=violations_all,
-        diagnostics=diag_rows if diagnostics else None,
-        meta={**meta, "sigma_max": sigma_max, "n": n,
-              # enough of the call to reproduce it — consumed by
-              # coef(..., exact=True) refits (R/coef.R:40-42)
-              "fit_options": {
-                  "family": family, "intercept": intercept, "center": center,
-                  "scale": scale, "lam": lam, "q": q,
-                  "tol_abs": tol_abs, "tol_rel": tol_rel,
-                  "tol_rel_gap": tol_rel_gap, "tol_infeas": tol_infeas,
-                  "max_passes": max_passes, "screening": screening,
-              }},
-    )
+        return OwlFit(
+            coefficients=betas,
+            sigma=sigma_out,
+            lambda_=lambda_vec / n,
+            family=family,
+            intercept=intercept,
+            class_names=meta.get("class_names"),
+            feature_names=meta.get("feature_names", [f"V{j+1}" for j in range(p_feat)]),
+            passes=passes,
+            active_sets=active_sets,
+            n_unique=n_unique,
+            deviance_ratio=np.asarray(deviance_ratios[:K]),
+            null_deviance=null_deviance,
+            violations=violations_all,
+            diagnostics=diag_rows if diagnostics else None,
+            meta={**meta, "sigma_max": sigma_max, "n": n,
+                  # enough of the call to reproduce it — consumed by
+                  # coef(..., exact=True) refits (R/coef.R:40-42)
+                  "fit_options": {
+                      "family": family, "intercept": intercept, "center": center,
+                      "scale": scale, "lam": lam, "q": q,
+                      "tol_abs": tol_abs, "tol_rel": tol_rel,
+                      "tol_rel_gap": tol_rel_gap, "tol_infeas": tol_infeas,
+                      "max_passes": max_passes, "screening": screening,
+                  }},
+        )
+    finally:
+        if isinstance(backend, SparkBackend):
+            backend.unpersist()
 
 
 def _power_eig_max(G: np.ndarray, iters: int = 16) -> float:

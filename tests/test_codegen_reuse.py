@@ -75,3 +75,30 @@ def test_third_call_compiles_nothing(rounds, op):
     per_call, _, _ = rounds
     assert per_call[op][0] > 0
     assert per_call[op][2] == 0, per_call[op]
+
+
+def test_beta_changes_compile_nothing(spark):
+    """A dense backend's beta passes keep one plan whatever beta is, so
+    after one warm pass, passes at new betas compile no class."""
+    import numpy as np
+    import pandas as pd
+
+    from golem_spark.backends import build_spark_backend
+    from tests.conftest import random_problem
+
+    x, y, _ = random_problem(n=2000, p=30, response="binomial", seed=41)
+    cols = {f"x{j}": x[:, j] for j in range(x.shape[1])}
+    cols["label"] = y
+    be, _ = build_spark_backend(spark.createDataFrame(pd.DataFrame(cols)),
+                                list(cols)[:-1], "label", "binomial")
+    try:
+        rng = np.random.default_rng(5)
+        be.eval(np.zeros((be.p_total, be.m)))
+        compiled = []
+        for _ in range(3):
+            c = codegen_compile_count(spark)
+            be.eval(rng.standard_normal((be.p_total, be.m)) * 0.1)
+            compiled.append(codegen_compile_count(spark) - c)
+        assert compiled == [0, 0, 0], compiled
+    finally:
+        be.unpersist()

@@ -37,18 +37,21 @@ def test_small_dim_join_broadcasts(spark, tables):
     assert "BroadcastHashJoin" in _plan(q)
 
 
-def test_backend_agg_has_partial_aggregation(spark, tables):
+def test_backend_eval_is_one_map_in_pandas(spark, tables):
+    """A beta pass is one local compute per batch and one reduce on the
+    driver: a single MapInPandas over the cached frame, with no shuffle
+    and no Catalyst aggregation."""
     from golem_spark.backends import build_spark_backend
 
     be, _ = build_spark_backend(
         tables["lineitem"], ["l_extendedprice", "l_discount", "l_tax"],
         "l_quantity", "gaussian")
     try:
-        primal, dual, _ = be._family_exprs(be._lp_exprs(np.ones((4, 1))))
-        plan = _plan(be.df.agg(primal.alias("p"), dual.alias("d")))
-        # partial (map-side) + final HashAggregate, single-row exchange only
-        assert plan.count("HashAggregate") == 2
-        assert "SinglePartition" in plan
+        batch, _ = be._eval_closure(np.ones((4, 1)))
+        plan = _plan(be._map_partials(be.df, batch))
+        assert plan.count("MapInPandas") == 1
+        assert "Exchange" not in plan
+        assert "HashAggregate" not in plan
     finally:
         be.unpersist()
 

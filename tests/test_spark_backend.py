@@ -1,6 +1,6 @@
 """Metamorphic: the distributed SparkBackend produces the same fits as
 the LocalBackend (same operator contract, different execution). This is
-the core 100 TB claim — data-sized work as Spark aggregations only."""
+the core 100 TB claim — data-sized work as Spark passes only."""
 
 import numpy as np
 import pandas as pd
@@ -65,6 +65,40 @@ def test_fused_lambda_max_gradient_equals_scan(spark):
                                        rtol=1e-12, err_msg=fam)
         finally:
             backend.unpersist()
+
+
+@pytest.mark.parametrize("layout", ["dense", "sparse"])
+def test_owl_releases_persisted_frame_on_error(spark, monkeypatch, layout):
+    """A df-mode fit that raises after its backend was built must not
+    leave the backend's frame in the session's CacheManager. The frame
+    is never materialized before the error, so getPersistentRDDs() would
+    not show it; DataFrame.storageLevel asks the CacheManager."""
+    from pyspark.sql import functions as F
+
+    x, y, _ = random_problem(n=120, p=2, response="binomial", seed=29)
+    df, feats = _to_spark(spark, x, y)
+    if layout == "dense":
+        kwargs = {"feature_cols": feats}
+    else:
+        df = df.select(F.array(F.lit(0), F.lit(1)).alias("idx"),
+                       F.array(*[F.col(c) for c in feats]).alias("val"),
+                       "label")
+        kwargs = {"sparse_features": ("idx", "val"), "sparse_p": 2}
+    persisted = []
+    orig = type(df).persist
+
+    def spy(self, *a, **kw):
+        persisted.append(self)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(type(df), "persist", spy)
+    with pytest.raises(ValueError, match="user lambda length 3"):
+        owl(df=df, label_col="label", family="binomial",
+            lam=[3.0, 2.0, 1.0], **kwargs)
+    assert persisted, "the backend build persisted nothing"
+    for frame in persisted:
+        assert not frame.storageLevel.useMemory
+        assert not frame.storageLevel.useDisk
 
 
 def test_grouped_stats_rejects_nulls(spark):

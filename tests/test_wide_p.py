@@ -1,13 +1,12 @@
-"""Wide-p (Arrow-batched) backend: the scale path for p beyond what
-Catalyst expression lists handle. Metamorphic: arrow == expression ==
-local."""
+"""Dense distributed backend: its Arrow partial-reduction passes at
+narrow and wide p. Metamorphic: distributed == numpy reference ==
+local fit."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
-from golem_spark.backends import ArrowSparkBackend, SparkBackend, build_spark_backend
-from golem_spark.families import get_family
+from golem_spark.backends import LocalBackend, SparkBackend, build_spark_backend
 from golem_spark.path import owl
 from tests.conftest import random_problem
 
@@ -18,41 +17,55 @@ def _to_spark(spark, x, y):
     return spark.createDataFrame(pd.DataFrame(cols)), [f"x{j}" for j in range(x.shape[1])]
 
 
-def test_arrow_backend_matches_expression_backend(spark):
+def _local_reference(be: SparkBackend) -> LocalBackend:
+    """LocalBackend over the backend's own standardized, encoded frame,
+    collected to the driver: the numpy reference for every pass."""
+    pdf = be.df.toPandas()
+    x = pdf[be.feat_cols].to_numpy(dtype=np.float64)
+    if be.intercept:
+        x = np.hstack([np.ones((x.shape[0], 1)), x])
+    return LocalBackend(x, pdf[be.y_cols].to_numpy(dtype=np.float64),
+                        be.family, be.intercept)
+
+
+def test_spark_backend_matches_local_backend(spark):
     x, y, _ = random_problem(n=150, p=6, response="binomial", seed=60)
     df, feats = _to_spark(spark, x, y)
-    be_expr, _ = build_spark_backend(df, feats, "label", "binomial")
-    be_arrow = ArrowSparkBackend(be_expr.df, be_expr.feat_cols, be_expr.y_cols,
-                                 get_family("binomial"), True, be_expr.n,
-                                 persist=False)
-    beta = np.linspace(-0.5, 0.5, 7).reshape(7, 1)
-    p1, d1, g1 = be_expr.eval(beta)
-    p2, d2, g2 = be_arrow.eval(beta)
-    assert abs(p1 - p2) < 1e-8 * max(1, abs(p1))
-    assert abs(d1 - d2) < 1e-6 * max(1, abs(d1))
-    np.testing.assert_allclose(g1, g2, rtol=1e-9, atol=1e-9)
-    np.testing.assert_allclose(be_expr.gram(), be_arrow.gram(), rtol=1e-9, atol=1e-9)
-    ph1, dh1, gh1, H1 = be_expr._eval_hess_expr(beta)
-    ph2, dh2, gh2, H2 = be_arrow.eval_hess(beta)
-    np.testing.assert_allclose(H1, H2, rtol=1e-9, atol=1e-9)
-    be_expr.unpersist()
+    be, _ = build_spark_backend(df, feats, "label", "binomial")
+    try:
+        ref = _local_reference(be)
+        beta = np.linspace(-0.5, 0.5, 7).reshape(7, 1)
+        p1, d1, g1 = ref.eval(beta)
+        p2, d2, g2 = be.eval(beta)
+        assert abs(p1 - p2) < 1e-8 * max(1, abs(p1))
+        assert abs(d1 - d2) < 1e-6 * max(1, abs(d1))
+        np.testing.assert_allclose(g1, g2, rtol=1e-9, atol=1e-9)
+        np.testing.assert_allclose(ref.gram(), be.gram(), rtol=1e-9, atol=1e-9)
+        _, _, _, H1 = ref.eval_hess(beta)
+        _, _, _, H2 = be.eval_hess(beta)
+        np.testing.assert_allclose(H1, H2, rtol=1e-9, atol=1e-9)
+    finally:
+        be.unpersist()
 
 
-def test_multinomial_hess_arrow_matches_expression(spark):
+def test_multinomial_hess_matches_local(spark):
     rng = np.random.RandomState(63)
     x = rng.randn(200, 4)
     y = rng.randint(0, 3, size=200)  # 3 classes
     df, feats = _to_spark(spark, x, y)
     be, _ = build_spark_backend(df, feats, "label", "multinomial")
-    m = be.m
-    beta = np.linspace(-0.3, 0.3, be.p_total * m).reshape(be.p_total, m)
-    p1, d1, g1, H1 = be._eval_hess_expr(beta)
-    p2, d2, g2, H2 = be.eval_hess(beta)  # Arrow route
-    assert abs(p1 - p2) < 1e-8 * max(1, abs(p1))
-    assert abs(d1 - d2) < 1e-6 * max(1, abs(d1))
-    np.testing.assert_allclose(g1, g2, rtol=1e-9, atol=1e-9)
-    np.testing.assert_allclose(H1, H2, rtol=1e-9, atol=1e-9)
-    be.unpersist()
+    try:
+        ref = _local_reference(be)
+        m = be.m
+        beta = np.linspace(-0.3, 0.3, be.p_total * m).reshape(be.p_total, m)
+        p1, d1, g1, H1 = ref.eval_hess(beta)
+        p2, d2, g2, H2 = be.eval_hess(beta)
+        assert abs(p1 - p2) < 1e-8 * max(1, abs(p1))
+        assert abs(d1 - d2) < 1e-6 * max(1, abs(d1))
+        np.testing.assert_allclose(g1, g2, rtol=1e-9, atol=1e-9)
+        np.testing.assert_allclose(H1, H2, rtol=1e-9, atol=1e-9)
+    finally:
+        be.unpersist()
 
 
 @pytest.mark.parametrize("family,response", [("gaussian", "gaussian"),
@@ -119,8 +132,8 @@ def test_wide_p_uses_arrow_backend(spark):
     df, feats = _to_spark(spark, x, y)
     be, _ = build_spark_backend(df, feats, "label", "gaussian")
     try:
-        assert isinstance(be, ArrowSparkBackend)
-        # subsetting to a small active set falls back to expressions
+        assert type(be) is SparkBackend
+        # a small active set stays on the same partial-reduction plane
         sub = be.subset(np.arange(5))
         assert type(sub) is SparkBackend
     finally:
@@ -144,17 +157,16 @@ def test_eval_multi_bitwise_matches_single_passes(spark):
         df, feats = _to_spark(spark, x, y)
         be, _ = build_spark_backend(df, feats, "label", fam)
         try:
-            view = be._arrow_view() if type(be) is SparkBackend else be
             rng = np.random.default_rng(17)
-            betas = [rng.standard_normal((view.p_total, view.m)) * 0.1
+            betas = [rng.standard_normal((be.p_total, be.m)) * 0.1
                      for _ in range(3)]
-            singles = [view.eval(b) for b in betas]
-            fused = view.eval_multi(betas)
+            singles = [be.eval(b) for b in betas]
+            fused = be.eval_multi(betas)
             for (p1, d1, g1), (p2, d2, g2) in zip(singles, fused):
                 assert p1 == p2 and d1 == d2, fam
                 assert np.array_equal(g1, g2), fam
-            singles_h = [view.eval_hess(b) for b in betas]
-            fused_h = view.eval_hess_multi(betas)
+            singles_h = [be.eval_hess(b) for b in betas]
+            fused_h = be.eval_hess_multi(betas)
             for (p1, d1, g1, H1), (p2, d2, g2, H2) in zip(singles_h, fused_h):
                 assert p1 == p2 and d1 == d2, fam
                 assert np.array_equal(g1, g2), fam
