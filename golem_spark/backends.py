@@ -1131,146 +1131,153 @@ def build_sparse_backend(df: DataFrame, idx_col: str, val_col: str,
     # before returning — the backend keeps only the repartitioned
     # encoded frame.
     proj = df.select(idx_col, val_col, *label_cols).persist()
-    # string classification labels: class discovery rides along in the
-    # stats pass (batch-distinct sets); other label types fall back to a
-    # distinct() job so class values keep their native type/ordering
-    label_is_string = (not need_y_stats
-                       and dict(proj.dtypes)[label_cols[0]] == "string")
-    parts = proj.mapInArrow(
-        statop, "part array<double>, labels array<string>").collect()
-    seen_labels = sorted({v for r in parts for v in (r["labels"] or [])})
-    nlab = len(label_cols)
-    # fixed prefix: [n, bad, ynull] + sums(p) + sqs(p) + ysums + [lg, ymin];
-    # the variable tail carries per-batch-label counts and raw X'y
-    # vectors (classification) or per-label-col X'y (numeric labels)
-    plen = 3 + 2 * p + nlab + 2
-    tot = np.zeros(plen)
-    ymin = np.inf
-    xy_num = np.zeros((p, nlab))
-    lab_cnt: dict = {}
-    lab_xy: dict = {}
-    for r in parts:
-        arr = np.asarray(r["part"])
-        head = arr[:plen].copy()
-        ymin = min(ymin, head[-1])
-        head[-1] = 0.0
-        tot += head
-        blabels = list(r["labels"] or [])
-        if blabels:
-            k = len(blabels)
-            cnts = arr[plen:plen + k]
-            for i, c in enumerate(blabels):
-                lab_cnt[c] = lab_cnt.get(c, 0.0) + float(cnts[i])
-                seg = arr[plen + k + i * p:plen + k + (i + 1) * p]
-                lab_xy[c] = lab_xy.get(c, 0.0) + seg
-        elif arr.size > plen:
-            xy_num += arr[plen:plen + nlab * p].reshape((nlab, p)).T
-    lgamma_sum = float(tot[-2])
-    n = int(tot[0])
-    if tot[1] > 0:
-        raise ValueError(f"{int(tot[1])} feature indices outside [0, {p})")
-    if tot[2] > 0:
-        raise ValueError(f"missing values in columns: {label_cols}")
-    sums = tot[3:3 + p]
-    sqs = tot[3 + p:3 + 2 * p]
-    ysums = tot[3 + 2 * p:3 + 2 * p + nlab]
+    try:
+        # string classification labels: class discovery rides along in the
+        # stats pass (batch-distinct sets); other label types fall back to a
+        # distinct() job so class values keep their native type/ordering
+        label_is_string = (not need_y_stats
+                           and dict(proj.dtypes)[label_cols[0]] == "string")
+        parts = proj.mapInArrow(
+            statop, "part array<double>, labels array<string>").collect()
+        seen_labels = sorted({v for r in parts for v in (r["labels"] or [])})
+        nlab = len(label_cols)
+        # fixed prefix: [n, bad, ynull] + sums(p) + sqs(p) + ysums + [lg, ymin];
+        # the variable tail carries per-batch-label counts and raw X'y
+        # vectors (classification) or per-label-col X'y (numeric labels)
+        plen = 3 + 2 * p + nlab + 2
+        tot = np.zeros(plen)
+        ymin = np.inf
+        xy_num = np.zeros((p, nlab))
+        lab_cnt: dict = {}
+        lab_xy: dict = {}
+        for r in parts:
+            arr = np.asarray(r["part"])
+            head = arr[:plen].copy()
+            ymin = min(ymin, head[-1])
+            head[-1] = 0.0
+            tot += head
+            blabels = list(r["labels"] or [])
+            if blabels:
+                k = len(blabels)
+                cnts = arr[plen:plen + k]
+                for i, c in enumerate(blabels):
+                    lab_cnt[c] = lab_cnt.get(c, 0.0) + float(cnts[i])
+                    seg = arr[plen + k + i * p:plen + k + (i + 1) * p]
+                    lab_xy[c] = lab_xy.get(c, 0.0) + seg
+            elif arr.size > plen:
+                xy_num += arr[plen:plen + nlab * p].reshape((nlab, p)).T
+        lgamma_sum = float(tot[-2])
+        n = int(tot[0])
+        if tot[1] > 0:
+            raise ValueError(f"{int(tot[1])} feature indices outside [0, {p})")
+        if tot[2] > 0:
+            raise ValueError(f"missing values in columns: {label_cols}")
+        sums = tot[3:3 + p]
+        sqs = tot[3 + p:3 + 2 * p]
+        ysums = tot[3 + 2 * p:3 + 2 * p + nlab]
 
-    if scale == "l2":
-        x_scale = _apply_scale_guard(np.sqrt(sqs))
-    elif scale == "sd":
-        x_scale = _apply_scale_guard(
-            np.sqrt(np.maximum(sqs - sums ** 2 / max(n, 1), 0.0) / max(n - 1, 1)))
-    else:
-        x_scale = np.ones(p)
-    inv_scale = 1.0 / x_scale
+        if scale == "l2":
+            x_scale = _apply_scale_guard(np.sqrt(sqs))
+        elif scale == "sd":
+            x_scale = _apply_scale_guard(
+                np.sqrt(np.maximum(sqs - sums ** 2 / max(n, 1), 0.0) / max(n - 1, 1)))
+        else:
+            x_scale = np.ones(p)
+        inv_scale = 1.0 / x_scale
 
-    # response encoding (same semantics as build_spark_backend)
-    class_names = None
-    n_targets = 1
-    y_center = np.zeros(1)
-    y_scale = np.ones(1)
-    enc = proj
-    if family_name == "gaussian":
-        n_targets = len(label_cols)
-        y_center = ysums / max(n, 1)
-        y_scale = np.ones(n_targets)
-        for k, c in enumerate(label_cols):
-            enc = enc.withColumn(
-                f"__y{k}", F.col(c).cast("double") - F.lit(float(y_center[k])))
-        y_cols = [f"__y{k}" for k in range(n_targets)]
-    elif family_name == "binomial":
-        classes = [r[0] for r in
-                   proj.select(label_col).distinct().orderBy(label_col).collect()]
-        if len(classes) != 2:
-            raise ValueError(f"binomial response needs exactly 2 classes, got {len(classes)}")
-        class_names = [str(c) for c in classes]
-        enc = proj.withColumn("__y0", F.when(F.col(label_col) == classes[0], -1.0)
-                              .otherwise(1.0))
-        y_cols = ["__y0"]
-    elif family_name == "poisson":
-        if ymin < 0:
-            raise ValueError("cannot have negative responses in poisson model")
-        enc = proj.withColumn("__y0", F.col(label_col).cast("double"))
-        y_cols = ["__y0"]
-    elif family_name == "multinomial":
-        classes = (seen_labels if label_is_string else
-                   [r[0] for r in proj.select(label_col).distinct()
-                    .orderBy(label_col).collect()])
-        if len(classes) == 2:
-            raise ValueError("only two classes in response; use family='binomial'")
-        class_names = [str(c) for c in classes]
-        n_targets = len(classes) - 1
-        for k in range(n_targets):
-            enc = enc.withColumn(f"__y{k}", F.when(F.col(label_col) == classes[k],
-                                                   1.0).otherwise(0.0))
-        y_cols = [f"__y{k}" for k in range(n_targets)]
-        y_center = np.zeros(n_targets)
-        y_scale = np.ones(n_targets)
-    else:
-        raise ValueError(family_name)
+        # response encoding (same semantics as build_spark_backend)
+        class_names = None
+        n_targets = 1
+        y_center = np.zeros(1)
+        y_scale = np.ones(1)
+        enc = proj
+        if family_name == "gaussian":
+            n_targets = len(label_cols)
+            y_center = ysums / max(n, 1)
+            y_scale = np.ones(n_targets)
+            for k, c in enumerate(label_cols):
+                enc = enc.withColumn(
+                    f"__y{k}", F.col(c).cast("double") - F.lit(float(y_center[k])))
+            y_cols = [f"__y{k}" for k in range(n_targets)]
+        elif family_name == "binomial":
+            classes = [r[0] for r in
+                       proj.select(label_col).distinct().orderBy(label_col).collect()]
+            if len(classes) != 2:
+                raise ValueError("binomial response needs exactly 2 classes, "
+                                 f"got {len(classes)}")
+            class_names = [str(c) for c in classes]
+            enc = proj.withColumn("__y0", F.when(F.col(label_col) == classes[0], -1.0)
+                                  .otherwise(1.0))
+            y_cols = ["__y0"]
+        elif family_name == "poisson":
+            if ymin < 0:
+                raise ValueError("cannot have negative responses in poisson model")
+            enc = proj.withColumn("__y0", F.col(label_col).cast("double"))
+            y_cols = ["__y0"]
+        elif family_name == "multinomial":
+            classes = (seen_labels if label_is_string else
+                       [r[0] for r in proj.select(label_col).distinct()
+                        .orderBy(label_col).collect()])
+            if len(classes) == 2:
+                raise ValueError("only two classes in response; use family='binomial'")
+            class_names = [str(c) for c in classes]
+            n_targets = len(classes) - 1
+            for k in range(n_targets):
+                enc = enc.withColumn(f"__y{k}", F.when(F.col(label_col) == classes[k],
+                                                       1.0).otherwise(0.0))
+            y_cols = [f"__y{k}" for k in range(n_targets)]
+            y_center = np.zeros(n_targets)
+            y_scale = np.ones(n_targets)
+        else:
+            raise ValueError(family_name)
 
-    std_df = enc.select(idx_col, val_col, *y_cols)
-    target_parts = max(1, min(df.sparkSession.sparkContext.defaultParallelism,
-                              n // 20_000 + 1))
-    cur_parts = std_df.rdd.getNumPartitions()
-    if cur_parts > target_parts:
-        # reducing: coalesce merges partitions with NO shuffle (the
-        # upstream is already materialized in the projection cache, so
-        # pipelined-parallelism loss doesn't apply)
-        std_df = std_df.coalesce(target_parts)
-    elif cur_parts < target_parts:
-        std_df = std_df.repartition(target_parts)
+        std_df = enc.select(idx_col, val_col, *y_cols)
+        target_parts = max(1, min(df.sparkSession.sparkContext.defaultParallelism,
+                                  n // 20_000 + 1))
+        cur_parts = std_df.rdd.getNumPartitions()
+        if cur_parts > target_parts:
+            # reducing: coalesce merges partitions with NO shuffle (the
+            # upstream is already materialized in the projection cache, so
+            # pipelined-parallelism loss doesn't apply)
+            std_df = std_df.coalesce(target_parts)
+        elif cur_parts < target_parts:
+            std_df = std_df.repartition(target_parts)
 
-    backend = SparseArrowBackend(std_df, idx_col, val_col, y_cols, fam,
-                                 intercept, n, p, inv_scale, lgamma_sum)
-    # sigma_max gradient + null-model means from the SAME stats pass
-    # (raw X'y ride-alongs above): zero additional data passes for
-    # lambda_max_gradient / null_intercepts
-    if family_name == "gaussian":
-        g = np.column_stack([
-            inv_scale * (xy_num[:, j] - (ysums[j] / max(n, 1)) * sums)
-            for j in range(nlab)])
-        backend._null_mu = np.zeros(nlab)  # encoded y is centered
-    elif family_name == "poisson":
-        g = (inv_scale * (sums - xy_num[:, 0]))[:, None]
-        backend._null_mu = np.array([ysums[0] / max(n, 1)])
-    elif family_name == "binomial" and label_is_string:
-        c1 = class_names[1]
-        g = (inv_scale * (lab_xy[c1] - (lab_cnt[c1] / n) * sums))[:, None]
-        backend._null_mu = np.array([(n - 2.0 * lab_cnt[class_names[0]]) / n])
-    elif family_name == "multinomial" and label_is_string:
-        g = np.column_stack([
-            inv_scale * (lab_xy[c] - (lab_cnt[c] / n) * sums)
-            for c in class_names[:n_targets]])
-        backend._null_mu = np.array([lab_cnt[c] / n
-                                     for c in class_names[:n_targets]])
-    else:  # non-string classification labels: fall back to the pass
-        g = None
-    if g is not None:
-        backend._lam_max_grad = np.abs(g.ravel(order="F"))
-    # materialize the backend's persisted frame FROM the proj cache (a
-    # cache-local shuffle, not a second source scan), then release proj
-    backend.df.count()
+        backend = SparseArrowBackend(std_df, idx_col, val_col, y_cols, fam,
+                                     intercept, n, p, inv_scale, lgamma_sum)
+        # sigma_max gradient + null-model means from the SAME stats pass
+        # (raw X'y ride-alongs above): zero additional data passes for
+        # lambda_max_gradient / null_intercepts
+        if family_name == "gaussian":
+            g = np.column_stack([
+                inv_scale * (xy_num[:, j] - (ysums[j] / max(n, 1)) * sums)
+                for j in range(nlab)])
+            backend._null_mu = np.zeros(nlab)  # encoded y is centered
+        elif family_name == "poisson":
+            g = (inv_scale * (sums - xy_num[:, 0]))[:, None]
+            backend._null_mu = np.array([ysums[0] / max(n, 1)])
+        elif family_name == "binomial" and label_is_string:
+            c1 = class_names[1]
+            g = (inv_scale * (lab_xy[c1] - (lab_cnt[c1] / n) * sums))[:, None]
+            backend._null_mu = np.array([(n - 2.0 * lab_cnt[class_names[0]]) / n])
+        elif family_name == "multinomial" and label_is_string:
+            g = np.column_stack([
+                inv_scale * (lab_xy[c] - (lab_cnt[c] / n) * sums)
+                for c in class_names[:n_targets]])
+            backend._null_mu = np.array([lab_cnt[c] / n
+                                         for c in class_names[:n_targets]])
+        else:  # non-string classification labels: fall back to the pass
+            g = None
+        if g is not None:
+            backend._lam_max_grad = np.abs(g.ravel(order="F"))
+        # materialize the backend's persisted frame FROM the proj cache (a
+        # cache-local shuffle, not a second source scan), then release proj
+        backend.df.count()
+    except BaseException:
+        # a rejected response or index must not leave proj cached; the
+        # success path releases it after materializing the backend frame
+        proj.unpersist()
+        raise
     proj.unpersist()
     meta = {
         "x_center": np.zeros(p),

@@ -807,72 +807,77 @@ def _build_wide_shared_context(spark, sf_dir: str) -> dict:
                  pa.array([label_lists[1]], type=pa.list_(pa.string()))],
                 ["part", "li", "lr"])
 
-    parts = proj.mapInArrow(
-        statop,
-        "part array<double>, li array<string>, lr array<string>").collect()
+    try:
+        parts = proj.mapInArrow(
+            statop,
+            "part array<double>, li array<string>, lr array<string>").collect()
 
-    plen = 3 + 2 * p + 3 + p  # [n,bad,qnull] sums sqs [ysum,lg,ymin] xy_q
-    tot = np.zeros(plen)
-    ymin = np.inf
-    cnt: dict[str, dict[str, float]] = {"__isr": {}, "__rf": {}}
-    xy: dict[str, dict[str, np.ndarray]] = {"__isr": {}, "__rf": {}}
-    for r in parts:
-        arr = np.asarray(r["part"])
-        head = arr[:plen].copy()
-        ymin = min(ymin, head[plen - p - 1])
-        head[plen - p - 1] = 0.0
-        tot += head
-        off = plen
-        for cname, key in (("__isr", "li"), ("__rf", "lr")):
-            blabels = list(r[key] or [])
-            k = len(blabels)
-            cs = arr[off:off + k]
-            for i, c in enumerate(blabels):
-                cnt[cname][c] = cnt[cname].get(c, 0.0) + float(cs[i])
-                seg = arr[off + k + i * p:off + k + (i + 1) * p]
-                prev = xy[cname].get(c)
-                xy[cname][c] = seg if prev is None else prev + seg
-            off += k + k * p
+        plen = 3 + 2 * p + 3 + p  # [n,bad,qnull] sums sqs [ysum,lg,ymin] xy_q
+        tot = np.zeros(plen)
+        ymin = np.inf
+        cnt: dict[str, dict[str, float]] = {"__isr": {}, "__rf": {}}
+        xy: dict[str, dict[str, np.ndarray]] = {"__isr": {}, "__rf": {}}
+        for r in parts:
+            arr = np.asarray(r["part"])
+            head = arr[:plen].copy()
+            ymin = min(ymin, head[plen - p - 1])
+            head[plen - p - 1] = 0.0
+            tot += head
+            off = plen
+            for cname, key in (("__isr", "li"), ("__rf", "lr")):
+                blabels = list(r[key] or [])
+                k = len(blabels)
+                cs = arr[off:off + k]
+                for i, c in enumerate(blabels):
+                    cnt[cname][c] = cnt[cname].get(c, 0.0) + float(cs[i])
+                    seg = arr[off + k + i * p:off + k + (i + 1) * p]
+                    prev = xy[cname].get(c)
+                    xy[cname][c] = seg if prev is None else prev + seg
+                off += k + k * p
 
-    n = int(tot[0])
-    if tot[1] > 0:
-        raise ValueError(f"{int(tot[1])} feature indices outside [0, {p})")
-    if tot[2] > 0:
-        raise ValueError("missing values in the response columns")
-    if ymin < 0:
-        raise ValueError("cannot have negative responses in poisson model")
-    sums = tot[3:3 + p]
-    sqs = tot[3 + p:3 + 2 * p]
-    ysum_q = tot[3 + 2 * p]
-    lgamma_sum = float(tot[3 + 2 * p + 1])
-    xy_q = tot[3 + 2 * p + 3:]
-    mean_q = ysum_q / max(n, 1)
+        n = int(tot[0])
+        if tot[1] > 0:
+            raise ValueError(f"{int(tot[1])} feature indices outside [0, {p})")
+        if tot[2] > 0:
+            raise ValueError("missing values in the response columns")
+        if ymin < 0:
+            raise ValueError("cannot have negative responses in poisson model")
+        sums = tot[3:3 + p]
+        sqs = tot[3 + p:3 + 2 * p]
+        ysum_q = tot[3 + 2 * p]
+        lgamma_sum = float(tot[3 + 2 * p + 1])
+        xy_q = tot[3 + 2 * p + 3:]
+        mean_q = ysum_q / max(n, 1)
 
-    x_scale = _apply_scale_guard(np.sqrt(sqs))
-    inv_scale = 1.0 / x_scale
+        x_scale = _apply_scale_guard(np.sqrt(sqs))
+        inv_scale = 1.0 / x_scale
 
-    cls_b = sorted(cnt["__isr"])     # ['R', 'other']
-    cls_m = sorted(cnt["__rf"])      # ['A', 'N', 'R']
-    if len(cls_b) != 2 or len(cls_m) < 3:
-        raise ValueError("unexpected wide-query class sets")
-    n_tgt = len(cls_m) - 1
+        cls_b = sorted(cnt["__isr"])     # ['R', 'other']
+        cls_m = sorted(cnt["__rf"])      # ['A', 'N', 'R']
+        if len(cls_b) != 2 or len(cls_m) < 3:
+            raise ValueError("unexpected wide-query class sets")
+        n_tgt = len(cls_m) - 1
 
-    enc = proj.select(
-        "idx", "val",
-        (F.col("__q").cast("double") - F.lit(float(mean_q))).alias("__yg"),
-        F.when(F.col("__isr") == cls_b[0], -1.0).otherwise(1.0).alias("__yb"),
-        F.col("__q").cast("double").alias("__yp"),
-        *[F.when(F.col("__rf") == cls_m[k], 1.0).otherwise(0.0)
-          .alias(f"__ym{k}") for k in range(n_tgt)])
-    sc = spark.sparkContext
-    target_parts = max(1, min(sc.defaultParallelism, n // 20_000 + 1))
-    cur_parts = enc.rdd.getNumPartitions()
-    if cur_parts > target_parts:
-        enc = enc.coalesce(target_parts)
-    elif cur_parts < target_parts:
-        enc = enc.repartition(target_parts)
-    enc = enc.persist()
-    enc.count()
+        enc = proj.select(
+            "idx", "val",
+            (F.col("__q").cast("double") - F.lit(float(mean_q))).alias("__yg"),
+            F.when(F.col("__isr") == cls_b[0], -1.0).otherwise(1.0).alias("__yb"),
+            F.col("__q").cast("double").alias("__yp"),
+            *[F.when(F.col("__rf") == cls_m[k], 1.0).otherwise(0.0)
+              .alias(f"__ym{k}") for k in range(n_tgt)])
+        sc = spark.sparkContext
+        target_parts = max(1, min(sc.defaultParallelism, n // 20_000 + 1))
+        cur_parts = enc.rdd.getNumPartitions()
+        if cur_parts > target_parts:
+            enc = enc.coalesce(target_parts)
+        elif cur_parts < target_parts:
+            enc = enc.repartition(target_parts)
+        enc = enc.persist()
+        enc.count()
+    except BaseException:
+        # same release as build_sparse_backend: never leave proj cached
+        proj.unpersist()
+        raise
     proj.unpersist()
 
     class _Shared(SparseArrowBackend):

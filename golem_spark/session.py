@@ -2,7 +2,9 @@
 
 On a real cluster these configs are supplied by spark-submit; the factory
 only sets session-level SQL knobs (AQE, shuffle partitions, Arrow) that are
-correct at any scale, plus one static knob: the generated-class cache size.
+correct at any scale, plus two settings that only take effect on the
+builder: the generated-class cache size, and PySpark's DataFrame
+debugging flag.
 
 Spark compiles every whole-stage-codegen class with Janino and keeps the
 compiled classes in a JVM-wide LRU cache keyed by the generated source
@@ -15,6 +17,15 @@ evicted before its next use, so a second pass over the suite compiled
 CODEGEN_CACHE_ENTRIES is that working set with about 2x headroom, and
 ``tools/codegen_working_set.py`` measures it again. The retained classes
 cost no measurable JVM Metaspace (CHANGES.md records the numbers).
+
+``spark.python.sql.dataFrameDebugging.enabled`` is set to false. At its
+default (true) every Column and ``functions`` call on the driver records
+its Python call site for analysis errors: several py4j round trips per
+call (a conf read, a JVM class lookup, setting and clearing the origin),
+and a first ``import IPython`` whose modules stay loaded. Off, analysis
+errors lose the Python call-site fragment, which nothing here reads.
+PySpark reads the flag once per process (``is_debugging_enabled``
+caches it), so a later ``spark.conf.set`` has no effect.
 """
 
 from __future__ import annotations
@@ -62,6 +73,14 @@ def get_spark(app_name: str = "golem_spark", shuffle_partitions: int | None = No
         # IllegalAccessError on BufferedRowIterator.partitionIndex.
         .config("spark.sql.codegen.cache.maxEntries",
                 str(CODEGEN_CACHE_ENTRIES))
+        # no per-Column call-site capture (see the module docstring).
+        # Ten interleaved perfbench pairs per workload, sf0.01, 4 cores:
+        # driver_rss_mb 182.0 -> 160.3 MB (glm) and 147.7 -> 130.6 MB
+        # (pipeline), 10/10 wins each. py4j calls per warm call at
+        # sf0.001, proxy releases aside: glm_binomial_path 3,540 -> 960,
+        # glm_cv_gaussian 5,193 -> 1,493, p59_pagerank 926 -> 516.
+        # Builder only: PySpark caches the flag for the process.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         # events.parquet stores ts as TIMESTAMP(NANOS); Spark has no nanos

@@ -101,6 +101,34 @@ def test_owl_releases_persisted_frame_on_error(spark, monkeypatch, layout):
         assert not frame.storageLevel.useDisk
 
 
+def test_sparse_build_releases_projection_on_error(spark, monkeypatch):
+    """build_sparse_backend persists its (idx, val, label) projection
+    before the stats pass; a response it rejects inside the build must
+    not leave that projection in the CacheManager."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(pd.DataFrame({
+        "v0": np.linspace(0.1, 6.0, 60),
+        "label": ["a", "b", "c"] * 20}))
+    df = df.select(F.array(F.lit(0)).alias("idx"),
+                   F.array("v0").alias("val"), "label")
+    persisted = []
+    orig = type(df).persist
+
+    def spy(self, *a, **kw):
+        persisted.append(self)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(type(df), "persist", spy)
+    with pytest.raises(ValueError, match="exactly 2 classes, got 3"):
+        owl(df=df, label_col="label", family="binomial",
+            sparse_features=("idx", "val"), sparse_p=1)
+    assert persisted, "the sparse build persisted nothing"
+    for frame in persisted:
+        assert not frame.storageLevel.useMemory
+        assert not frame.storageLevel.useDisk
+
+
 def test_grouped_stats_rejects_nulls(spark):
     """The grouped binomial/multinomial stats pass must reject null
     labels (a null GROUP, not a null-count aggregate) and null

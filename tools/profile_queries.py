@@ -7,7 +7,12 @@ scheduling-overhead proxy the tall-n audits use), the classes Janino
 compiled during the steady reps (``codegen_compiles``: 0 when every
 generated class of the warm rep was reused, so a nonzero count is
 per-call codegen churn, such as a plan literal that changes between
-calls), and the ``explain("formatted")`` physical plan, written to
+calls), the py4j round trips the steady reps made (``py4j_calls``,
+counted from every driver thread by wrapping py4j's
+``ClientServerConnection.send_command`` in this tool; proxy releases,
+which follow Python's garbage collector, are left out so the count
+repeats from run to run), and the
+``explain("formatted")`` physical plan, written to
 ``plans/<tag>/<name>_<suffix>.txt`` so plan claims in
 OPTIMIZATION_r*.md are checkable without running Spark.
 
@@ -30,8 +35,27 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
+from py4j.clientserver import ClientServerConnection
+from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+
 import __spark_entry__ as entrymod
 from golem_spark.session import codegen_compile_count, get_spark
+
+_PY4J_CALLS: list = []
+
+
+def _count_py4j_calls() -> None:
+    """Wrap py4j's send_command so every round trip but a proxy release
+    appends to _PY4J_CALLS (list.append is atomic across threads)."""
+    orig = ClientServerConnection.send_command
+    release = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+
+    def counting(self, command):
+        if not command.startswith(release):
+            _PY4J_CALLS.append(None)
+        return orig(self, command)
+
+    ClientServerConnection.send_command = counting
 
 
 def main() -> None:
@@ -66,6 +90,7 @@ def main() -> None:
     plans_dir = os.path.join("/root/repo", "plans", tag)
     os.makedirs(plans_dir, exist_ok=True)
     spark = get_spark("profile_queries")
+    _count_py4j_calls()
     sc = spark.sparkContext
 
     # JVM/footer warmup
@@ -81,6 +106,7 @@ def main() -> None:
         times = []
         jobs_ct = None
         c0 = codegen_compile_count(spark)
+        calls0 = len(_PY4J_CALLS)
         for r in range(reps):
             group = f"prof_{name}_{r}"
             sc.setJobGroup(group, name)
@@ -92,6 +118,7 @@ def main() -> None:
             times.append(round(dt, 4))
             jobs_ct = len(sc.statusTracker().getJobIdsForGroup(group))
         compiles = codegen_compile_count(spark) - c0
+        py4j_calls = len(_PY4J_CALLS) - calls0
         plan = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 "formatted"))
@@ -103,10 +130,11 @@ def main() -> None:
                    ("BatchEvalPython", "ArrowEvalPython", "MapInArrow",
                     "MapInPandas", "FlatMapGroupsInPandas"))
         out[name] = {"sec": min(times), "all_sec": times, "jobs": jobs_ct,
-                     "codegen_compiles": compiles,
+                     "codegen_compiles": compiles, "py4j_calls": py4j_calls,
                      "exchanges": n_exch, "python_nodes": n_py}
         print(f"{name}: {min(times):.3f}s jobs={jobs_ct} "
-              f"compiles={compiles} exchanges={n_exch} py_nodes={n_py}")
+              f"compiles={compiles} py4j_calls={py4j_calls} "
+              f"exchanges={n_exch} py_nodes={n_py}")
 
     json_path = opts.get("json")
     if json_path:
