@@ -7,13 +7,16 @@ every implemented operator (SURVEY.md §2) as (spark, sf_dir) -> DataFrame;
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-if "/root/repo" not in sys.path:
-    sys.path.insert(0, "/root/repo")
+# the golem_spark beside this file, not a hard-coded checkout's
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+if _ROOT not in sys.path:
+    sys.path.insert(0, _ROOT)
 
 from golem_spark.session import load_tables
 from golem_spark.kernels import KERNELS

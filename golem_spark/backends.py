@@ -392,11 +392,7 @@ class SparkBackend:
             grad = X.T @ g
             if intercept:
                 grad = np.vstack([g.sum(axis=0), grad])
-            if fam == "binomial":
-                s = 1.0 / (1.0 + np.exp(-np.clip(lp[:, 0], -700, 700)))
-                w = s * (1 - s)
-            else:
-                w = np.exp(np.clip(lp[:, 0], -700, 700))
+            w = _curvature_weights(fam, Y, lp)
             Xi = np.hstack([np.ones((X.shape[0], 1)), X]) if intercept else X
             H = (Xi * w[:, None]).T @ Xi
             return np.concatenate([[primal, dual], grad.ravel(order="F"),
@@ -737,15 +733,20 @@ class SparseArrowBackend(SparkBackend):
 
     @staticmethod
     def _lp(nrow, rows, cols, vals, b, intercept):
-        """Sparse X @ b (+ intercept row of b), b is (p_total, m)."""
-        m = b.shape[1]
+        """Sparse X @ b (+ intercept row of b): b is (p_total, m) or
+        (p_total, m, K) and lp is (nrow, m) or (nrow, m, K) — one O(nnz)
+        bincount per trailing column, never an (nnz, m, K) temporary.
+        The one sparse linear predictor: the fit passes, predict() and
+        score() all call it."""
         bf = b[1:] if intercept else b
-        lp = np.zeros((nrow, m))
-        for k in range(m):
-            lp[:, k] = np.bincount(rows, weights=vals * bf[cols, k],
+        flat = bf.reshape(bf.shape[0], math.prod(b.shape[1:]))
+        lp = np.empty((nrow, flat.shape[1]))
+        for k in range(flat.shape[1]):
+            lp[:, k] = np.bincount(rows, weights=vals * flat[cols, k],
                                    minlength=nrow)
+        lp = lp.reshape((nrow,) + b.shape[1:])
         if intercept:
-            lp += b[0][None, :]
+            lp += b[0][None]
         return lp
 
     @staticmethod
@@ -933,11 +934,7 @@ class SparseArrowBackend(SparkBackend):
             lp = lpf(nrow, rows, cols, vals, b, intercept)
             primal, dual, g = _family_numpy(fam, Y, lp)
             grad = xtgf(p_feat, rows, cols, vals, g, intercept)
-            if fam == "binomial":
-                s = 1.0 / (1.0 + np.exp(-np.clip(lp[:, 0], -700, 700)))
-                w = s * (1 - s)
-            else:
-                w = np.exp(np.clip(lp[:, 0], -700, 700))
+            w = _curvature_weights(fam, Y, lp)
             H = np.zeros((p_total, p_total))
             accum(H, nrow, rows, cols, vals, w, intercept)
             return np.concatenate([[primal, dual], grad.ravel(order="F"),

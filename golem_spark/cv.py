@@ -655,74 +655,21 @@ def _fused_cv_setup(df, feature_cols, label_col, key_col, number: int,
             "repeats": repeats}
 
 
-def _spec_score_closure(family: str, meas: str, raw_betas: np.ndarray,
-                        intercept: bool, n_classes: int):
-    """(fn(Xraw_heldout, Yenc_heldout) -> per-point term sums, K) for
-    the speculative held-out scoring that rides the prefetch pass:
-    per-row terms mirror _score_spark's expressions over the encoded
-    responses (binomial y01 = (y+1)/2, multinomial indicators = the
-    encoded one-hots + 1-sum reference), evaluated at the ROUND-TRIPPED
-    raw warm coefficients — exactly the coefficients a zero-pass warm
-    cell returns."""
-    K = raw_betas.shape[2]
-    off = 1 if intercept else 0
-    clamp = 1e-15
-
-    def fn(Xh: np.ndarray, Yh: np.ndarray) -> np.ndarray:
-        out = np.zeros(K)
-        if Xh.shape[0] == 0:
-            return out
-        with np.errstate(over="ignore", divide="ignore"):
-            for k in range(K):
-                co = raw_betas[:, :, k]
-                lp = Xh @ co[off:, :]
-                if intercept:
-                    lp = lp + co[0, :][None, :]
-                if family == "poisson":
-                    d = np.exp(lp[:, 0]) - Yh[:, 0]
-                    out[k] = float(np.sum(d * d) if meas == "mse"
-                                   else np.sum(np.abs(d)))
-                elif family == "binomial":
-                    prob = 1.0 / (1.0 + np.exp(-lp[:, 0]))
-                    y01 = (Yh[:, 0] + 1.0) / 2.0
-                    if meas in ("mse", "mae"):
-                        d = prob - y01
-                        out[k] = float(np.sum(d * d) if meas == "mse"
-                                       else np.sum(np.abs(d)))
-                    else:  # deviance
-                        pc = np.clip(prob, clamp, 1 - clamp)
-                        out[k] = float(np.sum(
-                            y01 * np.log(pc) + (1 - y01) * np.log(1 - pc)))
-                else:  # multinomial
-                    mx = np.maximum(lp.max(axis=1), 0.0)
-                    e = np.exp(lp - mx[:, None])
-                    denom = np.exp(-mx) + e.sum(axis=1)
-                    probs = np.column_stack(
-                        [e / denom[:, None], np.exp(-mx) / denom])
-                    inds = np.column_stack(
-                        [Yh, 1.0 - Yh.sum(axis=1)])
-                    if meas in ("mse", "mae"):
-                        d = probs - inds
-                        out[k] = float(np.sum(d * d) if meas == "mse"
-                                       else np.sum(np.abs(d)))
-                    else:  # deviance
-                        pc = np.clip(probs, clamp, 1 - clamp)
-                        out[k] = float(np.sum(inds * np.log(pc)))
-        return out
-
-    return fn
-
-
-def _spec_score_finish(family: str, meas: str, sums: np.ndarray,
-                       n_held: float, n_classes: int) -> np.ndarray:
-    """Driver-side finish for the speculative score partials: the mean
-    (and the per-measure constant factors _score_spark applies)."""
-    vals = sums / n_held
-    if meas == "deviance":
-        return -2.0 * vals
-    if family == "multinomial" and meas in ("mse", "mae"):
-        return vals / float(n_classes)
-    return vals
+def _encoded_response(family: str, ys: list) -> list:
+    """The scoring kernels' response from the ENCODED y columns, as
+    Columns (fused Catalyst scoring) or arrays (speculative numpy
+    scoring): binomial y01 = (y + 1) / 2 over {-1, 1}, multinomial
+    indicators = the one-hots plus the reference class 1 - their sum,
+    poisson y as is. Over those exact values each term equals the
+    per-cell route's label expression bit for bit."""
+    if family == "binomial":
+        return [(ys[0] + 1.0) / 2.0]
+    if family == "multinomial":
+        ref = 1.0
+        for y in ys:
+            ref = ref - y
+        return list(ys) + [ref]
+    return list(ys)
 
 
 def _fused_warm_prefetch(fused: dict, warm_by_cell: dict,
@@ -747,9 +694,10 @@ def _fused_warm_prefetch(fused: dict, warm_by_cell: dict,
 
     from golem_spark.backends import _collect_partials
     from golem_spark.path import _rescale, _unrescale
+    from golem_spark.predict import _lp_np
+    from golem_spark.score import _score_finish, _score_sums
 
     fam = fused["family"]
-    n_classes = fused["m"] + 1  # multinomial class count (unused else)
     by_rep: dict[int, list] = {}
     for (fold, rep), (bk, meta) in fused["backends"].items():
         cube = warm_by_cell.get((fold, rep))
@@ -769,14 +717,16 @@ def _fused_warm_prefetch(fused: dict, warm_by_cell: dict,
         # standardized warm points rescaled back (owl's exact pipeline)
         base = _rescale(warm, meta["x_center"], meta["x_scale"],
                         meta["y_center"], meta["y_scale"], bk.intercept)
-        score_fns = [(meas, _spec_score_closure(fam, meas, base,
-                                                bk.intercept, n_classes))
-                     for meas in measures]
-        K = base.shape[2]
-        built += [(lambda X, Y, fn=fn: fn(X, Y), K)
-                  for _, fn in score_fns]
-        by_rep.setdefault(rep, []).append((bk, betas, built, base,
-                                           [m_ for m_, _ in score_fns]))
+        # held-out (raw) rows -> every measure's per-point term sums at
+        # those coefficients, one lp for all measures
+        def held_out_sums(Xh, Yh, base=base, intercept=bk.intercept):
+            lp = _lp_np(Xh, base, intercept)
+            resp = np.column_stack(_encoded_response(fam, list(Yh.T)))
+            return np.array([_score_sums(fam, meas, lp, resp)
+                             for meas in measures]).ravel()
+
+        built.append((held_out_sums, base.shape[2] * len(measures)))
+        by_rep.setdefault(rep, []).append((bk, betas, built, base))
 
     for rep, plan in by_rep.items():
         fcol = f"__fold_{rep}"
@@ -787,8 +737,8 @@ def _fused_warm_prefetch(fused: dict, warm_by_cell: dict,
         info = [(bk._fold, bk._x_center, bk._x_scale,
                  [fn for fn, _ in built[:len(betas)]],
                  [fn for fn, _ in built[len(betas):]])
-                for bk, betas, built, _, _ in plan]
-        lens = [[ln for _, ln in built] for _, _, built, _, _ in plan]
+                for bk, betas, built, _ in plan]
+        lens = [[ln for _, ln in built] for _, _, built, _ in plan]
         out_len = sum(sum(ls) for ls in lens) + len(plan)  # + held counts
 
         def op(batches, info=info, fcol=fcol, fcols=fcols, ycols=ycols):
@@ -815,19 +765,16 @@ def _fused_warm_prefetch(fused: dict, warm_by_cell: dict,
             .mapInPandas(op, "part array<double>"), out_len)
         pos = 0
         spec = fused.setdefault("spec_scores", {})
-        for (bk, betas, built, base, meas_list), ls in zip(plan, lens):
-            n_eval = len(betas)
+        for (bk, betas, built, base), ls in zip(plan, lens):
             finished = []
-            for ln in ls[:n_eval]:
+            for ln in ls[:-1]:
                 finished.append(bk._eval_hess_finish(total[pos:pos + ln]))
                 pos += ln
             bk._hess_stash = (betas, finished)
-            sums_by_meas = {}
-            for meas, ln in zip(meas_list, ls[n_eval:]):
-                sums_by_meas[meas] = total[pos:pos + ln].copy()
-                pos += ln
-            n_held = float(total[pos])
-            pos += 1
+            sums = total[pos:pos + ls[-1]].reshape(len(measures),
+                                                   base.shape[2])
+            n_held = float(total[pos + ls[-1]])
+            pos += ls[-1] + 1
             if n_held == 0:
                 # an empty held-out fold has no mean: leave the cell to
                 # the grouped scoring, which fails on it exactly as the
@@ -835,9 +782,9 @@ def _fused_warm_prefetch(fused: dict, warm_by_cell: dict,
                 continue
             spec[(bk._fold, rep)] = {
                 "base": base,
-                "scores": {meas: _spec_score_finish(fam, meas, s, n_held,
-                                                    n_classes)
-                           for meas, s in sums_by_meas.items()}}
+                "scores": {meas: _score_finish(fam, meas, sums[mi], n_held,
+                                               fused["m"])
+                           for mi, meas in enumerate(measures)}}
 
 
 def _fused_cv_scores(fused: dict, cells: list, fits: dict,
@@ -847,105 +794,33 @@ def _fused_cv_scores(fused: dict, cells: list, fits: dict,
     becomes avg(when(fold == f, <same row expression>)) — the same
     row values, restricted to the cell's held-out fold by the
     null-skipping aggregate instead of a per-cell filtered scan. The
-    response terms come from the ENCODED y columns: over their exact
-    0/1 (+-1) values the derivations below reproduce _score_spark's
-    label expressions bit-for-bit."""
+    response terms come from the ENCODED y columns
+    (``_encoded_response``)."""
     from pyspark.sql import functions as F
 
-    from golem_spark.score import _CLAMP
+    from golem_spark.score import _score_agg
 
     fam = fused["family"]
-    classes = fused["classes"]
-    m = fused["m"]
-    intercept = fused["intercept"]
-    off = 1 if intercept else 0
-    fcols = fused["fcols"]
-    if fam == "binomial":
-        # classes[0] encodes to -1, the other to +1: (y+1)/2 is exactly
-        # the 0/1 indicator _score_spark builds from the label
-        y01 = (F.col(fused["y_cols"][0]) + F.lit(1.0)) / F.lit(2.0)
-    names = None if fam == "poisson" else [str(c) for c in classes]
-
-    def lp_expr(beta, t):
-        expr = F.lit(float(beta[0, t])) if intercept else F.lit(0.0)
-        for j, c in enumerate(fcols):
-            b = float(beta[j + off, t])
-            if b != 0.0:
-                expr = expr + F.lit(b) * F.col(c)
-        return expr
-
+    features = [F.col(c) for c in fused["fcols"]]
+    response = _encoded_response(fam, [F.col(c) for c in fused["y_cols"]])
     aggs = []
     index = []
     for cell in cells:
         qv, fold, rep = cell
-        fit = fits[cell]
         cond = F.col(f"__fold_{rep}") == fold
-        K = fit.coefficients.shape[2]
+        coefs = fits[cell].coefficients
         for mi, meas in enumerate(measures):
-            for k in range(K):
-                beta = fit.coefficients[:, :, k]
+            for k in range(coefs.shape[2]):
                 a = f"s_{len(aggs)}"
                 index.append((cell, mi, k, a))
-                if fam == "poisson":
-                    pred = F.exp(lp_expr(beta, 0))
-                    d = pred - F.col(fused["y_cols"][0])
-                    term = d * d if meas == "mse" else F.abs(d)
-                    aggs.append(F.avg(F.when(cond, term)).alias(a))
-                elif fam == "binomial":
-                    prob = (F.lit(1.0)
-                            / (F.lit(1.0) + F.exp(-lp_expr(beta, 0))))
-                    if meas in ("mse", "mae"):
-                        d = prob - y01
-                        term = d * d if meas == "mse" else F.abs(d)
-                        aggs.append(F.avg(F.when(cond, term)).alias(a))
-                    else:  # deviance (misclass keeps the per-cell route)
-                        pc = F.least(F.greatest(prob, F.lit(_CLAMP)),
-                                     F.lit(1 - _CLAMP))
-                        ll = (y01 * F.log(pc)
-                              + (F.lit(1.0) - y01) * F.log(F.lit(1.0) - pc))
-                        aggs.append((F.lit(-2.0)
-                                     * F.avg(F.when(cond, ll))).alias(a))
-                else:  # multinomial
-                    lps = [lp_expr(beta, t) for t in range(m)]
-                    mx = (F.greatest(*lps, F.lit(0.0)) if m > 1
-                          else F.greatest(lps[0], F.lit(0.0)))
-                    denom = F.exp(F.lit(0.0) - mx)
-                    for t in range(m):
-                        denom = denom + F.exp(lps[t] - mx)
-                    probs = ([F.exp(lps[t] - mx) / denom for t in range(m)]
-                             + [F.exp(F.lit(0.0) - mx) / denom])
-                    # modeled-class indicators ARE the encoded columns;
-                    # the reference class is exactly 1 - their sum over
-                    # one-hot 0/1 values
-                    inds = [F.col(c) for c in fused["y_cols"]]
-                    ref = F.lit(1.0)
-                    for c in fused["y_cols"]:
-                        ref = ref - F.col(c)
-                    inds = inds + [ref]
-                    if meas in ("mse", "mae"):
-                        terms = None
-                        for pr, ind in zip(probs, inds):
-                            d = pr - ind
-                            t_ = d * d if meas == "mse" else F.abs(d)
-                            terms = t_ if terms is None else terms + t_
-                        aggs.append((F.avg(F.when(cond, terms))
-                                     / F.lit(float(len(names)))).alias(a))
-                    else:  # deviance (misclass keeps the per-cell route)
-                        ll = None
-                        for pr, ind in zip(probs, inds):
-                            pc = F.least(F.greatest(pr, F.lit(_CLAMP)),
-                                         F.lit(1 - _CLAMP))
-                            t_ = ind * F.log(pc)
-                            ll = t_ if ll is None else ll + t_
-                        aggs.append((F.lit(-2.0)
-                                     * F.avg(F.when(cond, ll))).alias(a))
+                aggs.append(_score_agg(fam, meas, coefs[:, :, k], features,
+                                       fused["intercept"], response,
+                                       cond=cond).alias(a))
     row = fused["src"].agg(*aggs).collect()[0]
     out: dict = {}
     for (cell, mi, k, a) in index:
-        meas = measures[mi]
-        fitK = fits[cell].coefficients.shape[2]
         arr = out.setdefault(cell, {}).setdefault(
-            meas, np.empty(fitK))
+            measures[mi], np.empty(fits[cell].coefficients.shape[2]))
         arr[k] = float(row[a])
     return out
 

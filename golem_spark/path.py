@@ -32,8 +32,8 @@ from golem_spark.families import get_family
 from golem_spark.lambdas import lambda_sequence, sigma_grid
 from golem_spark.prox import sorted_l1_norm  # noqa: F401  (re-export convenience)
 from golem_spark.screening import kkt_check, set_diff, set_intersect, set_union, strong_set
-from golem_spark.solvers import (SolverResult, admm_gaussian, fista,
-                                 pn_local_hessian, prox_newton)
+from golem_spark.solvers import (SolverResult, _power_eig_max, admm_gaussian,
+                                 fista, pn_local_hessian, prox_newton)
 
 
 @dataclass
@@ -744,20 +744,6 @@ def owl(x=None, y=None, *, df=None, feature_cols=None, label_col=None,
     finally:
         if isinstance(backend, SparkBackend):
             backend.unpersist()
-
-
-def _power_eig_max(G: np.ndarray, iters: int = 16) -> float:
-    """Deterministic power-iteration estimate of the top eigenvalue of a
-    PSD matrix — a dozen O(p^2) matmuls instead of O(p^3) eigvalsh."""
-    v = np.ones(G.shape[0])
-    v /= np.linalg.norm(v)
-    for _ in range(iters):
-        w = G @ v
-        nw = float(np.linalg.norm(w))
-        if nw <= 0.0:
-            return 0.0
-        v = w / nw
-    return float(v @ (G @ v))
 
 
 def _spark_primal_at_zero(backend) -> float:

@@ -9,12 +9,18 @@ beta entering as literals (broadcast-equivalent: the plan ships the
 p-sized constants, never the data), then applies the family link as
 column expressions — sigmoid/exp in whole-stage codegen, softmax/argmax
 via array expressions.
+
+This module owns the linear predictor and the inverse link for every
+plane: ``_lp_cols``/``_mean_cols`` build them as Catalyst Columns and
+``_lp_np``/``_mean_np`` compute them in numpy (the sparse plane's lp is
+``SparseArrowBackend._lp``). score() and the CV held-out scoring call
+the same builders.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from golem_spark.path import OwlFit
 
@@ -89,13 +95,105 @@ def coef_at(fit: OwlFit, sigma=None, simplify: bool = True, *,
 
 
 # ---------------------------------------------------------------------------
+# Linear predictor and inverse link: the one Catalyst builder and the one
+# numpy kernel that predict(), score() and the CV held-out scoring share
+# ---------------------------------------------------------------------------
+
+def _lp_cols(beta: np.ndarray, features: list, intercept: bool) -> list:
+    """One linear-predictor Column per target of ``beta`` (p_total, m):
+    the intercept plus ``lit(b) * feature`` for every NONZERO b, in
+    feature order. ``features`` are Columns, so each caller keeps its
+    own cast (or a pre-cast column)."""
+    off = 1 if intercept else 0
+    lps = []
+    for t in range(beta.shape[1]):
+        expr = F.lit(float(beta[0, t])) if intercept else F.lit(0.0)
+        for j, c in enumerate(features):
+            b = float(beta[j + off, t])
+            if b != 0.0:
+                expr = expr + F.lit(b) * c
+        lps.append(expr)
+    return lps
+
+
+def _mean_cols(family: str, lps: list) -> list:
+    """Inverse link as Columns: the fitted mean per target, or for
+    multinomial the m + 1 class probabilities (implicit reference class
+    last, max-shifted softmax)."""
+    if family == "binomial":
+        return [F.lit(1.0) / (F.lit(1.0) + F.exp(-lps[0]))]
+    if family == "poisson":
+        return [F.exp(lps[0])]
+    if family == "multinomial":
+        mx = F.greatest(*lps, F.lit(0.0))
+        denom = F.exp(F.lit(0.0) - mx)
+        for lp in lps:
+            denom = denom + F.exp(lp - mx)
+        return ([F.exp(lp - mx) / denom for lp in lps]
+                + [F.exp(F.lit(0.0) - mx) / denom])
+    return lps
+
+
+def _argmax_class_col(cols: list, names) -> Column:
+    """The class name of the largest of ``cols`` (first one on ties)."""
+    arr = F.array(*cols)
+    idx = F.array_position(arr, F.array_max(arr)) - 1
+    name_arr = F.array(*[F.lit(nm) for nm in names])
+    return F.element_at(name_arr, (idx + 1).cast("int"))
+
+
+def _lp_np(x: np.ndarray, betas: np.ndarray, intercept: bool) -> np.ndarray:
+    """Dense linear predictor: x (n, p) and betas (p_total, m, K) give
+    lp (n, m, K)."""
+    off = 1 if intercept else 0
+    lp = np.stack([x @ betas[off:, :, k] for k in range(betas.shape[2])],
+                  axis=2)
+    if intercept:
+        lp += betas[0][None, :, :]
+    return lp
+
+
+def _mean_np(family: str, lp: np.ndarray) -> np.ndarray:
+    """Inverse link over lp (n, m, ...): the target axis is axis 1, and
+    multinomial gains the implicit reference class as its last entry.
+    No mean overflows: lp is clipped to +-700 before the sigmoid and exp
+    links, and the softmax is max-shifted."""
+    if family == "binomial":
+        return 1.0 / (1.0 + np.exp(-np.clip(lp, -700, 700)))
+    if family == "poisson":
+        return np.exp(np.clip(lp, -700, 700))
+    if family == "multinomial":
+        full = np.concatenate([lp, np.zeros_like(lp[:, :1])], axis=1)
+        full -= full.max(axis=1, keepdims=True)
+        e = np.exp(full)
+        return e / e.sum(axis=1, keepdims=True)
+    return lp
+
+
+def _predict_np(family: str, names, lp: np.ndarray, type: str) -> np.ndarray:
+    """lp (n, m, K) -> link (n, m, K), response (n, m or m + 1, K) or
+    class names (n, K)."""
+    if type == "link":
+        return lp
+    if type == "response":
+        return _mean_np(family, lp)
+    if family == "binomial":
+        idx = (lp[:, 0] > 0).astype(int)
+    else:
+        idx = np.argmax(np.concatenate(
+            [lp, np.zeros_like(lp[:, :1])], axis=1), axis=1)
+    return np.asarray(names)[idx]
+
+
+# ---------------------------------------------------------------------------
 # Prediction
 # ---------------------------------------------------------------------------
 
-def _linear_predictor_np(x: np.ndarray, beta: np.ndarray, intercept: bool) -> np.ndarray:
-    if intercept:
-        return beta[0, :][None, :] + x @ beta[1:, :]
-    return x @ beta
+def _point_beta(fit: OwlFit, sigma, path_idx) -> np.ndarray:
+    """(p_total, m) coefficients of ONE path point."""
+    if sigma is not None:
+        return coef_at(fit, float(np.atleast_1d(sigma)[0]), simplify=False)[:, :, 0]
+    return fit.coefficients[:, :, path_idx if path_idx is not None else fit.n_sigma - 1]
 
 
 def predict(fit: OwlFit, x=None, *, df: DataFrame | None = None,
@@ -114,10 +212,16 @@ def predict(fit: OwlFit, x=None, *, df: DataFrame | None = None,
     over sparse rows via one Arrow map pass (no literal expression per
     feature — survives wide p).
     """
+    if type not in ("link", "response", "class"):
+        raise ValueError(f"unknown type {type!r}")
+    if type == "class" and fit.family not in ("binomial", "multinomial"):
+        raise ValueError(f"type='class' not defined for family {fit.family!r}")
     if df is not None and sparse_features is not None:
-        return _predict_sparse(fit, df, sparse_features, sigma, type, path_idx)
+        return _predict_sparse(fit, df, sparse_features,
+                               _point_beta(fit, sigma, path_idx), type)
     if df is not None:
-        return _predict_spark(fit, df, feature_cols, sigma, type, path_idx)
+        return _predict_spark(fit, df, feature_cols,
+                              _point_beta(fit, sigma, path_idx), type)
 
     x = np.asarray(x, dtype=np.float64)
     if sigma is not None:
@@ -126,164 +230,58 @@ def predict(fit: OwlFit, x=None, *, df: DataFrame | None = None,
         betas = fit.coefficients[:, :, [path_idx]]
     else:
         betas = fit.coefficients
-    K = betas.shape[2]
-    outs = []
-    for k in range(K):
-        lp = _linear_predictor_np(x, betas[:, :, k], fit.intercept)
-        outs.append(_apply_link_np(fit, lp, type))
-    out = np.stack(outs, axis=-1)
-    return out[..., 0] if K == 1 else out
+    out = _predict_np(fit.family, fit.class_names,
+                      _lp_np(x, betas, fit.intercept), type)
+    return out[..., 0] if betas.shape[2] == 1 else out
 
 
-def _apply_link_np(fit: OwlFit, lp: np.ndarray, type: str):
-    fam = fit.family
-    if type == "link":
-        return lp
-    if type == "response":
-        if fam == "gaussian":
-            return lp
-        if fam == "binomial":
-            return 1.0 / (1.0 + np.exp(-lp))
-        if fam == "poisson":
-            return np.exp(lp)
-        if fam == "multinomial":
-            full = np.hstack([lp, np.zeros((lp.shape[0], 1))])
-            full -= full.max(axis=1, keepdims=True)
-            e = np.exp(full)
-            return e / e.sum(axis=1, keepdims=True)
-        raise ValueError(fam)
-    if type == "class":
-        names = fit.class_names
-        if fam == "binomial":
-            idx = (lp[:, 0] > 0).astype(int)
-            return np.asarray([names[i] for i in idx])
-        if fam == "multinomial":
-            full = np.hstack([lp, np.zeros((lp.shape[0], 1))])
-            return np.asarray([names[i] for i in np.argmax(full, axis=1)])
-        raise ValueError(f"type='class' not defined for family {fam!r}")
-    raise ValueError(f"unknown type {type!r}")
-
-
-def _predict_sparse(fit: OwlFit, df: DataFrame, sparse_features, sigma,
-                    type, path_idx):
+def _predict_sparse(fit: OwlFit, df: DataFrame, sparse_features, beta, type):
     """Arrow map pass appending pred_* columns for ONE path point from
     (indices, values) rows — the coefficient vector rides in the
     closure as a CSR matvec, never as per-feature literals."""
-    import pandas as pd
-
-    if sigma is not None:
-        beta = coef_at(fit, float(np.atleast_1d(sigma)[0]), simplify=False)[:, :, 0]
-    else:
-        beta = fit.coefficients[:, :, path_idx if path_idx is not None else fit.n_sigma - 1]
-    B = np.ascontiguousarray(beta)
+    B = np.ascontiguousarray(beta)[:, :, None]
     m = B.shape[1]
-    intercept = fit.intercept
-    fam = fit.family
-    names = fit.class_names
+    fam, names, intercept = fit.family, fit.class_names, fit.intercept
     idx_col, val_col = sparse_features
-
-    if type == "class" and fam not in ("binomial", "multinomial"):
-        raise ValueError(f"type='class' not defined for family {fam!r}")
-    if type not in ("link", "response", "class"):
-        raise ValueError(f"unknown type {type!r}")
 
     if type == "class":
         out_fields = "pred_class string"
-    elif type == "response" and fam == "multinomial":
-        out_fields = ", ".join(f"pred_{t} double" for t in range(m + 1))
     else:
-        out_fields = ", ".join(f"pred_{t} double" for t in range(m))
+        width = m + 1 if type == "response" and fam == "multinomial" else m
+        out_fields = ", ".join(f"pred_{t} double" for t in range(width))
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
                        for f in df.schema.fields) + ", " + out_fields
 
     def op(batches):
-        from golem_spark.backends import _csr_batch
+        from golem_spark.backends import SparseArrowBackend, _csr_batch
 
         for pdf in batches:
             nrow, lens, rows, fi, fv = _csr_batch(pdf, idx_col, val_col)
-            Bf = B[1:] if intercept else B
-            lp = np.zeros((nrow, m))
-            for t in range(m):
-                lp[:, t] = np.bincount(rows, weights=fv * Bf[fi, t],
-                                       minlength=nrow)
-            if intercept:
-                lp += B[0][None, :]
+            lp = SparseArrowBackend._lp(nrow, rows, fi, fv, B, intercept)
+            vals = _predict_np(fam, names, lp, type)[..., 0]
             out = pdf.copy()
-            if type == "link" or (type == "response" and fam == "gaussian"):
-                for t in range(m):
-                    out[f"pred_{t}"] = lp[:, t]
-            elif type == "response" and fam == "binomial":
-                out["pred_0"] = 1.0 / (1.0 + np.exp(-np.clip(lp[:, 0], -700, 700)))
-            elif type == "response" and fam == "poisson":
-                out["pred_0"] = np.exp(np.clip(lp[:, 0], -700, 700))
-            elif type == "response":  # multinomial
-                full = np.hstack([lp, np.zeros((nrow, 1))])
-                full -= full.max(axis=1, keepdims=True)
-                e = np.exp(full)
-                probs = e / e.sum(axis=1, keepdims=True)
-                for t in range(m + 1):
-                    out[f"pred_{t}"] = probs[:, t]
-            elif fam == "binomial":  # class
-                out["pred_class"] = np.where(lp[:, 0] > 0, names[1], names[0])
-            else:  # multinomial class
-                full = np.hstack([lp, np.zeros((nrow, 1))])
-                out["pred_class"] = [names[i] for i in np.argmax(full, axis=1)]
+            if type == "class":
+                out["pred_class"] = vals
+            else:
+                for t in range(vals.shape[1]):
+                    out[f"pred_{t}"] = vals[:, t]
             yield out
 
     return df.mapInPandas(op, schema)
 
 
-def _predict_spark(fit: OwlFit, df: DataFrame, feature_cols, sigma, type, path_idx):
-    feature_cols = feature_cols or fit.feature_names
-    if sigma is not None:
-        beta = coef_at(fit, float(np.atleast_1d(sigma)[0]), simplify=False)[:, :, 0]
-    else:
-        beta = fit.coefficients[:, :, path_idx if path_idx is not None else fit.n_sigma - 1]
-    m = beta.shape[1]
-    off = 1 if fit.intercept else 0
-    lps = []
-    for t in range(m):
-        expr = F.lit(float(beta[0, t])) if fit.intercept else F.lit(0.0)
-        for j, c in enumerate(feature_cols):
-            b = float(beta[j + off, t])
-            if b != 0.0:
-                expr = expr + F.lit(b) * F.col(c).cast("double")
-        lps.append(expr)
-
-    fam = fit.family
-    if type == "link":
-        out = df
-        for t in range(m):
-            out = out.withColumn(f"pred_{t}", lps[t])
-        return out
-    if type == "response":
-        out = df
-        if fam == "gaussian":
-            for t in range(m):
-                out = out.withColumn(f"pred_{t}", lps[t])
-        elif fam == "binomial":
-            out = out.withColumn("pred_0", F.lit(1.0) / (F.lit(1.0) + F.exp(-lps[0])))
-        elif fam == "poisson":
-            out = out.withColumn("pred_0", F.exp(lps[0]))
-        elif fam == "multinomial":
-            mx = F.greatest(*lps, F.lit(0.0)) if m > 1 else F.greatest(lps[0], F.lit(0.0))
-            denom = F.exp(F.lit(0.0) - mx)
-            for t in range(m):
-                denom = denom + F.exp(lps[t] - mx)
-            for t in range(m):
-                out = out.withColumn(f"pred_{t}", F.exp(lps[t] - mx) / denom)
-            out = out.withColumn(f"pred_{m}", F.exp(F.lit(0.0) - mx) / denom)
-        return out
+def _predict_spark(fit: OwlFit, df: DataFrame, feature_cols, beta, type):
+    features = [F.col(c).cast("double")
+                for c in feature_cols or fit.feature_names]
+    lps = _lp_cols(beta, features, fit.intercept)
+    names = fit.class_names
     if type == "class":
-        names = fit.class_names
-        if fam == "binomial":
-            return df.withColumn(
-                "pred_class",
-                F.when(lps[0] > 0, F.lit(names[1])).otherwise(F.lit(names[0])))
-        if fam == "multinomial":
-            arr = F.array(*lps, F.lit(0.0))
-            idx = F.array_position(arr, F.array_max(arr)) - 1
-            name_arr = F.array(*[F.lit(nm) for nm in names])
-            return df.withColumn("pred_class", F.element_at(name_arr, (idx + 1).cast("int")))
-        raise ValueError(f"type='class' not defined for family {fam!r}")
-    raise ValueError(f"unknown type {type!r}")
+        if fit.family == "binomial":
+            pred = F.when(lps[0] > 0, F.lit(names[1])).otherwise(F.lit(names[0]))
+        else:
+            pred = _argmax_class_col(lps + [F.lit(0.0)], names)
+        return df.withColumn("pred_class", pred)
+    out = df
+    for t, col in enumerate(lps if type == "link" else _mean_cols(fit.family, lps)):
+        out = out.withColumn(f"pred_{t}", col)
+    return out

@@ -18,10 +18,11 @@ reference's randomized jitter (R/score.R:153).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from golem_spark.path import OwlFit
-from golem_spark.predict import predict, coef_at
+from golem_spark.predict import (_argmax_class_col, _lp_cols, _lp_np,
+                                 _mean_cols, _mean_np, coef_at)
 
 _CLAMP = 1e-15
 
@@ -70,64 +71,138 @@ def deviance(fit: OwlFit) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
+# Score measures: the one numpy kernel and the one Catalyst builder that
+# every plane (numpy, dense Spark, sparse Spark, fused CV) goes through
+# ---------------------------------------------------------------------------
+
+def _label_cols(family: str, m: int, label_col) -> list[str]:
+    """The label column(s) a fit with m targets scores against: one per
+    target for gaussian, exactly one for every other family."""
+    cols = [label_col] if isinstance(label_col, str) else list(label_col)
+    want = m if family == "gaussian" else 1
+    if len(cols) != want:
+        raise ValueError(f"scoring this {m}-target {family} fit needs "
+                         f"{want} label column(s), got {len(cols)}")
+    return cols
+
+
+def _response_np(family: str, class_names, y) -> np.ndarray:
+    """The kernel's response from raw labels: y (n, m) for
+    gaussian/poisson, the 0/1 indicator y01 (n, 1) for binomial, a
+    one-hot (n, classes) for multinomial."""
+    if family in ("gaussian", "poisson"):
+        yv = np.asarray(y, dtype=np.float64)
+        return yv.reshape(yv.shape[0], -1)
+    lab = [str(v) for v in np.asarray(y).ravel()]
+    names = [str(c) for c in class_names]
+    if family == "binomial":
+        return np.asarray([[0.0 if v == names[0] else 1.0] for v in lab])
+    Y = np.zeros((len(lab), len(names)))
+    Y[np.arange(len(lab)), [names.index(v) for v in lab]] = 1.0
+    return Y
+
+
+def _score_sums(family: str, measure: str, lp: np.ndarray,
+                response: np.ndarray) -> np.ndarray:
+    """Per-path-point sums of one measure's row terms: lp (n, m, K) and
+    a ``_response_np``-shaped response give (K,). ``_score_finish``
+    turns the sums over all n rows into the score."""
+    mu = _mean_np(family, lp)  # (n, m or m + 1, K)
+    obs = response[:, :, None]
+    if measure in ("mse", "mae"):
+        d = mu - obs
+        return np.sum(d * d if measure == "mse" else np.abs(d), axis=(0, 1))
+    if measure == "deviance":
+        pc = np.clip(mu, _CLAMP, 1 - _CLAMP)
+        ll = obs * np.log(pc)
+        if family == "binomial":
+            ll = ll + (1 - obs) * np.log(1 - pc)
+        return np.sum(ll, axis=(0, 1))
+    if measure == "misclass":
+        if family == "binomial":
+            wrong = (mu[:, 0] > 0.5) != (response[:, :1] == 1.0)
+        else:
+            wrong = (np.argmax(mu, axis=1)
+                     != np.argmax(response, axis=1)[:, None])
+        return wrong.sum(axis=0).astype(np.float64)
+    raise ValueError(f"unknown measure {measure!r}")
+
+
+def _score_finish(family: str, measure: str, sums: np.ndarray, n: float,
+                  m: int) -> np.ndarray:
+    """Scores from ``_score_sums`` over n rows of a fit with m targets:
+    the mean, x-2 for deviance, and mse/mae averaged over the response
+    columns (targets, or the m + 1 multinomial classes)."""
+    vals = sums / n
+    if measure == "deviance":
+        return -2.0 * vals
+    width = m + 1 if family == "multinomial" else m
+    if measure in ("mse", "mae") and width > 1:
+        return vals / float(width)
+    return vals
+
+
+def _score_agg(family: str, measure: str, beta: np.ndarray, features: list,
+               intercept: bool, response: list, *, cond=None, label=None,
+               names=None) -> Column:
+    """The aggregate Column of one measure at ONE path point ``beta``
+    (p_total, m). ``features`` are Columns; ``response`` is the y Column
+    per target (gaussian/poisson), [y01] (binomial) or one 0/1
+    indicator per class (multinomial). ``cond`` restricts the average
+    to the rows where it holds (avg skips the nulls ``when`` leaves);
+    multinomial misclass compares the predicted class name against the
+    ``label`` Column."""
+    mu = _mean_cols(family, _lp_cols(beta, features, intercept))
+    if measure in ("mse", "mae"):
+        term = None
+        for pr, obs in zip(mu, response):
+            d = pr - obs
+            t_ = d * d if measure == "mse" else F.abs(d)
+            term = t_ if term is None else term + t_
+    elif measure == "deviance":
+        if family == "binomial":
+            y01 = response[0]
+            pc = F.least(F.greatest(mu[0], F.lit(_CLAMP)), F.lit(1 - _CLAMP))
+            term = (y01 * F.log(pc)
+                    + (F.lit(1.0) - y01) * F.log(F.lit(1.0) - pc))
+        else:
+            term = None
+            for pr, obs in zip(mu, response):
+                pc = F.least(F.greatest(pr, F.lit(_CLAMP)), F.lit(1 - _CLAMP))
+                t_ = obs * F.log(pc)
+                term = t_ if term is None else term + t_
+    elif measure == "misclass":
+        if family == "binomial":
+            wrong = (mu[0] > 0.5) != (response[0] == 1.0)
+        else:
+            wrong = _argmax_class_col(mu, names) != label
+        term = F.when(wrong, 1.0).otherwise(0.0)
+    else:
+        raise ValueError(f"unknown measure {measure!r}")
+    agg = F.avg(term if cond is None else F.when(cond, term))
+    if measure == "deviance":
+        return F.lit(-2.0) * agg
+    if measure in ("mse", "mae") and len(mu) > 1:
+        return agg / F.lit(float(len(mu)))
+    return agg
+
+
+# ---------------------------------------------------------------------------
 # numpy scoring
 # ---------------------------------------------------------------------------
 
 def _score_np(fit: OwlFit, x: np.ndarray, y, measure: str, sigma,
               weights=None) -> np.ndarray:
-    fam = fit.family
-    if sigma is not None:
-        betas = coef_at(fit, sigma, simplify=False)
-    else:
-        betas = fit.coefficients
-    K = betas.shape[2]
-    out = np.zeros(K)
-
-    if fam in ("gaussian", "poisson"):
-        yv = np.asarray(y, dtype=np.float64)
-        if yv.ndim == 1:
-            yv = yv.reshape(-1, 1)
-    elif fam == "binomial":
-        y01 = np.asarray([0.0 if str(v) == str(fit.class_names[0]) else 1.0
-                          for v in np.asarray(y).ravel()])
-    else:
-        names = fit.class_names
-        y_idx = np.asarray([names.index(str(v)) for v in np.asarray(y).ravel()])
-        n_classes = len(names)
-        Y = np.zeros((y_idx.size, n_classes))
-        Y[np.arange(y_idx.size), y_idx] = 1.0
-
-    for k in range(K):
-        sub = OwlFit(**{**fit.__dict__, "coefficients": betas[:, :, [k]]})
-        if fam in ("gaussian", "poisson"):
-            pred = predict(sub, x, type="response")  # (n, m)
-            out[k] = _mse_mae(pred.ravel(), yv.ravel(), measure)
-        elif fam == "binomial":
-            prob = predict(sub, x, type="response")[:, 0]
-            if measure in ("mse", "mae"):
-                out[k] = _mse_mae(prob, y01, measure)
-            elif measure == "deviance":
-                p = np.clip(prob, _CLAMP, 1 - _CLAMP)
-                out[k] = -2.0 * float(np.mean(y01 * np.log(p) + (1 - y01) * np.log(1 - p)))
-            elif measure == "misclass":
-                out[k] = float(np.mean((prob > 0.5) != (y01 == 1.0)))
-            elif measure == "auc":
-                out[k] = _auc_np(y01, prob, weights)
-        else:
-            prob = predict(sub, x, type="response")  # (n, n_classes)
-            if measure in ("mse", "mae"):
-                out[k] = _mse_mae(prob.ravel(), Y.ravel(), measure)
-            elif measure == "deviance":
-                p = np.clip(prob, _CLAMP, 1 - _CLAMP)
-                out[k] = -2.0 * float(np.sum(Y * np.log(p))) / Y.shape[0]
-            elif measure == "misclass":
-                out[k] = float(np.mean(np.argmax(prob, axis=1) != y_idx))
-    return out
-
-
-def _mse_mae(pred: np.ndarray, y: np.ndarray, measure: str) -> float:
-    d = pred - y
-    return float(np.mean(d * d)) if measure == "mse" else float(np.mean(np.abs(d)))
+    betas = fit.coefficients if sigma is None else coef_at(fit, sigma, simplify=False)
+    lp = _lp_np(x, betas, fit.intercept)
+    resp = _response_np(fit.family, fit.class_names, y)
+    if measure == "auc":
+        prob = _mean_np(fit.family, lp)[:, 0]
+        return np.array([_auc_np(resp[:, 0], prob[:, k], weights)
+                         for k in range(prob.shape[1])])
+    return _score_finish(fit.family, measure,
+                         _score_sums(fit.family, measure, lp, resp),
+                         x.shape[0], betas.shape[1])
 
 
 def _auc_np(y01: np.ndarray, prob: np.ndarray,
@@ -187,89 +262,28 @@ def _score_sparse(fit: OwlFit, df: DataFrame, sparse_features, label_col,
         raise ValueError("auc over sparse features is not implemented; "
                          "use a dense scoring frame")
     fam = fit.family
-    if sigma is not None:
-        betas = coef_at(fit, sigma, simplify=False)
-    else:
-        betas = fit.coefficients
-    p_tot, m, K = betas.shape
+    betas = fit.coefficients if sigma is None else coef_at(fit, sigma, simplify=False)
+    _, m, K = betas.shape
     B = np.ascontiguousarray(betas)
     intercept = fit.intercept
     idx_col, val_col = sparse_features
     class_names = fit.class_names
-    label_cols = [label_col] if isinstance(label_col, str) else list(label_col)
-    if fam == "gaussian" and m > 1 and len(label_cols) != m:
-        raise ValueError(f"multi-target gaussian scoring needs {m} label "
-                         f"columns, got {len(label_cols)}")
+    label_cols = _label_cols(fam, m, label_col)
 
     def op(batches):
-        from golem_spark.backends import _csr_batch
+        from golem_spark.backends import SparseArrowBackend, _csr_batch
 
         for pdf in batches:
             nrow, lens, rows, fi, fv = _csr_batch(pdf, idx_col, val_col)
-            lab = pdf[label_cols[0]].to_numpy()
-            # lp: (nrow, m, K) — one O(nnz) bincount per (target, path
-            # point), never an (nnz, m, K) temporary
-            Bf = B[1:] if intercept else B
-            lp = np.empty((nrow, m, K))
-            for t in range(m):
-                for k in range(K):
-                    lp[:, t, k] = np.bincount(rows, weights=fv * Bf[fi, t, k],
-                                              minlength=nrow)
-            if intercept:
-                lp += B[0][None, :, :]
-            part = np.zeros(K + 1)
-            part[K] = float(nrow)
-            if fam in ("gaussian", "poisson"):
-                Yt = pdf[label_cols].to_numpy(dtype=np.float64)  # (nrow, m)
-                pred = np.exp(np.clip(lp, -700, 700)) if fam == "poisson" else lp
-                d = pred - Yt[:, :, None]
-                part[:K] = (np.sum(d * d, axis=(0, 1)) if measure == "mse"
-                            else np.sum(np.abs(d), axis=(0, 1))) / m
-            elif fam == "binomial":
-                y01 = np.asarray([0.0 if str(v) == str(class_names[0]) else 1.0
-                                  for v in lab])
-                prob = 1.0 / (1.0 + np.exp(-np.clip(lp[:, 0, :], -700, 700)))
-                if measure in ("mse", "mae"):
-                    d = prob - y01[:, None]
-                    part[:K] = (np.sum(d * d, axis=0) if measure == "mse"
-                                else np.sum(np.abs(d), axis=0))
-                elif measure == "deviance":
-                    pcl = np.clip(prob, _CLAMP, 1 - _CLAMP)
-                    part[:K] = -2.0 * np.sum(
-                        y01[:, None] * np.log(pcl)
-                        + (1 - y01[:, None]) * np.log(1 - pcl), axis=0)
-                elif measure == "misclass":
-                    part[:K] = np.sum((prob > 0.5) != (y01[:, None] == 1.0),
-                                      axis=0)
-            else:  # multinomial
-                names = class_names
-                y_idx = np.asarray([names.index(str(v)) for v in lab])
-                full = np.concatenate(
-                    [lp, np.zeros((nrow, 1, K))], axis=1)  # implicit class
-                full -= full.max(axis=1, keepdims=True)
-                e = np.exp(full)
-                prob = e / e.sum(axis=1, keepdims=True)  # (nrow, m+1, K)
-                Y = np.zeros((nrow, len(names)))
-                Y[np.arange(nrow), y_idx] = 1.0
-                if measure in ("mse", "mae"):
-                    d = prob - Y[:, :, None]
-                    s = (np.sum(d * d, axis=(0, 1)) if measure == "mse"
-                         else np.sum(np.abs(d), axis=(0, 1)))
-                    part[:K] = s / len(names)
-                elif measure == "deviance":
-                    pcl = np.clip(prob, _CLAMP, 1 - _CLAMP)
-                    part[:K] = -2.0 * np.sum(Y[:, :, None] * np.log(pcl),
-                                             axis=(0, 1))
-                elif measure == "misclass":
-                    part[:K] = np.sum(np.argmax(prob, axis=1)
-                                      != y_idx[:, None], axis=0)
+            lp = SparseArrowBackend._lp(nrow, rows, fi, fv, B, intercept)
+            resp = _response_np(fam, class_names, pdf[label_cols].to_numpy())
+            part = np.append(_score_sums(fam, measure, lp, resp), float(nrow))
             yield pd.DataFrame({"part": [part]})
 
     out = _collect_partials(
         df.select(idx_col, val_col, *label_cols).mapInPandas(
             op, "part array<double>"), K + 1)
-    n = max(out[K], 1.0)
-    return out[:K] / n
+    return _score_finish(fam, measure, out[:K], max(out[K], 1.0), m)
 
 
 # ---------------------------------------------------------------------------
@@ -465,91 +479,35 @@ def segment_auc(df: DataFrame, y01, prob, segment_col: str,
 def _score_spark(fit: OwlFit, df: DataFrame, feature_cols, label_col, measure, sigma,
                  weight_col: str | None = None) -> np.ndarray:
     fam = fit.family
-    feature_cols = feature_cols or fit.feature_names
-    if sigma is not None:
-        betas = coef_at(fit, sigma, simplify=False)
-    else:
-        betas = fit.coefficients
+    betas = fit.coefficients if sigma is None else coef_at(fit, sigma, simplify=False)
     K = betas.shape[2]
-    off = 1 if fit.intercept else 0
-    y = F.col(label_col)
-
+    label_cols = _label_cols(fam, betas.shape[1], label_col)
+    features = [F.col(c).cast("double")
+                for c in feature_cols or fit.feature_names]
+    names = fit.class_names
+    y = F.col(label_cols[0])
     if fam == "binomial":
-        y01 = F.when(y == fit.class_names[0], 0.0).otherwise(1.0) \
-            if fit.class_names else y.cast("double")
-    if fam == "multinomial":
-        names = fit.class_names
-
-    def lp_expr(beta, t):
-        expr = F.lit(float(beta[0, t])) if fit.intercept else F.lit(0.0)
-        for j, c in enumerate(feature_cols):
-            b = float(beta[j + off, t])
-            if b != 0.0:
-                expr = expr + F.lit(b) * F.col(c).cast("double")
-        return expr
+        response = [F.when(y == names[0], 0.0).otherwise(1.0)
+                    if names else y.cast("double")]
+    elif fam == "multinomial":
+        response = [F.when(y == nm, 1.0).otherwise(0.0) for nm in names]
+    else:
+        response = [F.col(c).cast("double") for c in label_cols]
 
     if measure == "auc":
-        probs = [F.lit(1.0) / (F.lit(1.0) + F.exp(-lp_expr(betas[:, :, k], 0)))
+        probs = [_mean_cols(fam, _lp_cols(betas[:, :, k], features,
+                                          fit.intercept))[0]
                  for k in range(K)]
-        return _spark_auc_all(df, y01, probs, weight_col)
+        return _spark_auc_all(df, response[0], probs, weight_col)
 
     # measure may be a LIST of non-auc measures: every measure's agg
     # columns are siblings of ONE aggregation, so a serving query that
     # reports mse+deviance+misclass pays one data pass instead of three
     # (each column's value is computed by the same expression either way)
     measures = [measure] if isinstance(measure, str) else list(measure)
-    aggs = []
-    for mi, meas in enumerate(measures):
-        for k in range(K):
-            beta = betas[:, :, k]
-            a = f"s{mi}_{k}"
-            if fam in ("gaussian", "poisson"):
-                pred = lp_expr(beta, 0)
-                if fam == "poisson":
-                    pred = F.exp(pred)
-                d = pred - y.cast("double")
-                aggs.append((F.avg(d * d) if meas == "mse" else F.avg(F.abs(d))).alias(a))
-            elif fam == "binomial":
-                prob = F.lit(1.0) / (F.lit(1.0) + F.exp(-lp_expr(beta, 0)))
-                if meas in ("mse", "mae"):
-                    d = prob - y01
-                    aggs.append((F.avg(d * d) if meas == "mse" else F.avg(F.abs(d))).alias(a))
-                elif meas == "deviance":
-                    p = F.least(F.greatest(prob, F.lit(_CLAMP)), F.lit(1 - _CLAMP))
-                    ll = y01 * F.log(p) + (F.lit(1.0) - y01) * F.log(F.lit(1.0) - p)
-                    aggs.append((F.lit(-2.0) * F.avg(ll)).alias(a))
-                elif meas == "misclass":
-                    wrong = (prob > 0.5) != (y01 == 1.0)
-                    aggs.append(F.avg(F.when(wrong, 1.0).otherwise(0.0)).alias(a))
-            elif fam == "multinomial":
-                m = betas.shape[1]
-                lps = [lp_expr(beta, t) for t in range(m)]
-                mx = F.greatest(*lps, F.lit(0.0)) if m > 1 else F.greatest(lps[0], F.lit(0.0))
-                denom = F.exp(F.lit(0.0) - mx)
-                for t in range(m):
-                    denom = denom + F.exp(lps[t] - mx)
-                probs = [F.exp(lps[t] - mx) / denom for t in range(m)] + [F.exp(F.lit(0.0) - mx) / denom]
-                inds = [F.when(y == names[t], 1.0).otherwise(0.0) for t in range(len(names))]
-                if meas in ("mse", "mae"):
-                    terms = None
-                    for pr, ind in zip(probs, inds):
-                        d = pr - ind
-                        t_ = d * d if meas == "mse" else F.abs(d)
-                        terms = t_ if terms is None else terms + t_
-                    aggs.append((F.avg(terms) / F.lit(float(len(names)))).alias(a))
-                elif meas == "deviance":
-                    ll = None
-                    for pr, ind in zip(probs, inds):
-                        p = F.least(F.greatest(pr, F.lit(_CLAMP)), F.lit(1 - _CLAMP))
-                        t_ = ind * F.log(p)
-                        ll = t_ if ll is None else ll + t_
-                    aggs.append((F.lit(-2.0) * F.avg(ll)).alias(a))
-                elif meas == "misclass":
-                    arr = F.array(*probs)
-                    pred_idx = F.array_position(arr, F.array_max(arr)) - 1
-                    name_arr = F.array(*[F.lit(nm) for nm in names])
-                    wrong = F.element_at(name_arr, (pred_idx + 1).cast("int")) != y
-                    aggs.append(F.avg(F.when(wrong, 1.0).otherwise(0.0)).alias(a))
+    aggs = [_score_agg(fam, meas, betas[:, :, k], features, fit.intercept,
+                       response, label=y, names=names).alias(f"s{mi}_{k}")
+            for mi, meas in enumerate(measures) for k in range(K)]
     row = df.agg(*aggs).collect()[0]
     out = np.array([[float(row[f"s{mi}_{k}"]) for k in range(K)]
                     for mi in range(len(measures))])

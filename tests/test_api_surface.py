@@ -268,10 +268,11 @@ def test_freeze_guard_refuses_on_failing_stat_oracles(monkeypatch):
     import subprocess
     import sys
     import types
+    from pathlib import Path
 
     import pytest
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
     import importlib
 
     import freeze_glm
@@ -322,3 +323,27 @@ def test_score_weights_only_for_auc():
         score(fit, x, y.astype(float), measure="mse", weights=np.ones(80))
     with pytest.raises(ValueError, match="match the number"):
         score(fit, x, y.astype(float), measure="auc", weights=np.ones(3))
+
+
+def test_entry_imports_its_own_checkout(tmp_path):
+    """A second checkout (a copy of ``__spark_entry__.py`` and
+    ``golem_spark/``) must import its OWN package, not the one of the
+    checkout these tests run from."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    shutil.copy(root / "__spark_entry__.py", tmp_path)
+    shutil.copytree(root / "golem_spark", tmp_path / "golem_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    code = ("import sys; sys.path.append(sys.argv[1]); "
+            "import __spark_entry__, golem_spark; "
+            "print(golem_spark.__file__)")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run([sys.executable, "-c", code, str(tmp_path)],
+                         cwd=tmp_path.parent, env=env, capture_output=True,
+                         text=True, check=True).stdout.strip()
+    assert Path(out).resolve().is_relative_to(tmp_path.resolve())

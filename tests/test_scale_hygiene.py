@@ -143,8 +143,9 @@ def test_shared_caches_survive_concurrent_verifiers(spark):
     session lifetime)."""
     import sys
     from concurrent.futures import ThreadPoolExecutor
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entry
 
     qs = entry.queries()

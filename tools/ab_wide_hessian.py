@@ -13,10 +13,12 @@ Round-4 measurements (sf0.1, local[32], same JVM, warm):
   pass for ~5% — Bohning kept)
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import golem_spark.solvers as S
 from golem_spark.glm_queries import glm_wide_query

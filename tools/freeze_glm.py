@@ -26,10 +26,12 @@ solver regression that still satisfies the SQL-side identities
 "oracle". Override for debugging only: --unsafe-skip-stat-oracles.
 """
 
+import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # the tests that independently pin coefficient correctness; a refreeze
 # that would encode a solver regression fails here first
@@ -46,7 +48,7 @@ def run_stat_oracles() -> None:
           f"({' '.join(STAT_ORACLE_TESTS)}) ...")
     res = subprocess.run(
         [sys.executable, "-m", "pytest", "-x", "-q", *STAT_ORACLE_TESTS],
-        cwd="/root/repo")
+        cwd=ROOT)
     if res.returncode != 0:
         sys.exit("freeze guard: statistical-oracle tests FAILED — refusing "
                  "to refreeze goldens from a solver that disagrees with the "
@@ -175,7 +177,7 @@ def main() -> None:
             fh.write("    },\n")
         fh.write("}\n\n")
 
-    with open("/root/repo/golem_spark/glm_frozen.py", "w") as fh:
+    with open(os.path.join(ROOT, "golem_spark", "glm_frozen.py"), "w") as fh:
         fh.write('"""AUTO-GENERATED by tools/freeze_glm.py — frozen GLM path\n'
                  "goldens (full precision) PER SCALE FACTOR, keyed by the\n"
                  "lineitem row count. The unsuffixed names are the pinned\n"

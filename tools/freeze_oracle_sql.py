@@ -8,11 +8,12 @@ Run after adding or changing any oracle:  python tools/freeze_oracle_sql.py
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry
 
-OUT = "/root/repo/tests/oracle/queries"
+OUT = os.path.join(ROOT, "tests", "oracle", "queries")
 
 
 def main() -> None:

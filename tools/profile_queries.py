@@ -33,7 +33,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from py4j.clientserver import ClientServerConnection
 from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
@@ -87,7 +88,7 @@ def main() -> None:
         else:
             names = list(qs)
 
-    plans_dir = os.path.join("/root/repo", "plans", tag)
+    plans_dir = os.path.join(ROOT, "plans", tag)
     os.makedirs(plans_dir, exist_ok=True)
     spark = get_spark("profile_queries")
     _count_py4j_calls()

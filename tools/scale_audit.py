@@ -14,9 +14,11 @@ query's flags so a round-over-round diff shows plan regressions.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod
 from golem_spark.session import get_spark

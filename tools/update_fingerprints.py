@@ -29,7 +29,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod
 
@@ -39,7 +40,7 @@ FP_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
 
 def _latest_green() -> set[str]:
     best_round, best = -1, {}
-    for path in glob.glob("/root/repo/CORRECTNESS_r*.json"):
+    for path in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)", path)
         if not m:
             continue
@@ -58,7 +59,7 @@ def _latest_green() -> set[str]:
 
 def _green_by_round() -> dict[int, set[str]]:
     out: dict[int, set[str]] = {}
-    for path in glob.glob("/root/repo/CORRECTNESS_r*.json"):
+    for path in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)", path)
         if not m:
             continue

@@ -18,9 +18,11 @@ lines changes. --json writes the per-query evidence artifact.
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 
