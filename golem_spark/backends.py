@@ -23,6 +23,15 @@ driver-side beta. One implementation per data layout and place:
 
 Feature standardization (reference src/standardize.h:8-71) lives here too:
 center by mean, scale by l1/l2/sd/max with a zero-variance guard.
+
+Every distributed build — ``build_spark_backend``, ``build_sparse_backend``,
+the wide queries' shared context, the fused CV complements and the
+grouped gaussian CV moments — ends in the same build finisher, the one
+place where the closed forms live: ``_scale_from_moments`` (l2/sd/none
+scale from n, means and raw second moments), ``_response_cols`` (the
+encoded response, reference R/preProcessResponse.R), ``_sized`` (the
+cached frame's partition count) and ``_stash_null_model`` (the σ_max
+gradient and null-model means from raw sums, so neither costs a pass).
 """
 
 from __future__ import annotations
@@ -77,6 +86,177 @@ def standardize_local(x: np.ndarray, center: bool, scale: str):
         x_scale = _apply_scale_guard(x_scale)
         x_std = x_std / x_scale
     return x_std, x_center, x_scale
+
+
+# ---------------------------------------------------------------------------
+# The build finisher: every distributed build turns its raw sums into the
+# scale, the encoded response, a sized frame and the stashed null model
+# through these helpers
+# ---------------------------------------------------------------------------
+
+def _scale_from_moments(n, mean, ss, center: bool, scale: str):
+    """(x_center, x_scale) from the row count, the per-feature means and
+    raw second moments: l2 = sqrt(ss - n c^2) around the center in use,
+    sd = sqrt((ss - n mu^2) / (n - 1)) around the mean whatever the
+    center flag, both with the zero-variance guard. l1/max need a
+    centered data pass, so they have no moment form."""
+    mean = np.asarray(mean, dtype=np.float64)
+    x_center = mean.copy() if center else np.zeros(mean.size)
+    if scale == "l2":
+        x_scale = np.sqrt(np.maximum(ss - n * x_center ** 2, 0.0))
+    elif scale == "sd":
+        x_scale = np.sqrt(np.maximum(ss - n * mean ** 2, 0.0) / max(n - 1, 1))
+    elif scale == "none":
+        return x_center, np.ones(mean.size)
+    else:
+        raise ValueError(f"unknown scale {scale!r}")
+    return x_center, _apply_scale_guard(x_scale)
+
+
+def _response_cols(family: str, label_cols: list, classes, y_center) -> list:
+    """The encoded response as unaliased Columns, one per target
+    (reference R/preProcessResponse.R): gaussian minus ``y_center``,
+    poisson cast to double, binomial -1 for ``classes[0]`` and +1
+    otherwise, multinomial the indicators of every class but the last
+    (the implicit reference). Rejects a class set the family cannot
+    model."""
+    if family == "gaussian":
+        return [F.col(c).cast("double") - F.lit(float(mu))
+                for c, mu in zip(label_cols, y_center)]
+    label = F.col(label_cols[0])
+    if family == "poisson":
+        return [label.cast("double")]
+    if family == "binomial":
+        if len(classes) != 2:
+            raise ValueError("binomial response needs exactly 2 classes, "
+                             f"got {len(classes)}")
+        return [F.when(label == classes[0], -1.0).otherwise(1.0)]
+    if family == "multinomial":
+        if len(classes) == 2:
+            raise ValueError("only two classes in response; use family='binomial'")
+        return [F.when(label == c, 1.0).otherwise(0.0) for c in classes[:-1]]
+    raise ValueError(family)
+
+
+def _modeled_classes(family: str, classes: list) -> list:
+    """The classes whose indicators the σ_max gradient and the null
+    model read: binomial's +1 class, multinomial's non-reference ones."""
+    return classes[1:2] if family == "binomial" else classes[:-1]
+
+
+def _sized(frame: DataFrame, n: int) -> DataFrame:
+    """``frame`` at ~20k rows per partition, capped at the core count.
+    The solver hits the cached frame with many small passes: a narrow
+    source (few splits) would serialize them on 1-2 cores, while
+    over-splitting tiny data pays per-partition overhead on every pass
+    (worst for Arrow). Reducing is a coalesce, which merges partitions
+    with no shuffle."""
+    target = max(1, min(frame.sparkSession.sparkContext.defaultParallelism,
+                        n // 20_000 + 1))
+    cur = frame.rdd.getNumPartitions()
+    if cur > target:
+        return frame.coalesce(target)
+    if cur < target:
+        return frame.repartition(target)
+    return frame
+
+
+def _stash_null_model(backend, family: str, n, colsum, xr, ybar,
+                      x_center, x_scale) -> None:
+    """Stash the σ_max gradient |X_std' r| (reference lambdaMax.h:8-60)
+    and the null-model means on ``backend`` from raw sums, so neither
+    ``lambda_max_gradient`` nor ``null_intercepts`` pays a pass.
+
+    ``xr`` is the (p, m) X'r in raw feature units, X_std = (X - c) / s,
+    where r is lambdaMax's response: the class-1 indicator (binomial),
+    the class indicators (multinomial), 1 - y (poisson) or the encoded,
+    centered y (gaussian). ``ybar`` is the per-target mean the null
+    model reads: the class frequencies, else the mean of y.
+    The classification responses are centered, X_std'(r - rbar) =
+    (X'r - rbar X'1) / s with ``colsum`` = X'1 (the centering terms
+    cancel); gaussian and poisson take X_std'r = (X'r - c sum(r)) / s,
+    sum(r) = n ybar and n - n ybar."""
+    ybar = np.asarray(ybar, dtype=np.float64)
+    xr = np.asarray(xr, dtype=np.float64).reshape(len(x_center), ybar.size)
+    if family == "gaussian":
+        g = xr - np.outer(x_center, n * ybar)
+    elif family == "poisson":
+        g = xr - np.outer(x_center, n - n * ybar)
+    else:
+        g = xr - np.outer(colsum, ybar)
+    backend._lam_max_grad = np.abs(
+        (g / np.asarray(x_scale)[:, None]).ravel(order="F"))
+    backend._stash_null_mu(family, ybar)
+
+
+def _lambda_max_response(fam: str, Y: np.ndarray) -> np.ndarray:
+    """lambdaMax's response r over the encoded Y, batch-side in the
+    gradient fallback passes: (Y + 1) / 2, 1 - Y, or Y itself."""
+    if fam == "binomial":
+        return (Y + 1) / 2.0
+    return 1.0 - Y if fam == "poisson" else Y
+
+
+def _label_xr(family: str, colsum, xy, ybar):
+    """(X'r, ybar) for ``_stash_null_model`` from a numeric label's raw
+    X'y and mean: poisson's r = 1 - y gives X'r = X'1 - X'y; gaussian's
+    r is the centered y, X'r = X'y - X'1 ybar, whose mean is 0."""
+    xy = np.asarray(xy, dtype=np.float64).reshape(len(colsum), -1)
+    if family == "poisson":
+        return colsum[:, None] - xy, ybar
+    return xy - np.outer(colsum, ybar), np.zeros(len(ybar))
+
+
+def _meta(x_center, x_scale, y_center, classes, feature_names) -> dict:
+    """The standardization and encoding a build returns beside its
+    backend: what rescale() and predict() undo."""
+    y_center = np.asarray(y_center, dtype=np.float64)
+    return {"x_center": x_center, "x_scale": x_scale, "y_center": y_center,
+            "y_scale": np.ones(y_center.size),
+            "class_names": (None if classes is None
+                            else [str(c) for c in classes]),
+            "n_targets": int(y_center.size),
+            "feature_names": list(feature_names)}
+
+
+def _grouped_stats_aggs(feature_cols: list) -> list:
+    """The aggregate list of a stats pass grouped by label (and, for the
+    fused CV route, fold): row count, null count, sum and raw second
+    moment per feature. Class cardinality is tiny, so the grouped pass
+    costs what a flat one does, map-side combined."""
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    for c in feature_cols:
+        x = F.col(c).cast("double")
+        aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0))
+                    .alias(f"__null_{c}"))
+        aggs.append(F.sum(x).alias(f"__sum_{c}"))
+        aggs.append(F.sum(x * x).alias(f"__ss_{c}"))
+    return aggs
+
+
+def _grouped_stats_sum(rows: list, feature_cols: list, label_col: str):
+    """(n, sums, ss, class_stats) over collected ``_grouped_stats_aggs``
+    rows (as dicts with the group label under ``__lab``): the rows'
+    plain sums, with class_stats = {label: (count, per-feature sums)}.
+    Missing values are rejected like the reference (R/owl.R:350-351)."""
+    bad = [c for c in feature_cols
+           if sum(r[f"__null_{c}"] for r in rows) > 0]
+    if any(r["__lab"] is None for r in rows):
+        bad.append(label_col)
+    if bad:
+        raise ValueError(f"missing values in columns: {bad}")
+    n = int(sum(r["__n"] for r in rows))
+    sums = np.array([float(sum(r[f"__sum_{c}"] for r in rows))
+                     for c in feature_cols])
+    ss = np.array([float(sum(r[f"__ss_{c}"] for r in rows))
+                   for c in feature_cols])
+    class_stats: dict = {}
+    for r in rows:
+        cn, cs = class_stats.get(r["__lab"], (0, np.zeros(len(feature_cols))))
+        class_stats[r["__lab"]] = (
+            cn + int(r["__n"]),
+            cs + np.array([float(r[f"__sum_{c}"]) for c in feature_cols]))
+    return n, sums, ss, class_stats
 
 
 class LocalBackend:
@@ -209,7 +389,8 @@ class SparkBackend:
     n = 60,000 on 4 cores: 993 ms against 413 ms). Collected partials are
     O(#partitions x p*m) doubles — fine up to p ~ 100k. The closures
     call module-level helpers such as ``_family_numpy``, which pickle by
-    reference, so Python workers must be able to import golem_spark.
+    reference: the workers import golem_spark from the checkout root
+    that ``get_spark`` puts on their PYTHONPATH.
     """
 
     def __init__(self, df: DataFrame, feat_cols: list[str], y_cols: list[str],
@@ -524,12 +705,11 @@ class SparkBackend:
         (poisson's X'y ride-along, the binomial/multinomial grouped
         per-class sums: the common path), else one pass.
 
-        Per batch the closure returns [X'y~, sum(y~), X'1]. The centered
-        binomial/multinomial form distributes over the sum,
-        sum(x*(y~ - mu)) = X'y~ - mu*X'1, and the multinomial's
-        standardize-then-rescale (divide by sd, multiply back) cancels,
-        so the response means come from the same pass — and with them
-        null_intercepts() needs no pass of its own."""
+        Per batch the closure returns [X'r, sum(r), X'1] over the
+        standardized columns and ``_stash_null_model`` finishes them
+        (x_center 0, x_scale 1), so the response means come from the
+        same pass — and with them null_intercepts() needs no pass of
+        its own."""
         pre = getattr(self, "_lam_max_grad", None)
         if pre is not None:
             return pre
@@ -538,32 +718,24 @@ class SparkBackend:
         p = len(self.feat_cols)
 
         def batch(X, Y):
-            if fam == "binomial":
-                yt = (Y + 1) / 2.0
-            elif fam == "poisson":
-                yt = 1.0 - Y
-            else:
-                yt = Y
-            return np.concatenate([(X.T @ yt).ravel(order="F"),
-                                   yt.sum(axis=0), X.sum(axis=0)])
+            r = _lambda_max_response(fam, Y)
+            return np.concatenate([(X.T @ r).ravel(order="F"),
+                                   r.sum(axis=0), X.sum(axis=0)])
 
         out = self._partial_reduce(batch, p * m + m + p)
-        g = out[:p * m].reshape((p, m), order="F")
-        yt_mean = out[p * m:p * m + m] / self.n
-        if fam in ("binomial", "multinomial"):
-            g = g - np.outer(out[p * m + m:], yt_mean)
-        self._stash_null_mu(fam, yt_mean)
-        return np.abs(g.ravel(order="F"))
+        rbar = out[p * m:p * m + m] / self.n
+        _stash_null_model(self, fam, self.n, out[p * m + m:],
+                          out[:p * m].reshape((p, m), order="F"),
+                          1.0 - rbar if fam == "poisson" else rbar,
+                          np.zeros(p), np.ones(p))
+        return self._lam_max_grad
 
-    def _stash_null_mu(self, fam: str, yt_mean: np.ndarray) -> None:
-        """Decode the gradient pass's transformed-response means back to
-        encoded-y means (binomial yt=(y+1)/2, poisson yt=1-y)."""
-        if fam == "binomial":
-            self._null_mu = 2.0 * yt_mean - 1.0
-        elif fam == "poisson":
-            self._null_mu = 1.0 - yt_mean
-        else:
-            self._null_mu = yt_mean.copy()
+    def _stash_null_mu(self, fam: str, ybar: np.ndarray) -> None:
+        """Null-model means of the encoded response from
+        ``_stash_null_model``'s ybar: 2 ybar - 1 over binomial's +-1
+        encoding, ybar itself otherwise."""
+        self._null_mu = (2.0 * ybar - 1.0 if fam == "binomial"
+                         else np.array(ybar, dtype=np.float64))
 
     def null_intercepts(self) -> np.ndarray:
         mu = getattr(self, "_null_mu", None)
@@ -605,6 +777,30 @@ def _csr_batch(pdf, idx_col: str, val_col: str):
     flat_val = _flatten_lists(vl, np.float64)
     rows = np.repeat(np.arange(nrow), lens)
     return nrow, lens, rows, flat_idx, flat_val
+
+
+def _arrow_csr(rb, idx_col: str, val_col: str):
+    """(nrow, rows, cols, vals) of one Arrow batch's (indices, values)
+    list columns, read zero-copy as the ListArrays' flat values and
+    offsets instead of pandas object columns of per-row ndarrays (whose
+    list()+concatenate dominated the pass CPU). Null cells are rejected
+    (the dense path rejects null features the same way)."""
+    nrow = rb.num_rows
+    ia = rb.column(rb.schema.get_field_index(idx_col))
+    va = rb.column(rb.schema.get_field_index(val_col))
+    if (ia.null_count or va.null_count
+            or ia.values.null_count or va.values.null_count):
+        raise ValueError(f"missing values in columns: ['{idx_col}', '{val_col}']")
+    # .values ignores the slice offset; .offsets are absolute into it,
+    # so index values by [offsets[0], offsets[-1])
+    ioff = ia.offsets.to_numpy()
+    voff = va.offsets.to_numpy()
+    cols = ia.values.to_numpy(zero_copy_only=False)[
+        ioff[0]:ioff[-1]].astype(np.int64, copy=False)
+    vals = va.values.to_numpy(zero_copy_only=False)[
+        voff[0]:voff[-1]].astype(np.float64, copy=False)
+    rows = np.repeat(np.arange(nrow), np.diff(ioff))
+    return nrow, rows, cols, vals
 
 
 def _bounded_partials_src(df: DataFrame, out_len: int,
@@ -683,11 +879,9 @@ class SparseArrowBackend(SparkBackend):
     # -- batch plumbing ------------------------------------------------------
 
     def _map_partials(self, src: DataFrame, build_batch_fn) -> DataFrame:
-        """mapInArrow partial reduction: the (indices, values) list
-        columns are consumed as raw Arrow buffers — values + offsets of
-        the ListArray, zero-copy — instead of pandas object columns of
-        600k per-row ndarrays (whose list()+concatenate dominated the
-        pass CPU; measured ~2x faster per pass at sf0.1)."""
+        """mapInArrow partial reduction over ``_arrow_csr`` batches
+        (zero-copy list buffers: measured ~2x faster per pass at sf0.1
+        than pandas object columns)."""
         import pyarrow as pa
 
         idx_col, val_col, y_cols = self.idx_col, self.val_col, list(self.y_cols)
@@ -699,22 +893,7 @@ class SparseArrowBackend(SparkBackend):
 
         def op(batches):
             for rb in batches:
-                nrow = rb.num_rows
-                ia = rb.column(rb.schema.get_field_index(idx_col))
-                va = rb.column(rb.schema.get_field_index(val_col))
-                if (ia.null_count or va.null_count
-                        or ia.values.null_count or va.values.null_count):
-                    raise ValueError(
-                        f"missing values in columns: ['{idx_col}', '{val_col}']")
-                # .values ignores the slice offset; .offsets are absolute
-                # into it, so index values by [offsets[0], offsets[-1])
-                ioff = ia.offsets.to_numpy()
-                voff = va.offsets.to_numpy()
-                cols = ia.values.to_numpy(zero_copy_only=False)[
-                    ioff[0]:ioff[-1]].astype(np.int64, copy=False)
-                flat_val = va.values.to_numpy(zero_copy_only=False)[
-                    voff[0]:voff[-1]].astype(np.float64, copy=False)
-                rows = np.repeat(np.arange(nrow), np.diff(ioff))
+                nrow, rows, cols, flat_val = _arrow_csr(rb, idx_col, val_col)
                 vals = flat_val * inv_scale[cols]
                 if col_map is not None:
                     remap = col_map[cols]
@@ -963,30 +1142,23 @@ class SparseArrowBackend(SparkBackend):
             return pre
         fam = self.family.name
         m, p_feat = self.m, self.p_feat
-        intercept = self.intercept
         xtgf = self._xtg
 
         def batch(nrow, rows, cols, vals, Y):
-            if fam == "binomial":
-                yt = (Y + 1) / 2.0
-            elif fam == "poisson":
-                yt = 1.0 - Y
-            else:
-                yt = Y
-            xy = xtgf(p_feat, rows, cols, vals, yt, False)
+            r = _lambda_max_response(fam, Y)
+            xr = xtgf(p_feat, rows, cols, vals, r, False)
             colsum = np.bincount(cols, weights=vals, minlength=p_feat)
-            ysum = yt.sum(axis=0)
-            return np.concatenate([xy.ravel(order="F"), colsum, ysum, [nrow]])
+            return np.concatenate([xr.ravel(order="F"), colsum,
+                                   r.sum(axis=0), [nrow]])
 
         out = self._partial_reduce(batch, p_feat * m + p_feat + m + 1)
-        xy = out[:p_feat * m].reshape((p_feat, m), order="F")
-        colsum = out[p_feat * m:p_feat * m + p_feat]
-        ysum = out[p_feat * m + p_feat:-1]
         n = out[-1]
-        if fam in ("binomial", "multinomial"):
-            xy = xy - np.outer(colsum, ysum / n)
-        self._stash_null_mu(fam, ysum / n)
-        return np.abs(xy.ravel(order="F"))
+        rbar = out[p_feat * m + p_feat:-1] / n
+        _stash_null_model(self, fam, n, out[p_feat * m:p_feat * m + p_feat],
+                          out[:p_feat * m].reshape((p_feat, m), order="F"),
+                          1.0 - rbar if fam == "poisson" else rbar,
+                          np.zeros(p_feat), np.ones(p_feat))
+        return self._lam_max_grad
 
     def subset(self, cols: np.ndarray) -> "SparseArrowBackend":
         cols = np.asarray(cols)
@@ -1003,6 +1175,128 @@ class SparseArrowBackend(SparkBackend):
             self._lgamma_sum, persist=False, col_sel=base_sel)
 
 
+def _sparse_stats_batch(rb, idx_col: str, val_col: str, p: int,
+                        num_cols=(), str_cols=(), null_cols=(),
+                        lgamma: bool = False):
+    """One Arrow batch's sparse build statistics: the per-batch kernel of
+    every sparse build's stats pass. Returns (part, ymin, labels):
+
+    - ``part`` (summed across batches): [nrow, out-of-range indices,
+      missing labels] + per-feature sum and sum of squares, then per
+      numeric label column its sum, then sum(lgamma(y+1)) of the first
+      one (``lgamma``) and each numeric column's raw X'y, then per
+      string label column the batch's per-class counts and raw
+      X'1[label = c] — the σ_max gradient's ingredients, so no build
+      pays a separate gradient pass;
+    - ``ymin`` (min-reduced): each numeric column's minimum;
+    - ``labels``: each string column's sorted batch-distinct classes (a
+      handful of strings), so class discovery costs no second job.
+
+    ``null_cols`` are label columns that are only null-counted."""
+    import math
+
+    import pyarrow.compute as pc
+
+    nrow, rows, fi, fv = _arrow_csr(rb, idx_col, val_col)
+    bad = float(((fi < 0) | (fi >= p)).sum())
+    fi = np.clip(fi, 0, p - 1)
+    sums = np.bincount(fi, weights=fv, minlength=p)
+    sqs = np.bincount(fi, weights=fv * fv, minlength=p)
+    ynull = float(sum(rb.column(rb.schema.get_field_index(c)).null_count
+                      for c in (*str_cols, *null_cols)))
+    ysums = np.zeros(len(num_cols))
+    ymin = np.full(len(num_cols), np.inf)
+    lgsum = 0.0
+    xys = [np.zeros(p) for _ in num_cols]
+    for j, c in enumerate(num_cols if nrow else ()):
+        col = rb.column(rb.schema.get_field_index(c)).to_numpy(
+            zero_copy_only=False).astype(np.float64, copy=False)
+        ynull += float(np.isnan(col).sum())
+        ysums[j] = np.nansum(col)
+        if not np.all(np.isnan(col)):
+            ymin[j] = float(np.nanmin(col))
+        if lgamma and j == 0:
+            # lgamma over the UNIQUE values only: count labels have few
+            # distincts, and all-distinct doubles just degrade to the
+            # per-element cost — never a groupBy(label) histogram, whose
+            # distinct count is unbounded for double labels
+            ok = ~np.isnan(col) & (col >= 0)
+            uq, inv = np.unique(col[ok], return_inverse=True)
+            lg = np.array([math.lgamma(u + 1.0) for u in uq])
+            lgsum = float(lg[inv].sum()) if uq.size else 0.0
+        xys[j] = np.bincount(fi, weights=fv * np.nan_to_num(col)[rows],
+                             minlength=p)
+    tail = []
+    labels = []
+    for c in str_cols:
+        lcol = rb.column(rb.schema.get_field_index(c))
+        labs = sorted(v for v in pc.unique(lcol).to_pylist() if v is not None)
+        lvals = np.asarray(lcol.to_pandas())
+        inds = [(lvals == v).astype(np.float64) for v in labs]
+        tail.append(np.array([ind.sum() for ind in inds]))
+        tail += [np.bincount(fi, weights=fv * ind[rows], minlength=p)
+                 for ind in inds]
+        labels.append(labs)
+    part = np.concatenate([[float(nrow), bad, ynull], sums, sqs, ysums,
+                           [lgsum], *xys, *tail])
+    return part, ymin, labels
+
+
+def _sparse_stats_pass(frame: DataFrame, idx_col: str, val_col: str, p: int,
+                       num_cols=(), str_cols=(), null_cols=(),
+                       lgamma: bool = False) -> dict:
+    """ONE mapInArrow pass of ``_sparse_stats_batch`` over ``frame``,
+    summed on the driver: n, sums, sqs (per feature), ysum, ymin
+    (per numeric label column), xy (p x numeric columns), lgamma_sum,
+    and per string column cnt {class: count} and xsum {class: X'1[c]}.
+    Rejects out-of-range indices and missing labels."""
+    import pyarrow as pa
+
+    num_cols, str_cols = list(num_cols), list(str_cols)
+    k = len(num_cols)
+
+    def statop(batches):
+        for rb in batches:
+            part, ymin, labels = _sparse_stats_batch(
+                rb, idx_col, val_col, p, num_cols, str_cols, null_cols, lgamma)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([part], type=pa.list_(pa.float64())),
+                 pa.array([ymin], type=pa.list_(pa.float64())),
+                 *[pa.array([labs], type=pa.list_(pa.string()))
+                   for labs in labels]],
+                ["part", "ymin", *[f"l{i}" for i in range(len(str_cols))]])
+
+    schema = ", ".join(["part array<double>", "ymin array<double>",
+                        *[f"l{i} array<string>" for i in range(len(str_cols))]])
+    plen = 3 + 2 * p + k + 1 + k * p
+    tot = np.zeros(plen)
+    ymin = np.full(k, np.inf)
+    cnt: dict = {c: {} for c in str_cols}
+    xsum: dict = {c: {} for c in str_cols}
+    for r in frame.mapInArrow(statop, schema).collect():
+        arr = np.asarray(r["part"])
+        tot += arr[:plen]
+        ymin = np.minimum(ymin, np.asarray(r["ymin"]))
+        off = plen
+        for i, c in enumerate(str_cols):
+            labs = list(r[f"l{i}"] or [])
+            for j, v in enumerate(labs):
+                cnt[c][v] = cnt[c].get(v, 0.0) + float(arr[off + j])
+                seg = arr[off + len(labs) + j * p:off + len(labs) + (j + 1) * p]
+                xsum[c][v] = xsum[c].get(v, 0.0) + seg
+            off += len(labs) * (1 + p)
+    if tot[1] > 0:
+        raise ValueError(f"{int(tot[1])} feature indices outside [0, {p})")
+    if tot[2] > 0:
+        raise ValueError("missing values in columns: "
+                         f"{[*num_cols, *str_cols, *null_cols]}")
+    return {"n": int(tot[0]), "sums": tot[3:3 + p],
+            "sqs": tot[3 + p:3 + 2 * p], "ysum": tot[3 + 2 * p:3 + 2 * p + k],
+            "lgamma_sum": float(tot[3 + 2 * p + k]),
+            "xy": tot[4 + 2 * p + k:].reshape((k, p)).T, "ymin": ymin,
+            "cnt": cnt, "xsum": xsum}
+
+
 def build_sparse_backend(df: DataFrame, idx_col: str, val_col: str,
                          label_col, family_name: str, p: int, *,
                          intercept: bool = True, center: bool = False,
@@ -1013,8 +1307,6 @@ def build_sparse_backend(df: DataFrame, idx_col: str, val_col: str,
     (R/owl.R:359-360: 'centering would destroy sparsity'); scale modes
     l2/sd/none compute from one sparse stats pass and are applied
     lazily inside every kernel."""
-    import pandas as pd
-
     if center:
         raise ValueError("centering would destroy sparsity in x (predictors)")
     if scale not in ("l2", "sd", "none"):
@@ -1024,101 +1316,8 @@ def build_sparse_backend(df: DataFrame, idx_col: str, val_col: str,
     label_cols = [label_col] if isinstance(label_col, str) else list(label_col)
     if len(label_cols) > 1 and family_name != "gaussian":
         raise ValueError(f"family {family_name!r} takes a single label column")
-
-    # one stats pass: n, per-column sum/sumsq (scale), label sums/min
-    # (numeric-label families only), out-of-range index checks
-    need_y_stats = family_name in ("gaussian", "poisson")
-
-    is_poisson = family_name == "poisson"
-
-    def statop(batches):
-        # zero-copy Arrow path (same buffer plumbing as
-        # SparseArrowBackend._partial_reduce): the list columns are read
-        # as flat values + offsets, never as pandas object columns
-        import math as _math
-
-        import pyarrow as pa
-
-        for rb in batches:
-            nrow = rb.num_rows
-            ia = rb.column(rb.schema.get_field_index(idx_col))
-            va = rb.column(rb.schema.get_field_index(val_col))
-            if (ia.null_count or va.null_count
-                    or ia.values.null_count or va.values.null_count):
-                raise ValueError(
-                    f"missing values in columns: ['{idx_col}', '{val_col}']")
-            ioff = ia.offsets.to_numpy()
-            voff = va.offsets.to_numpy()
-            fi = ia.values.to_numpy(zero_copy_only=False)[
-                ioff[0]:ioff[-1]].astype(np.int64, copy=False)
-            fv = va.values.to_numpy(zero_copy_only=False)[
-                voff[0]:voff[-1]].astype(np.float64, copy=False)
-            bad = float(((fi < 0) | (fi >= p)).sum())
-            fi2 = np.clip(fi, 0, p - 1)
-            sums = np.bincount(fi2, weights=fv, minlength=p)
-            sqs = np.bincount(fi2, weights=fv * fv, minlength=p)
-            # row index per nonzero, for the X'y ride-along below
-            row_idx = np.repeat(np.arange(nrow), np.diff(ioff))
-            xys: list[np.ndarray] = []
-            ysums = np.zeros(len(label_cols))
-            ymin = np.inf
-            ynull = 0.0
-            lgsum = 0.0
-            if need_y_stats and nrow:
-                for j, c in enumerate(label_cols):
-                    col = rb.column(rb.schema.get_field_index(c)).to_numpy(
-                        zero_copy_only=False).astype(np.float64, copy=False)
-                    ynull += float(np.isnan(col).sum())
-                    ysums[j] = np.nansum(col)
-                    if j == 0 and not np.all(np.isnan(col)):
-                        ymin = float(np.nanmin(col))
-                    if is_poisson and j == 0:
-                        # SUM(lgamma(y+1)) folded into the same pass —
-                        # never a groupBy(label) histogram (whose
-                        # distinct count is unbounded for double labels).
-                        # lgamma over the UNIQUE values only: count-data
-                        # labels have few distincts, and the worst case
-                        # (all-distinct doubles) just degrades to the
-                        # per-element cost.
-                        ok = ~np.isnan(col) & (col >= 0)
-                        uq, inv = np.unique(col[ok], return_inverse=True)
-                        lg = np.array([_math.lgamma(u + 1.0) for u in uq])
-                        lgsum = float(lg[inv].sum()) if uq.size else 0.0
-                    # raw X'y rides along: with the column sums it gives
-                    # the sigma_max gradient with NO separate data pass
-                    xys.append(np.bincount(
-                        fi2, weights=fv * np.nan_to_num(col)[row_idx],
-                        minlength=p))
-            elif nrow:
-                ynull = float(sum(
-                    rb.column(rb.schema.get_field_index(c)).null_count
-                    for c in label_cols))
-            # classification families: batch-distinct label values ride
-            # along (a handful of strings), so class discovery costs no
-            # second job over the cached projection
-            labels: list[str] = []
-            lcnts: list[float] = []
-            if label_is_string and nrow:
-                import pyarrow.compute as pc
-
-                lcol = rb.column(rb.schema.get_field_index(label_cols[0]))
-                labels = sorted(v for v in pc.unique(lcol).to_pylist()
-                                if v is not None)
-                lvals = np.asarray(lcol.to_pandas())
-                for c in labels:
-                    ind = (lvals == c).astype(np.float64)
-                    lcnts.append(float(ind.sum()))
-                    # per-class raw X'1[label=c]: the classification
-                    # sigma_max gradient's ingredient
-                    xys.append(np.bincount(fi2, weights=fv * ind[row_idx],
-                                           minlength=p))
-            part = np.concatenate([[float(nrow), bad, ynull], sums, sqs,
-                                   ysums, [lgsum, ymin], lcnts,
-                                   *(xys or [np.zeros(0)])])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([part], type=pa.list_(pa.float64())),
-                 pa.array([labels], type=pa.list_(pa.string()))],
-                ["part", "labels"])
+    numeric = family_name in ("gaussian", "poisson")
+    lab = label_cols[0]
 
     # the slim (idx, val, labels) projection is read by the stats pass,
     # the class-discovery distinct (binomial/multinomial), and the
@@ -1132,141 +1331,49 @@ def build_sparse_backend(df: DataFrame, idx_col: str, val_col: str,
         # string classification labels: class discovery rides along in the
         # stats pass (batch-distinct sets); other label types fall back to a
         # distinct() job so class values keep their native type/ordering
-        label_is_string = (not need_y_stats
-                           and dict(proj.dtypes)[label_cols[0]] == "string")
-        parts = proj.mapInArrow(
-            statop, "part array<double>, labels array<string>").collect()
-        seen_labels = sorted({v for r in parts for v in (r["labels"] or [])})
-        nlab = len(label_cols)
-        # fixed prefix: [n, bad, ynull] + sums(p) + sqs(p) + ysums + [lg, ymin];
-        # the variable tail carries per-batch-label counts and raw X'y
-        # vectors (classification) or per-label-col X'y (numeric labels)
-        plen = 3 + 2 * p + nlab + 2
-        tot = np.zeros(plen)
-        ymin = np.inf
-        xy_num = np.zeros((p, nlab))
-        lab_cnt: dict = {}
-        lab_xy: dict = {}
-        for r in parts:
-            arr = np.asarray(r["part"])
-            head = arr[:plen].copy()
-            ymin = min(ymin, head[-1])
-            head[-1] = 0.0
-            tot += head
-            blabels = list(r["labels"] or [])
-            if blabels:
-                k = len(blabels)
-                cnts = arr[plen:plen + k]
-                for i, c in enumerate(blabels):
-                    lab_cnt[c] = lab_cnt.get(c, 0.0) + float(cnts[i])
-                    seg = arr[plen + k + i * p:plen + k + (i + 1) * p]
-                    lab_xy[c] = lab_xy.get(c, 0.0) + seg
-            elif arr.size > plen:
-                xy_num += arr[plen:plen + nlab * p].reshape((nlab, p)).T
-        lgamma_sum = float(tot[-2])
-        n = int(tot[0])
-        if tot[1] > 0:
-            raise ValueError(f"{int(tot[1])} feature indices outside [0, {p})")
-        if tot[2] > 0:
-            raise ValueError(f"missing values in columns: {label_cols}")
-        sums = tot[3:3 + p]
-        sqs = tot[3 + p:3 + 2 * p]
-        ysums = tot[3 + 2 * p:3 + 2 * p + nlab]
+        label_is_string = (not numeric
+                           and dict(proj.dtypes)[lab] == "string")
+        st = _sparse_stats_pass(
+            proj, idx_col, val_col, p, num_cols=label_cols if numeric else (),
+            str_cols=label_cols if label_is_string else (),
+            null_cols=() if numeric or label_is_string else label_cols,
+            lgamma=family_name == "poisson")
+        n = st["n"]
+        _, x_scale = _scale_from_moments(n, st["sums"] / max(n, 1), st["sqs"],
+                                         False, scale)
 
-        if scale == "l2":
-            x_scale = _apply_scale_guard(np.sqrt(sqs))
-        elif scale == "sd":
-            x_scale = _apply_scale_guard(
-                np.sqrt(np.maximum(sqs - sums ** 2 / max(n, 1), 0.0) / max(n - 1, 1)))
-        else:
-            x_scale = np.ones(p)
-        inv_scale = 1.0 / x_scale
-
-        # response encoding (same semantics as build_spark_backend)
-        class_names = None
-        n_targets = 1
-        y_center = np.zeros(1)
-        y_scale = np.ones(1)
+        classes = None
+        y_center = st["ysum"] / max(n, 1)
+        if family_name == "poisson" and st["ymin"][0] < 0:
+            raise ValueError("cannot have negative responses in poisson model")
+        if not numeric:
+            classes = (sorted(st["cnt"][lab])
+                       if label_is_string and family_name == "multinomial" else
+                       [r[0] for r in proj.select(lab).distinct()
+                        .orderBy(lab).collect()])
+        cols = _response_cols(family_name, label_cols, classes, y_center)
+        y_cols = [f"__y{k}" for k in range(len(cols))]
         enc = proj
-        if family_name == "gaussian":
-            n_targets = len(label_cols)
-            y_center = ysums / max(n, 1)
-            y_scale = np.ones(n_targets)
-            for k, c in enumerate(label_cols):
-                enc = enc.withColumn(
-                    f"__y{k}", F.col(c).cast("double") - F.lit(float(y_center[k])))
-            y_cols = [f"__y{k}" for k in range(n_targets)]
-        elif family_name == "binomial":
-            classes = [r[0] for r in
-                       proj.select(label_col).distinct().orderBy(label_col).collect()]
-            if len(classes) != 2:
-                raise ValueError("binomial response needs exactly 2 classes, "
-                                 f"got {len(classes)}")
-            class_names = [str(c) for c in classes]
-            enc = proj.withColumn("__y0", F.when(F.col(label_col) == classes[0], -1.0)
-                                  .otherwise(1.0))
-            y_cols = ["__y0"]
-        elif family_name == "poisson":
-            if ymin < 0:
-                raise ValueError("cannot have negative responses in poisson model")
-            enc = proj.withColumn("__y0", F.col(label_col).cast("double"))
-            y_cols = ["__y0"]
-        elif family_name == "multinomial":
-            classes = (seen_labels if label_is_string else
-                       [r[0] for r in proj.select(label_col).distinct()
-                        .orderBy(label_col).collect()])
-            if len(classes) == 2:
-                raise ValueError("only two classes in response; use family='binomial'")
-            class_names = [str(c) for c in classes]
-            n_targets = len(classes) - 1
-            for k in range(n_targets):
-                enc = enc.withColumn(f"__y{k}", F.when(F.col(label_col) == classes[k],
-                                                       1.0).otherwise(0.0))
-            y_cols = [f"__y{k}" for k in range(n_targets)]
-            y_center = np.zeros(n_targets)
-            y_scale = np.ones(n_targets)
-        else:
-            raise ValueError(family_name)
-
-        std_df = enc.select(idx_col, val_col, *y_cols)
-        target_parts = max(1, min(df.sparkSession.sparkContext.defaultParallelism,
-                                  n // 20_000 + 1))
-        cur_parts = std_df.rdd.getNumPartitions()
-        if cur_parts > target_parts:
-            # reducing: coalesce merges partitions with NO shuffle (the
-            # upstream is already materialized in the projection cache, so
-            # pipelined-parallelism loss doesn't apply)
-            std_df = std_df.coalesce(target_parts)
-        elif cur_parts < target_parts:
-            std_df = std_df.repartition(target_parts)
+        for name, col in zip(y_cols, cols):
+            enc = enc.withColumn(name, col)
+        std_df = _sized(enc.select(idx_col, val_col, *y_cols), n)
 
         backend = SparseArrowBackend(std_df, idx_col, val_col, y_cols, fam,
-                                     intercept, n, p, inv_scale, lgamma_sum)
+                                     intercept, n, p, 1.0 / x_scale,
+                                     st["lgamma_sum"])
         # sigma_max gradient + null-model means from the SAME stats pass
-        # (raw X'y ride-alongs above): zero additional data passes for
-        # lambda_max_gradient / null_intercepts
-        if family_name == "gaussian":
-            g = np.column_stack([
-                inv_scale * (xy_num[:, j] - (ysums[j] / max(n, 1)) * sums)
-                for j in range(nlab)])
-            backend._null_mu = np.zeros(nlab)  # encoded y is centered
-        elif family_name == "poisson":
-            g = (inv_scale * (sums - xy_num[:, 0]))[:, None]
-            backend._null_mu = np.array([ysums[0] / max(n, 1)])
-        elif family_name == "binomial" and label_is_string:
-            c1 = class_names[1]
-            g = (inv_scale * (lab_xy[c1] - (lab_cnt[c1] / n) * sums))[:, None]
-            backend._null_mu = np.array([(n - 2.0 * lab_cnt[class_names[0]]) / n])
-        elif family_name == "multinomial" and label_is_string:
-            g = np.column_stack([
-                inv_scale * (lab_xy[c] - (lab_cnt[c] / n) * sums)
-                for c in class_names[:n_targets]])
-            backend._null_mu = np.array([lab_cnt[c] / n
-                                         for c in class_names[:n_targets]])
-        else:  # non-string classification labels: fall back to the pass
-            g = None
-        if g is not None:
-            backend._lam_max_grad = np.abs(g.ravel(order="F"))
+        # (raw X'y ride-alongs above); non-string classification labels
+        # fall back to lambda_max_gradient's own pass
+        if numeric or label_is_string:
+            if numeric:
+                xr, ybar = _label_xr(family_name, st["sums"], st["xy"],
+                                     y_center)
+            else:
+                gcls = _modeled_classes(family_name, [str(c) for c in classes])
+                xr = np.stack([st["xsum"][lab][c] for c in gcls], axis=1)
+                ybar = np.array([st["cnt"][lab][c] / n for c in gcls])
+            _stash_null_model(backend, family_name, n, st["sums"], xr, ybar,
+                              np.zeros(p), x_scale)
         # materialize the backend's persisted frame FROM the proj cache (a
         # cache-local shuffle, not a second source scan), then release proj
         backend.df.count()
@@ -1276,15 +1383,9 @@ def build_sparse_backend(df: DataFrame, idx_col: str, val_col: str,
         proj.unpersist()
         raise
     proj.unpersist()
-    meta = {
-        "x_center": np.zeros(p),
-        "x_scale": x_scale,
-        "y_center": y_center,
-        "y_scale": y_scale,
-        "class_names": class_names,
-        "n_targets": n_targets,
-        "feature_names": [f"V{j+1}" for j in range(p)],
-    }
+    meta = _meta(np.zeros(p), x_scale,
+                 y_center if family_name == "gaussian" else np.zeros(len(cols)),
+                 classes, [f"V{j+1}" for j in range(p)])
     return backend, meta
 
 
@@ -1357,8 +1458,8 @@ def build_local_sparse_backend(x, y, family_name: str, p: int, *,
     """Assemble a LocalSparseBackend from an in-memory sparse matrix
     given as an iterable of per-row ``(indices, values)`` pairs (the
     same shape as one row of the distributed sparse-features frame).
-    Validation, scaling and response encoding mirror
-    :func:`build_sparse_backend` exactly."""
+    Validation and scaling are :func:`build_sparse_backend`'s; the
+    response is encoded by the family's own preprocess_response."""
     import math
 
     if center:
@@ -1390,17 +1491,9 @@ def build_local_sparse_backend(x, y, family_name: str, p: int, *,
     if not np.all(np.isfinite(vals)):
         raise ValueError("missing or non-finite values in x")
 
-    if scale == "l2":
-        x_scale = _apply_scale_guard(
-            np.sqrt(np.bincount(cols, weights=vals * vals, minlength=p)))
-    elif scale == "sd":
-        sums = np.bincount(cols, weights=vals, minlength=p)
-        sqs = np.bincount(cols, weights=vals * vals, minlength=p)
-        x_scale = _apply_scale_guard(
-            np.sqrt(np.maximum(sqs - sums ** 2 / max(n, 1), 0.0)
-                    / max(n - 1, 1)))
-    else:
-        x_scale = np.ones(p)
+    _, x_scale = _scale_from_moments(
+        n, np.bincount(cols, weights=vals, minlength=p) / n,
+        np.bincount(cols, weights=vals * vals, minlength=p), False, scale)
 
     resp = fam.preprocess_response(y)
     Y = resp["y"]
@@ -1462,18 +1555,6 @@ def _family_numpy(fam: str, Y: np.ndarray, lp: np.ndarray,
     return primal, dual, g
 
 
-def _label_classes(df: DataFrame, label_col: str, stats) -> list:
-    """Sorted distinct label values — from the fused stats pass when
-    available (non-wide), else one distinct() job. Python's sort matches
-    Spark's ascending orderBy for the homogeneous str/numeric label
-    columns a GLM accepts."""
-    try:
-        vals = stats["__classes"]
-    except (KeyError, ValueError, TypeError):
-        return [r[0] for r in df.select(label_col).distinct().orderBy(label_col).collect()]
-    return sorted(vals)
-
-
 def build_spark_backend(df: DataFrame, feature_cols: list[str], label_col: str,
                         family_name: str, intercept: bool = True,
                         center: bool = True, scale: str = "l2",
@@ -1497,16 +1578,19 @@ def build_spark_backend(df: DataFrame, feature_cols: list[str], label_col: str,
 
     label_numeric = all(isinstance(df.schema[c].dataType, T.NumericType)
                         for c in label_cols)
-    wide = len(feature_cols) > 200
+    if family_name in ("gaussian", "poisson") and not label_numeric:
+        raise ValueError(f"family {family_name!r} requires a numeric label column")
+    p = len(feature_cols)
+    wide = p > 200
     if wide and len(label_cols) > 1:
         raise ValueError("wide-p mode supports a single label column")
+    if wide and scale in ("l1", "max"):
+        raise ValueError("wide-p mode supports scale in ('l2','sd','none')")
 
     class_stats: dict | None = None
+    xy = None  # poisson's X'y ride-along
     if not wide and family_name in ("binomial", "multinomial"):
-        # ONE fused pass, GROUPED BY the label (class cardinality is
-        # tiny, so the grouped aggregation costs what the flat one
-        # does, map-side combined): row count, null counts, per-feature
-        # sum + raw second moment — PER CLASS. Class discovery is the
+        # ONE fused pass, GROUPED BY the label: class discovery is the
         # group keys, and the per-class feature sums make the sigma_max
         # gradient AND the null-model means closed-form driver-side
         # (stashed below once x_scale is known), so these families
@@ -1516,50 +1600,27 @@ def build_spark_backend(df: DataFrame, feature_cols: list[str], label_col: str,
         # poisson's from the X'y ride-along, these two from the groups.
         # Like the flat pass below it carries no beta and runs once per
         # build, so it stays a Catalyst aggregation.
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for c in feature_cols:
-            aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"__null_{c}"))
-            aggs.append(F.sum(F.col(c).cast("double")).alias(f"__sum_{c}"))
-            aggs.append(F.sum(F.col(c).cast("double") * F.col(c).cast("double")).alias(f"__ss_{c}"))
         # Bound the driver collect (each grouped row carries 3p+1
         # aggregate columns): a mistakenly continuous / high-cardinality
         # label — the classic family='binomial' user error — would
         # otherwise ship n_distinct x ~3p values to the driver before
-        # the class-count validation below ever ran. The LIMIT caps the
-        # rows fetched at the legal class count (+1 for a possible
-        # null-label group, +1 to detect overflow) with zero extra
-        # scans; overflow raises the class-cardinality error here, on
-        # at most cap+2 collected rows.
+        # the class-count validation ever ran. The LIMIT caps the rows
+        # fetched at the legal class count (+1 for a possible null-label
+        # group, +1 to detect overflow) with zero extra scans; overflow
+        # raises the class-cardinality error here, on at most cap+2
+        # collected rows.
         cap = 2 if family_name == "binomial" else _MAX_MULTINOMIAL_CLASSES
         grows = [r.asDict() for r in
-                 df.groupBy(F.col(label_col).alias("__lab")).agg(*aggs)
+                 df.groupBy(F.col(label_col).alias("__lab"))
+                 .agg(*_grouped_stats_aggs(feature_cols))
                  .limit(cap + 2).collect()]
         if len(grows) > cap + 1:
             raise ValueError(
                 f"family {family_name!r} found more than {cap} distinct "
                 f"label values in {label_col!r} — is the label continuous?")
-        n = int(sum(r["__n"] for r in grows))
-        null_lab = int(sum(r["__n"] for r in grows if r["__lab"] is None))
-        stats = {"__n": n, f"__null_{label_col}": null_lab}
-        for c in feature_cols:
-            stats[f"__null_{c}"] = int(sum(r[f"__null_{c}"] for r in grows))
-            stats[f"__mean_{c}"] = sum(r[f"__sum_{c}"] for r in grows) / max(n, 1)
-            stats[f"__ss_{c}"] = sum(r[f"__ss_{c}"] for r in grows)
-        class_stats = {
-            r["__lab"]: (int(r["__n"]),
-                         np.array([float(r[f"__sum_{c}"]) for c in feature_cols]))
-            for r in grows if r["__lab"] is not None}
-        stats["__classes"] = list(class_stats)
-        if label_numeric:
-            stats["__ymean"] = sum(float(k) * v[0]
-                                   for k, v in class_stats.items()) / max(n, 1)
-            stats["__ymin"] = min((float(k) for k in class_stats),
-                                  default=float("inf"))
-        bad = [c for c in feature_cols if stats[f"__null_{c}"] > 0]
-        if null_lab > 0:
-            bad.append(label_col)
-        if bad:
-            raise ValueError(f"missing values in columns: {bad}")
+        n, sums, ss, class_stats = _grouped_stats_sum(grows, feature_cols,
+                                                      label_col)
+        mu = sums / max(n, 1)
     elif not wide:
         # ONE fused pass: null counts (rejected like the reference,
         # R/owl.R:350-351), row count, per-feature mean + raw second
@@ -1571,12 +1632,11 @@ def build_spark_backend(df: DataFrame, feature_cols: list[str], label_col: str,
         for c in feature_cols:
             aggs.append(F.avg(F.col(c)).alias(f"__mean_{c}"))
             aggs.append(F.sum(F.col(c).cast("double") * F.col(c).cast("double")).alias(f"__ss_{c}"))
-        if label_numeric:
-            aggs.append(F.avg(F.col(label_col).cast("double")).alias("__ymean"))
-            aggs.append(F.min(F.col(label_col).cast("double")).alias("__ymin"))
-            for k, c in enumerate(label_cols[1:], start=1):
-                aggs.append(F.avg(F.col(c).cast("double")).alias(f"__ymean_{k}"))
-        if family_name == "poisson" and label_numeric:
+        aggs.append(F.avg(F.col(label_col).cast("double")).alias("__ymean"))
+        aggs.append(F.min(F.col(label_col).cast("double")).alias("__ymin"))
+        for k, c in enumerate(label_cols[1:], start=1):
+            aggs.append(F.avg(F.col(c).cast("double")).alias(f"__ymean_{k}"))
+        if family_name == "poisson":
             # X'y rides along: with the feature means it yields the
             # sigma_max gradient driver-side (no dedicated pass)
             for c in feature_cols:
@@ -1588,13 +1648,19 @@ def build_spark_backend(df: DataFrame, feature_cols: list[str], label_col: str,
         bad = [c for c in [*feature_cols, *label_cols] if stats[f"__null_{c}"] > 0]
         if bad:
             raise ValueError(f"missing values in columns: {bad}")
+        mu = np.array([float(stats[f"__mean_{c}"]) for c in feature_cols])
+        ss = np.array([float(stats[f"__ss_{c}"]) for c in feature_cols])
+        ymeans = [float(stats["__ymean"])] + [
+            float(stats[f"__ymean_{k}"]) for k in range(1, len(label_cols))]
+        ymin = stats["__ymin"]
+        if family_name == "poisson":
+            xy = np.array([float(stats[f"__xy_{c}"]) for c in feature_cols])
     else:
         # wide-p: expression lists would blow up Catalyst planning —
         # Arrow-batched partial reduction instead (same statistics)
         import pandas as pd
 
         fcols = list(feature_cols)
-        p_ = len(fcols)
 
         def statop(batches):
             for pdf in batches:
@@ -1605,126 +1671,65 @@ def build_spark_backend(df: DataFrame, feature_cols: list[str], label_col: str,
                 Xz = np.nan_to_num(Xb)
                 part = np.concatenate([
                     [float(len(pdf))], nulls, Xz.sum(axis=0), (Xz * Xz).sum(axis=0),
-                    [np.nansum(yv), np.nanmin(yv) if len(yv) else np.inf, ynull]])
+                    # a string label coerces to all-NaN: no minimum (a NaN
+                    # would arrive as a null)
+                    [np.nansum(yv),
+                     np.inf if np.all(np.isnan(yv)) else np.nanmin(yv), ynull]])
                 yield pd.DataFrame({"part": [part.tolist()]})
 
         rows = df.mapInPandas(statop, "part array<double>").collect()
-        tot = np.zeros(1 + 3 * p_ + 3)
-        ymin_acc = np.inf
+        tot = np.zeros(1 + 3 * p + 3)
+        ymin = np.inf
         for r in rows:
             arr = np.asarray(r["part"])
-            ymin_acc = min(ymin_acc, arr[1 + 3 * p_ + 1])
-            arr[1 + 3 * p_ + 1] = 0.0
+            ymin = min(ymin, arr[1 + 3 * p + 1])
+            arr[1 + 3 * p + 1] = 0.0
             tot += arr
         n = int(tot[0])
-        nullcounts = tot[1:1 + p_]
+        nullcounts = tot[1:1 + p]
         if nullcounts.sum() > 0 or tot[-1] > 0:
             bad = [c for c, cnt in zip(fcols, nullcounts) if cnt > 0]
             if tot[-1] > 0:
                 bad.append(label_col)
             raise ValueError(f"missing values in columns: {bad}")
-        sums = tot[1 + p_:1 + 2 * p_]
-        sqsums = tot[1 + 2 * p_:1 + 3 * p_]
-        stats = {"__n": n, "__ymean": tot[1 + 3 * p_] / max(n, 1), "__ymin": ymin_acc}
-        for j, c in enumerate(fcols):
-            stats[f"__mean_{c}"] = sums[j] / max(n, 1)
-            stats[f"__ss_{c}"] = sqsums[j]
-        if scale in ("l1", "max"):
-            raise ValueError("wide-p mode supports scale in ('l2','sd','none')")
+        mu = tot[1 + p:1 + 2 * p] / max(n, 1)
+        ss = tot[1 + 2 * p:1 + 3 * p]
+        ymeans = [tot[1 + 3 * p] / max(n, 1)]
 
     # response encoding
-    y_cols: list[str] = []
-    class_names = None
-    n_targets = 1
-    y_center = np.array([0.0])
-    y_scale = np.array([1.0])
-    if family_name in ("gaussian", "poisson") and not label_numeric:
-        raise ValueError(f"family {family_name!r} requires a numeric label column")
-
+    if family_name == "poisson" and ymin < 0:
+        raise ValueError("cannot have negative responses in poisson model")
+    classes = None
+    if class_stats is not None:
+        classes = sorted(class_stats)
+    elif family_name in ("binomial", "multinomial"):
+        classes = [r[0] for r in
+                   df.select(label_col).distinct().orderBy(label_col).collect()]
+    cols = _response_cols(family_name, label_cols, classes,
+                          ymeans if family_name == "gaussian" else None)
+    y_cols = [f"__y{k}" for k in range(len(cols))]
     enc = df
-    if family_name == "gaussian":
-        y_means = [float(stats["__ymean"])] + [
-            float(stats[f"__ymean_{k}"]) for k in range(1, len(label_cols))]
-        y_center = np.array(y_means)
-        for k, (c, mu_) in enumerate(zip(label_cols, y_means)):
-            enc = enc.withColumn(f"__y{k}", F.col(c).cast("double") - F.lit(mu_))
-        y_cols = [f"__y{k}" for k in range(len(label_cols))]
-        n_targets = len(label_cols)
-        y_scale = np.ones(n_targets)
-    elif family_name == "binomial":
-        classes = _label_classes(df, label_col, stats)
-        if len(classes) != 2:
-            raise ValueError(f"binomial response needs exactly 2 classes, got {len(classes)}")
-        class_names = [str(c) for c in classes]
-        enc = df.withColumn("__y0", F.when(F.col(label_col) == classes[0], -1.0).otherwise(1.0))
-        y_cols = ["__y0"]
-    elif family_name == "poisson":
-        ymin = stats["__ymin"]
-        if ymin < 0:
-            raise ValueError("cannot have negative responses in poisson model")
-        enc = df.withColumn("__y0", F.col(label_col).cast("double"))
-        y_cols = ["__y0"]
-    elif family_name == "multinomial":
-        classes = _label_classes(df, label_col, stats)
-        if len(classes) == 2:
-            raise ValueError("only two classes in response; use family='binomial'")
-        class_names = [str(c) for c in classes]
-        n_targets = len(classes) - 1
-        enc = df
-        for k in range(n_targets):
-            enc = enc.withColumn(f"__y{k}",
-                                 F.when(F.col(label_col) == classes[k], 1.0).otherwise(0.0))
-        y_cols = [f"__y{k}" for k in range(n_targets)]
-        y_center = np.zeros(n_targets)
-        y_scale = np.ones(n_targets)
-    else:
-        raise ValueError(family_name)
+    for name, col in zip(y_cols, cols):
+        enc = enc.withColumn(name, col)
+    y_center = (np.array(ymeans) if family_name == "gaussian"
+                else np.zeros(len(cols)))
 
     # standardization statistics: l2/sd come closed-form from the fused
-    # pass (sum((x-c)^2) = sum(x^2) - n*c^2); l1/max need one centered pass
-    p = len(feature_cols)
-    x_center = np.array([float(stats[f"__mean_{c}"]) for c in feature_cols]) if center else np.zeros(p)
-    mu = np.array([float(stats[f"__mean_{c}"]) for c in feature_cols])
-    ss = np.array([float(stats[f"__ss_{c}"]) for c in feature_cols])
-    if scale in ("l2", "sd"):
-        if scale == "sd":
-            # stddev subtracts the mean regardless of the center flag
-            css = np.maximum(ss - n * mu ** 2, 0.0)
-            x_scale = _apply_scale_guard(np.sqrt(css / max(n - 1, 1)))
-        else:
-            css = np.maximum(ss - n * x_center ** 2, 0.0)
-            x_scale = _apply_scale_guard(np.sqrt(css))
-    elif scale in ("l1", "max"):
+    # pass; l1/max need one centered pass
+    x_center, x_scale = _scale_from_moments(
+        n, mu, ss, center, "none" if scale in ("l1", "max") else scale)
+    if scale in ("l1", "max"):
         centered = [(F.col(c).cast("double") - F.lit(float(x_center[j])))
                     for j, c in enumerate(feature_cols)]
         saggs = [(F.sum(F.abs(e)) if scale == "l1" else F.max(e)).alias(f"s{j}")
                  for j, e in enumerate(centered)]
         srow = enc.agg(*saggs).collect()[0]
         x_scale = _apply_scale_guard(np.array([float(srow[f"s{j}"]) for j in range(p)]))
-    elif scale == "none":
-        x_scale = np.ones(p)
-    else:
-        raise ValueError(f"unknown scale {scale!r}")
 
     feat_std = [f"__f{j}" for j in range(p)]
     sel = [((F.col(c).cast("double") - F.lit(float(x_center[j]))) / F.lit(float(x_scale[j])))
            .alias(feat_std[j]) for j, c in enumerate(feature_cols)]
-    std_df = enc.select(*sel, *[F.col(c) for c in y_cols])
-    # the solver hits this cache with many small aggregation passes; a
-    # narrow parquet (few splits) would serialize them on 1-2 cores,
-    # while over-splitting tiny data pays per-partition overhead on
-    # every pass (worst for Arrow/mapInPandas). Target ~20k rows per
-    # partition, capped at the core count.
-    target_parts = max(1, min(df.sparkSession.sparkContext.defaultParallelism,
-                              n // 20_000 + 1))
-    cur_parts = std_df.rdd.getNumPartitions()
-    if cur_parts > target_parts:
-        # reducing: coalesce merges partitions with NO shuffle (the
-        # upstream is already materialized in the projection cache, so
-        # pipelined-parallelism loss doesn't apply)
-        std_df = std_df.coalesce(target_parts)
-    elif cur_parts < target_parts:
-        std_df = std_df.repartition(target_parts)
+    std_df = _sized(enc.select(*sel, *[F.col(c) for c in y_cols]), n)
 
     lgamma_sum: float | object = 0.0
     if family_name == "poisson":
@@ -1765,38 +1770,14 @@ def build_spark_backend(df: DataFrame, feature_cols: list[str], label_col: str,
         # read through the persisted frame so the deferred scan is
         # cache-local (or IS the materializing scan)
         lg_src = backend.df
-    if family_name == "poisson" and not wide:
-        # sigma_max gradient from the fused stats pass: X_std'(1-y) =
-        # (X'1 - X'y - c*(n - sum_y)) / s, all terms already aggregated
-        ymean = float(stats["__ymean"])
-        xy = np.array([float(stats[f"__xy_{c}"]) for c in feature_cols])
-        g = (n * mu - xy - x_center * (n - n * ymean)) / x_scale
-        backend._lam_max_grad = np.abs(g)
-        backend._null_mu = np.array([ymean])
+    if xy is not None:
+        xr, ybar = _label_xr("poisson", n * mu, xy, np.array(ymeans))
+        _stash_null_model(backend, family_name, n, n * mu, xr, ybar,
+                          x_center, x_scale)
     elif class_stats is not None:
-        # binomial/multinomial sigma_max gradient from the grouped
-        # stats pass: for an indicator response yt = [label = c_k],
-        # X_std'(yt - mean(yt)) = (xsum_k - (n_k/n) * X'1) / s — the
-        # centering terms cancel identically, so the gradient (and the
-        # null-model class means) come from the per-class feature sums
-        # with ZERO additional scans
-        gcls = classes[1:2] if family_name == "binomial" \
-            else classes[:n_targets]
-        sx = n * mu
-        G = np.stack(
-            [(class_stats[c][1] - (class_stats[c][0] / n) * sx) / x_scale
-             for c in gcls], axis=1)
-        backend._lam_max_grad = np.abs(G.ravel(order="F"))
-        backend._stash_null_mu(
-            family_name,
-            np.array([class_stats[c][0] / n for c in gcls]))
-    meta = {
-        "x_center": x_center,
-        "x_scale": x_scale,
-        "y_center": y_center,
-        "y_scale": y_scale,
-        "class_names": class_names,
-        "n_targets": n_targets,
-        "feature_names": list(feature_cols),
-    }
-    return backend, meta
+        gcls = _modeled_classes(family_name, classes)
+        _stash_null_model(backend, family_name, n, n * mu,
+                          np.stack([class_stats[c][1] for c in gcls], axis=1),
+                          np.array([class_stats[c][0] / n for c in gcls]),
+                          x_center, x_scale)
+    return backend, _meta(x_center, x_scale, y_center, classes, feature_cols)

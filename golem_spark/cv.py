@@ -266,32 +266,19 @@ def _moments_sub(a: dict, b: dict | None) -> dict:
 def _gaussian_stats_backend(mom: dict, feature_cols: list[str],
                             intercept: bool, center: bool, scale: str):
     """(backend, meta) from raw moments — the zero-pass analogue of
-    build_spark_backend's gaussian route. Standardization matches its
-    closed forms exactly (l2: sqrt(ss − n c^2), sd: sqrt((ss − n
-    mu^2)/(n−1)), zero-scale guard → 1); the standardized Gram / X'y /
-    ||y_c||^2 follow from the centering algebra
+    build_spark_backend's gaussian route, standardized by the same
+    ``_scale_from_moments``; the standardized Gram / X'y / ||y_c||^2
+    follow from the centering algebra
     X_std'X_std = D^{-1}(X'X − c sx' − sx c' + n c c')D^{-1}."""
-    p = len(feature_cols)
+    from golem_spark.backends import _meta, _scale_from_moments
+
     n = mom["n"]
     sx, xy, G = mom["sx"], mom["xy"], mom["G"]
-    mu = sx / n
-    c = mu if center else np.zeros(p)
+    c, x_scale = _scale_from_moments(n, sx / n, np.diag(G), center, scale)
     ymean = mom["sy"] / n
-    ss = np.diag(G)
-    if scale == "l2":
-        x_scale = np.sqrt(np.maximum(ss - n * c ** 2, 0.0))
-    elif scale == "sd":
-        x_scale = np.sqrt(np.maximum(ss - n * mu ** 2, 0.0) / max(n - 1, 1))
-    elif scale == "none":
-        x_scale = np.ones(p)
-    else:  # callers gate on l2/sd/none; l1/max need a centered pass
-        raise ValueError(f"grouped gaussian CV does not support scale={scale!r}")
-    if scale != "none":
-        x_scale = x_scale.copy()
-        x_scale[x_scale == 0.0] = 1.0
 
     off = 1 if intercept else 0
-    p_total = p + off
+    p_total = len(feature_cols) + off
     gram = np.empty((p_total, p_total))
     Gc = (G - np.outer(c, sx) - np.outer(sx, c) + n * np.outer(c, c))
     gram[off:, off:] = Gc / np.outer(x_scale, x_scale)
@@ -306,12 +293,9 @@ def _gaussian_stats_backend(mom: dict, feature_cols: list[str],
         xty[0, 0] = mom["sy"] - n * ymean
     yty_c = mom["yy"] - 2.0 * ymean * mom["sy"] + n * ymean * ymean
 
-    backend = _GaussianStatsBackend(int(n), p, intercept, gram, xty, yty_c)
-    meta = {"x_center": c, "x_scale": x_scale,
-            "y_center": np.array([ymean]), "y_scale": np.ones(1),
-            "class_names": None, "n_targets": 1,
-            "feature_names": list(feature_cols)}
-    return backend, meta
+    backend = _GaussianStatsBackend(int(n), len(feature_cols), intercept,
+                                    gram, xty, yty_c)
+    return backend, _meta(c, x_scale, np.array([ymean]), None, feature_cols)
 
 
 def _mse_from_moments(mom: dict, fit) -> np.ndarray:
@@ -347,36 +331,6 @@ def _mse_from_moments(mom: dict, fit) -> np.ndarray:
 # the warm-start contract that a golden already satisfying the duality
 # gap is returned UNCHANGED — are preserved.
 # ---------------------------------------------------------------------------
-
-
-def _fold_complement_stats(rows: list[dict], fold, feature_cols,
-                           label_col) -> dict:
-    """Assemble one training complement's statistics from the grouped
-    (fold, label) stats rows: plain sums over the groups outside
-    ``fold`` (complement = the union of the other folds' groups), the
-    same partial-sum structure a per-cell aggregation combines."""
-    sel = [r for r in rows if r["__fold"] != fold]
-    n = int(sum(r["__n"] for r in sel))
-    out = {"n": n}
-    bad = [c for c in feature_cols
-           if sum(r[f"__null_{c}"] for r in sel) > 0]
-    if any(r["__lab"] is None for r in sel):
-        bad.append(label_col)
-    if bad:
-        raise ValueError(f"missing values in columns: {bad}")
-    out["sums"] = np.array([float(sum(r[f"__sum_{c}"] for r in sel))
-                            for c in feature_cols])
-    out["ss"] = np.array([float(sum(r[f"__ss_{c}"] for r in sel))
-                          for c in feature_cols])
-    out["class_stats"] = {}
-    for r in sel:
-        lab = r["__lab"]
-        cn, cs = out["class_stats"].get(
-            lab, (0, np.zeros(len(feature_cols))))
-        out["class_stats"][lab] = (
-            cn + int(r["__n"]),
-            cs + np.array([float(r[f"__sum_{c}"]) for c in feature_cols]))
-    return out
 
 
 def _make_fold_backend(src, fold_col, fold, feat_cols, y_cols, family_name,
@@ -491,11 +445,16 @@ def _fused_cv_setup(df, feature_cols, label_col, key_col, number: int,
     passes; class discovery, standardization, sigma_max gradients,
     null-model means and the poisson lgamma/X'y constants all come from
     the grouped rows with zero extra scans (the per-cell
-    build_spark_backend closed forms, complement-summed)."""
+    build_spark_backend finisher over complement sums)."""
     import math
 
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
+
+    from golem_spark.backends import (_grouped_stats_aggs, _grouped_stats_sum,
+                                      _label_xr, _meta, _modeled_classes,
+                                      _response_cols, _scale_from_moments,
+                                      _sized, _stash_null_model)
 
     scale = owl_kwargs.get("scale", "l2")
     center = owl_kwargs.get("center") in (None, True)
@@ -506,13 +465,7 @@ def _fused_cv_setup(df, feature_cols, label_col, key_col, number: int,
         return None  # per-cell route raises the canonical error
 
     # ---- ONE grouped stats pass per repeat --------------------------------
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for c in feature_cols:
-        aggs.append(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0))
-                    .alias(f"__null_{c}"))
-        aggs.append(F.sum(F.col(c).cast("double")).alias(f"__sum_{c}"))
-        aggs.append(F.sum(F.col(c).cast("double") * F.col(c).cast("double"))
-                    .alias(f"__ss_{c}"))
+    aggs = _grouped_stats_aggs(feature_cols)
     cap = 8192  # (fold x label) groups; a high-cardinality label bails out
     stats_rows: dict[int, list[dict]] = {}
     for rep in range(repeats):
@@ -531,7 +484,11 @@ def _fused_cv_setup(df, feature_cols, label_col, key_col, number: int,
         return None
     if family == "multinomial" and len(classes) < 3:
         return None
-    m = 1 if family != "multinomial" else len(classes) - 1
+    enc_classes = None if family == "poisson" else classes
+    # held-out row count per (fold, rep): an empty fold has no held-out
+    # mean, which the scoring raises on
+    held = {(fold, rep): sum(r["__n"] for r in rows if r["__fold"] == fold)
+            for rep, rows in stats_rows.items() for fold in range(number)}
 
     # ---- shared frame: fold ids + double features + encoded response ------
     sel = [fold_expr(key_col, number, rep).alias(f"__fold_{rep}")
@@ -540,67 +497,33 @@ def _fused_cv_setup(df, feature_cols, label_col, key_col, number: int,
     sel += [F.col(c).cast("double").alias(fc)
             for c, fc in zip(feature_cols, fcols)]
     sel.append(F.col(label_col).alias("__lab"))
-    src = df.select(*sel)
-    if family == "binomial":
-        enc = src.withColumn("__y0", F.when(F.col("__lab") == classes[0],
-                                            -1.0).otherwise(1.0))
-        y_cols = ["__y0"]
-    elif family == "poisson":
-        enc = src.withColumn("__y0", F.col("__lab").cast("double"))
-        y_cols = ["__y0"]
-    else:
-        enc = src
-        for k in range(m):
-            enc = enc.withColumn(
-                f"__y{k}", F.when(F.col("__lab") == classes[k], 1.0)
-                .otherwise(0.0))
-        y_cols = [f"__y{k}" for k in range(m)]
+    enc = df.select(*sel)
+    ycs = _response_cols(family, ["__lab"], enc_classes, None)
+    y_cols = [f"__y{k}" for k in range(len(ycs))]
+    for name, col in zip(y_cols, ycs):
+        enc = enc.withColumn(name, col)
+    m = len(y_cols)
     # the label string's job ends at the encoding: everything downstream
     # (masked passes, fused scoring) reads the encoded y columns, so the
     # persisted frame stays all-numeric — nothing ships a string through
-    # the Arrow boundary (guide §4.1/§2.3)
-    enc = enc.drop("__lab")
-    # same partition sizing as build_spark_backend's cached frame: the
-    # fused passes are Arrow partial reductions whose parallelism IS the
-    # partition count — a raw parquet split count (often < cores here)
-    # would leave most of the machine idle on every pass
+    # the Arrow boundary (guide §4.1/§2.3). The fused passes are Arrow
+    # partial reductions whose parallelism IS the partition count, so
+    # the frame is sized like every built backend's.
     n_total = int(sum(r["__n"] for r in stats_rows[0]))
-    target_parts = max(1, min(df.sparkSession.sparkContext
-                              .defaultParallelism, n_total // 20_000 + 1))
-    cur_parts = enc.rdd.getNumPartitions()
-    if cur_parts > target_parts:
-        enc = enc.coalesce(target_parts)
-    elif cur_parts < target_parts:
-        enc = enc.repartition(target_parts)
-    enc = enc.persist()
+    enc = _sized(enc.drop("__lab"), n_total).persist()
 
-    class_names = (None if family == "poisson"
-                   else [str(c) for c in classes])
     backends: dict[tuple, tuple] = {}
     try:
         for rep in range(repeats):
-            rows = stats_rows[rep]
             for fold in range(number):
-                st = _fold_complement_stats(rows, fold, feature_cols,
-                                            label_col)
-                n, sums, ss = st["n"], st["sums"], st["ss"]
-                cstats = st["class_stats"]
+                n, sums, ss, cstats = _grouped_stats_sum(
+                    [r for r in stats_rows[rep] if r["__fold"] != fold],
+                    feature_cols, label_col)
                 if sorted(cstats) != classes:
                     raise LookupError  # complement missing a class
                 mu = sums / max(n, 1)
-                x_center = mu.copy() if center else np.zeros(p)
-                if scale == "l2":
-                    x_scale = np.sqrt(np.maximum(ss - n * x_center ** 2,
-                                                 0.0))
-                elif scale == "sd":
-                    x_scale = np.sqrt(np.maximum(ss - n * mu ** 2, 0.0)
-                                      / max(n - 1, 1))
-                else:  # "none" (caller gates the scale set)
-                    x_scale = np.ones(p)
-                if scale != "none":
-                    x_scale = x_scale.copy()
-                    x_scale[x_scale == 0.0] = 1.0
-
+                x_center, x_scale = _scale_from_moments(n, mu, ss, center,
+                                                        scale)
                 lgamma_sum = 0.0
                 if family == "poisson":
                     ymin = min(float(c_) for c_ in cstats)
@@ -609,38 +532,26 @@ def _fused_cv_setup(df, feature_cols, label_col, key_col, number: int,
                                          "in poisson model")
                     ysum = sum(float(c_) * cn for c_, (cn, _) in
                                cstats.items())
-                    ymean = ysum / max(n, 1)
                     lgamma_sum = float(sum(
                         cn * math.lgamma(float(c_) + 1.0)
                         for c_, (cn, _) in cstats.items()))
                     xy = np.zeros(p)
                     for c_, (cn, cs) in cstats.items():
                         xy += float(c_) * cs
+                    xr, ybar = _label_xr(family, n * mu, xy,
+                                         np.array([ysum / max(n, 1)]))
+                else:
+                    gcls = _modeled_classes(family, classes)
+                    xr = np.stack([cstats[c_][1] for c_ in gcls], axis=1)
+                    ybar = np.array([cstats[c_][0] / n for c_ in gcls])
                 bk = _make_fold_backend(
                     enc, f"__fold_{rep}", fold, fcols, y_cols, family,
                     intercept, n, lgamma_sum, x_center, x_scale)
-                # sigma_max gradient + null-model means: the same
-                # closed forms build_spark_backend derives from its
-                # fused stats pass, over the complement sums
-                if family == "poisson":
-                    g = (n * mu - xy - x_center * (n - n * ymean)) / x_scale
-                    bk._lam_max_grad = np.abs(g)
-                    bk._null_mu = np.array([ymean])
-                else:
-                    gcls = classes[1:2] if family == "binomial" \
-                        else classes[:m]
-                    G = np.stack(
-                        [(cstats[c_][1] - (cstats[c_][0] / n) * sums)
-                         / x_scale for c_ in gcls], axis=1)
-                    bk._lam_max_grad = np.abs(G.ravel(order="F"))
-                    bk._stash_null_mu(
-                        family,
-                        np.array([cstats[c_][0] / n for c_ in gcls]))
-                meta = {"x_center": x_center, "x_scale": x_scale,
-                        "y_center": np.zeros(m), "y_scale": np.ones(m),
-                        "class_names": class_names, "n_targets": m,
-                        "feature_names": list(feature_cols)}
-                backends[(fold, rep)] = (bk, meta)
+                _stash_null_model(bk, family, n, sums, xr, ybar, x_center,
+                                  x_scale)
+                backends[(fold, rep)] = (bk, _meta(
+                    x_center, x_scale, np.zeros(m), enc_classes,
+                    feature_cols))
     except LookupError:
         enc.unpersist()
         return None  # a complement misses a class: per-cell route
@@ -650,9 +561,17 @@ def _fused_cv_setup(df, feature_cols, label_col, key_col, number: int,
         enc.unpersist()
         raise
     return {"src": enc, "backends": backends, "classes": classes,
-            "y_cols": y_cols, "fcols": fcols, "m": m,
+            "y_cols": y_cols, "fcols": fcols, "m": m, "held": held,
             "intercept": intercept, "family": family, "number": number,
             "repeats": repeats}
+
+
+def _empty_fold(fold, rep) -> ValueError:
+    """The one error every Spark CV route raises for an empty held-out
+    fold: its scores are means over no rows."""
+    return ValueError(f"CV fold {fold} of repeat {rep} holds no rows to "
+                      "score; use fewer folds or a key with more distinct "
+                      "values")
 
 
 def _encoded_response(family: str, ys: list) -> list:
@@ -777,8 +696,7 @@ def _fused_warm_prefetch(fused: dict, warm_by_cell: dict,
             pos += ls[-1] + 1
             if n_held == 0:
                 # an empty held-out fold has no mean: leave the cell to
-                # the grouped scoring, which fails on it exactly as the
-                # per-cell route does
+                # the grouped scoring, which raises _empty_fold on it
                 continue
             spec[(bk._fold, rep)] = {
                 "base": base,
@@ -800,6 +718,9 @@ def _fused_cv_scores(fused: dict, cells: list, fits: dict,
 
     from golem_spark.score import _score_agg
 
+    for _, fold, rep in cells:
+        if fused["held"][(fold, rep)] == 0:
+            raise _empty_fold(fold, rep)
     fam = fused["family"]
     features = [F.col(c) for c in fused["fcols"]]
     response = _encoded_response(fam, [F.col(c) for c in fused["y_cols"]])
@@ -856,6 +777,7 @@ def train_owl_spark(df, feature_cols, label_col, key_col, *, q=(0.2,),
     instead of re-solving from cold (the CV analogue of the wide
     queries' warm certification, VERDICT r12 item 4).
     """
+    from golem_spark.score import _NoRowsToScore, _score_spark
     from golem_spark.score import score as _score
 
     qs = [float(v) for v in np.atleast_1d(q)]
@@ -910,6 +832,10 @@ def train_owl_spark(df, feature_cols, label_col, key_col, *, q=(0.2,),
         grouped = {rep: _gaussian_fold_moments(df, feature_cols, label_col,
                                                key_col, number, rep)
                    for rep in range(repeats)}
+        for rep, folds in grouped.items():
+            for fold, mom in enumerate(folds):
+                if mom["n"] == 0:
+                    raise _empty_fold(fold, rep)
     # dense default center=None resolves to True inside owl
     g_center = owl_kwargs.get("center") in (None, True)
     g_scale = owl_kwargs.get("scale", "l2")
@@ -922,7 +848,7 @@ def train_owl_spark(df, feature_cols, label_col, key_col, *, q=(0.2,),
                 if grouped else None)
 
     # fused non-gaussian route (see the block comment above
-    # _fold_complement_stats): gated to the warm pinned-sigma narrow
+    # _make_fold_backend): gated to the warm pinned-sigma narrow
     # dense bench/gate shape; anything else keeps the per-cell route
     fused: dict | None = None
     if (grouped is None and _grouped is not False
@@ -1001,36 +927,38 @@ def train_owl_spark(df, feature_cols, label_col, key_col, *, q=(0.2,),
             cell_fit = owl(df=train, label_col=label_col,
                            family=family, q=qv, sigma=sig, beta_init=bi,
                            **fit_kw, **cell_kwargs)
-        out = {}
-        test = None
-        fuse: list[str] = []
-        for m in measures:
-            if grouped is not None and m == "mse":
-                # held-out mse closed-form from the fold's own moments
-                out[m] = _mse_from_moments(grouped[rep][fold], cell_fit)
-                continue
-            if test is None:
-                test = df.filter(fold_expr(key_col, number, rep) == fold)
-            if sparse_features is not None:
-                out[m] = _score(cell_fit, df=test,
-                                sparse_features=sparse_features,
-                                label_col=label_col, measure=m)
-            elif m == "auc":
-                out[m] = _score(cell_fit, df=test, feature_cols=feature_cols,
-                                label_col=label_col, measure=m)
-            else:
-                # non-auc dense measures fuse into ONE held-out pass:
-                # every measure's agg columns become siblings of a
-                # single aggregation (identical per-measure expressions
-                # — see _score_spark), k-1 scans saved per cell
-                fuse.append(m)
-        if fuse:
-            from golem_spark.score import _score_spark
-
-            vals = _score_spark(cell_fit, test, feature_cols, label_col,
-                                fuse, None)
-            for mi, m in enumerate(fuse):
-                out[m] = vals[mi]
+        try:
+            out = {}
+            test = None
+            fuse: list[str] = []
+            for m in measures:
+                if grouped is not None and m == "mse":
+                    # held-out mse closed-form from the fold's own moments
+                    out[m] = _mse_from_moments(grouped[rep][fold], cell_fit)
+                    continue
+                if test is None:
+                    test = df.filter(fold_expr(key_col, number, rep) == fold)
+                if sparse_features is not None:
+                    out[m] = _score(cell_fit, df=test,
+                                    sparse_features=sparse_features,
+                                    label_col=label_col, measure=m)
+                elif m == "auc":
+                    out[m] = _score(cell_fit, df=test, feature_cols=feature_cols,
+                                    label_col=label_col, measure=m)
+                else:
+                    # non-auc dense measures fuse into ONE held-out pass:
+                    # every measure's agg columns become siblings of a
+                    # single aggregation (identical per-measure expressions
+                    # — see _score_spark), k-1 scans saved per cell
+                    fuse.append(m)
+            if fuse:
+                vals = _score_spark(cell_fit, test, feature_cols, label_col,
+                                    fuse, None)
+                for mi, m in enumerate(fuse):
+                    out[m] = vals[mi]
+        except _NoRowsToScore as e:
+            # the held-out aggregate is NULL: the fold holds no rows
+            raise _empty_fold(fold, rep) from e
         return cell, out, cell_fit
 
     if max_workers > 1:

@@ -706,13 +706,11 @@ def _wide_sparse_frame(li, fam):
 # families) the p^2 Gram pass — four times over. This context runs ONE
 # stats pass computing every family's ride-alongs at once, materializes
 # ONE persisted encoded frame carrying all five response encodings, and
-# hands owl() prebuilt backends plus a shared gram_cache. Per-batch
-# arithmetic mirrors backends.build_sparse_backend (same bincount/nansum
-# accumulation), but the shared path coalesces to its own target_parts,
-# so agreement with the standalone freeze path is guaranteed only to the
-# oracle's 1e-6 rounding (gated every round by the DuckDB hash-match),
-# not bitwise. At 100 TB this is the difference between one corpus read
-# and four.
+# hands owl() prebuilt backends plus a shared gram_cache. The shared
+# path coalesces to its own target_parts, so agreement with the
+# standalone freeze path is guaranteed only to the oracle's 1e-6
+# rounding (gated every round by the DuckDB hash-match), not bitwise.
+# At 100 TB this is the difference between one corpus read and four.
 # ---------------------------------------------------------------------------
 
 def _wide_shared_context(spark, sf_dir: str) -> dict:
@@ -723,12 +721,13 @@ def _wide_shared_context(spark, sf_dir: str) -> dict:
 
 
 def _build_wide_shared_context(spark, sf_dir: str) -> dict:
-    import math
-
     import numpy as np
     from pyspark.sql import functions as F
 
-    from golem_spark.backends import SparseArrowBackend, _apply_scale_guard
+    from golem_spark.backends import (SparseArrowBackend, _label_xr, _meta,
+                                      _modeled_classes, _response_cols,
+                                      _scale_from_moments, _sized,
+                                      _sparse_stats_pass, _stash_null_model)
     from golem_spark.families import get_family
     from golem_spark.session import load_tables
 
@@ -740,142 +739,36 @@ def _build_wide_shared_context(spark, sf_dir: str) -> dict:
         F.when(F.col("l_returnflag") == "R", "R").otherwise("other")
         .alias("__isr"),
         F.col("l_returnflag").alias("__rf")).persist()
-
-    def statop(batches):
-        import math as _math
-
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for rb in batches:
-            nrow = rb.num_rows
-            ia = rb.column(rb.schema.get_field_index("idx"))
-            va = rb.column(rb.schema.get_field_index("val"))
-            if (ia.null_count or va.null_count
-                    or ia.values.null_count or va.values.null_count):
-                raise ValueError("missing values in columns: ['idx', 'val']")
-            ioff = ia.offsets.to_numpy()
-            voff = va.offsets.to_numpy()
-            fi = ia.values.to_numpy(zero_copy_only=False)[
-                ioff[0]:ioff[-1]].astype(np.int64, copy=False)
-            fv = va.values.to_numpy(zero_copy_only=False)[
-                voff[0]:voff[-1]].astype(np.float64, copy=False)
-            bad = float(((fi < 0) | (fi >= p)).sum())
-            fi2 = np.clip(fi, 0, p - 1)
-            sums = np.bincount(fi2, weights=fv, minlength=p)
-            sqs = np.bincount(fi2, weights=fv * fv, minlength=p)
-            row_idx = np.repeat(np.arange(nrow), np.diff(ioff))
-            # numeric response (gaussian/poisson): same accumulation as
-            # build_sparse_backend's need_y_stats branch
-            qcol = rb.column(rb.schema.get_field_index("__q")).to_numpy(
-                zero_copy_only=False).astype(np.float64, copy=False)
-            qnull = float(np.isnan(qcol).sum())
-            ysum_q = float(np.nansum(qcol))
-            ymin_q = (float(np.nanmin(qcol))
-                      if nrow and not np.all(np.isnan(qcol)) else np.inf)
-            ok = ~np.isnan(qcol) & (qcol >= 0)
-            uq, inv = np.unique(qcol[ok], return_inverse=True)
-            lg = np.array([_math.lgamma(u + 1.0) for u in uq])
-            lgsum = float(lg[inv].sum()) if uq.size else 0.0
-            xy_q = np.bincount(fi2, weights=fv * np.nan_to_num(qcol)[row_idx],
-                               minlength=p)
-            # string responses (binomial/multinomial): batch-distinct
-            # class discovery + per-class counts and raw X'1[label=c],
-            # same as the builder's label_is_string branch
-            tail = []
-            label_lists = []
-            for cname in ("__isr", "__rf"):
-                lcol = rb.column(rb.schema.get_field_index(cname))
-                labels = sorted(v for v in pc.unique(lcol).to_pylist()
-                                if v is not None)
-                lvals = np.asarray(lcol.to_pandas())
-                cnts = []
-                xys = []
-                for c in labels:
-                    ind = (lvals == c).astype(np.float64)
-                    cnts.append(float(ind.sum()))
-                    xys.append(np.bincount(fi2, weights=fv * ind[row_idx],
-                                           minlength=p))
-                tail.append(np.concatenate([cnts, *(xys or [np.zeros(0)])]))
-                label_lists.append(labels)
-            part = np.concatenate([[float(nrow), bad, qnull], sums, sqs,
-                                   [ysum_q, lgsum, ymin_q], xy_q, *tail])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([part], type=pa.list_(pa.float64())),
-                 pa.array([label_lists[0]], type=pa.list_(pa.string())),
-                 pa.array([label_lists[1]], type=pa.list_(pa.string()))],
-                ["part", "li", "lr"])
-
+    # each family's label column in proj
+    labels = {"gaussian": "__q", "binomial": "__isr", "poisson": "__q",
+              "multinomial": "__rf"}
     try:
-        parts = proj.mapInArrow(
-            statop,
-            "part array<double>, li array<string>, lr array<string>").collect()
-
-        plen = 3 + 2 * p + 3 + p  # [n,bad,qnull] sums sqs [ysum,lg,ymin] xy_q
-        tot = np.zeros(plen)
-        ymin = np.inf
-        cnt: dict[str, dict[str, float]] = {"__isr": {}, "__rf": {}}
-        xy: dict[str, dict[str, np.ndarray]] = {"__isr": {}, "__rf": {}}
-        for r in parts:
-            arr = np.asarray(r["part"])
-            head = arr[:plen].copy()
-            ymin = min(ymin, head[plen - p - 1])
-            head[plen - p - 1] = 0.0
-            tot += head
-            off = plen
-            for cname, key in (("__isr", "li"), ("__rf", "lr")):
-                blabels = list(r[key] or [])
-                k = len(blabels)
-                cs = arr[off:off + k]
-                for i, c in enumerate(blabels):
-                    cnt[cname][c] = cnt[cname].get(c, 0.0) + float(cs[i])
-                    seg = arr[off + k + i * p:off + k + (i + 1) * p]
-                    prev = xy[cname].get(c)
-                    xy[cname][c] = seg if prev is None else prev + seg
-                off += k + k * p
-
-        n = int(tot[0])
-        if tot[1] > 0:
-            raise ValueError(f"{int(tot[1])} feature indices outside [0, {p})")
-        if tot[2] > 0:
-            raise ValueError("missing values in the response columns")
-        if ymin < 0:
+        # every family's ride-alongs in ONE stats pass: the numeric
+        # response (gaussian/poisson) and both class labels
+        st = _sparse_stats_pass(proj, "idx", "val", p, num_cols=["__q"],
+                                str_cols=["__isr", "__rf"], lgamma=True)
+        n = st["n"]
+        if st["ymin"][0] < 0:
             raise ValueError("cannot have negative responses in poisson model")
-        sums = tot[3:3 + p]
-        sqs = tot[3 + p:3 + 2 * p]
-        ysum_q = tot[3 + 2 * p]
-        lgamma_sum = float(tot[3 + 2 * p + 1])
-        xy_q = tot[3 + 2 * p + 3:]
-        mean_q = ysum_q / max(n, 1)
-
-        x_scale = _apply_scale_guard(np.sqrt(sqs))
-        inv_scale = 1.0 / x_scale
-
-        cls_b = sorted(cnt["__isr"])     # ['R', 'other']
-        cls_m = sorted(cnt["__rf"])      # ['A', 'N', 'R']
-        if len(cls_b) != 2 or len(cls_m) < 3:
+        _, x_scale = _scale_from_moments(n, st["sums"] / max(n, 1), st["sqs"],
+                                         False, "l2")
+        mean_q = st["ysum"] / max(n, 1)
+        classes = {"gaussian": None, "poisson": None,
+                   "binomial": sorted(st["cnt"]["__isr"]),  # ['R', 'other']
+                   "multinomial": sorted(st["cnt"]["__rf"])}  # ['A', 'N', 'R']
+        if len(classes["binomial"]) != 2 or len(classes["multinomial"]) < 3:
             raise ValueError("unexpected wide-query class sets")
-        n_tgt = len(cls_m) - 1
-
-        enc = proj.select(
-            "idx", "val",
-            (F.col("__q").cast("double") - F.lit(float(mean_q))).alias("__yg"),
-            F.when(F.col("__isr") == cls_b[0], -1.0).otherwise(1.0).alias("__yb"),
-            F.col("__q").cast("double").alias("__yp"),
-            *[F.when(F.col("__rf") == cls_m[k], 1.0).otherwise(0.0)
-              .alias(f"__ym{k}") for k in range(n_tgt)])
-        sc = spark.sparkContext
-        target_parts = max(1, min(sc.defaultParallelism, n // 20_000 + 1))
-        cur_parts = enc.rdd.getNumPartitions()
-        if cur_parts > target_parts:
-            enc = enc.coalesce(target_parts)
-        elif cur_parts < target_parts:
-            enc = enc.repartition(target_parts)
-        enc = enc.persist()
+        y_cols, enc_cols = {}, []
+        for fam, short in (("gaussian", "g"), ("binomial", "b"),
+                           ("poisson", "p"), ("multinomial", "m")):
+            cols = _response_cols(fam, [labels[fam]], classes[fam], mean_q)
+            y_cols[fam] = ([f"__y{short}"] if len(cols) == 1 else
+                           [f"__y{short}{k}" for k in range(len(cols))])
+            enc_cols += [c.alias(a) for c, a in zip(cols, y_cols[fam])]
+        enc = _sized(proj.select("idx", "val", *enc_cols), n).persist()
         enc.count()
     except BaseException:
-        # same release as build_sparse_backend: never leave proj cached
+        # never leave proj cached, a rejected response included
         proj.unpersist()
         raise
     proj.unpersist()
@@ -884,59 +777,29 @@ def _build_wide_shared_context(spark, sf_dir: str) -> dict:
         def unpersist(self):  # the frame is shared by four fits
             pass
 
-    feature_names = [f"V{j + 1}" for j in range(p)]
-
-    def meta_for(fam, class_names, n_targets, y_center):
-        return {"x_center": np.zeros(p), "x_scale": x_scale,
-                "y_center": y_center, "y_scale": np.ones(len(y_center)),
-                "class_names": class_names, "n_targets": n_targets,
-                "feature_names": feature_names}
-
-    backends = {}
-    metas = {}
-
-    def view(y_cols):
+    backends, metas = {}, {}
+    for fam in ("gaussian", "binomial", "poisson", "multinomial"):
         # column-pruned narrow projection of the shared cache: the
         # in-memory scan is columnar, so each family's passes read only
         # idx/val + its own response columns, not all five encodings
-        return enc.select("idx", "val", *y_cols)
-
-    b = _Shared(view(["__yg"]), "idx", "val", ["__yg"], get_family("gaussian"),
-                True, n, p, inv_scale, persist=False)
-    b._null_mu = np.zeros(1)  # encoded y is centered
-    b._lam_max_grad = np.abs(inv_scale * (xy_q - mean_q * sums))
-    backends["gaussian"] = b
-    metas["gaussian"] = meta_for("gaussian", None, 1, np.array([mean_q]))
-
-    b = _Shared(view(["__yb"]), "idx", "val", ["__yb"], get_family("binomial"),
-                True, n, p, inv_scale, persist=False)
-    c0, c1 = cls_b
-    b._null_mu = np.array([(n - 2.0 * cnt["__isr"][c0]) / n])
-    b._lam_max_grad = np.abs(
-        inv_scale * (xy["__isr"][c1] - (cnt["__isr"][c1] / n) * sums))
-    backends["binomial"] = b
-    metas["binomial"] = meta_for("binomial", [str(c) for c in cls_b], 1,
-                                 np.zeros(1))
-
-    b = _Shared(view(["__yp"]), "idx", "val", ["__yp"], get_family("poisson"),
-                True, n, p, inv_scale, lgamma_sum=lgamma_sum, persist=False)
-    b._null_mu = np.array([mean_q])
-    b._lam_max_grad = np.abs(inv_scale * (sums - xy_q))
-    backends["poisson"] = b
-    metas["poisson"] = meta_for("poisson", None, 1, np.zeros(1))
-
-    b = _Shared(view([f"__ym{k}" for k in range(n_tgt)]), "idx", "val",
-                [f"__ym{k}" for k in range(n_tgt)],
-                get_family("multinomial"), True, n, p, inv_scale,
-                persist=False)
-    b._null_mu = np.array([cnt["__rf"][c] / n for c in cls_m[:n_tgt]])
-    b._lam_max_grad = np.abs(np.column_stack([
-        inv_scale * (xy["__rf"][c] - (cnt["__rf"][c] / n) * sums)
-        for c in cls_m[:n_tgt]]).ravel(order="F"))
-    backends["multinomial"] = b
-    metas["multinomial"] = meta_for("multinomial", [str(c) for c in cls_m],
-                                    n_tgt, np.zeros(n_tgt))
-
+        b = _Shared(enc.select("idx", "val", *y_cols[fam]), "idx", "val",
+                    y_cols[fam], get_family(fam), True, n, p, 1.0 / x_scale,
+                    lgamma_sum=st["lgamma_sum"] if fam == "poisson" else 0.0,
+                    persist=False)
+        if classes[fam] is None:
+            xr, ybar = _label_xr(fam, st["sums"], st["xy"], mean_q)
+        else:
+            lab = labels[fam]
+            gcls = _modeled_classes(fam, classes[fam])
+            xr = np.stack([st["xsum"][lab][c] for c in gcls], axis=1)
+            ybar = np.array([st["cnt"][lab][c] / n for c in gcls])
+        _stash_null_model(b, fam, n, st["sums"], xr, ybar, np.zeros(p),
+                          x_scale)
+        backends[fam] = b
+        metas[fam] = _meta(np.zeros(p), x_scale,
+                           mean_q if fam == "gaussian"
+                           else np.zeros(len(y_cols[fam])),
+                           classes[fam], [f"V{j + 1}" for j in range(p)])
     return {"backends": backends, "metas": metas, "gram_cache": {}}
 
 

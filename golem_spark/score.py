@@ -27,6 +27,14 @@ from golem_spark.predict import (_argmax_class_col, _lp_cols, _lp_np,
 _CLAMP = 1e-15
 
 
+class _NoRowsToScore(ValueError):
+    """Distributed scoring over no rows: every measure is a mean, which
+    is undefined there (the CV routes re-raise it naming the fold)."""
+
+    def __init__(self):
+        super().__init__("no rows to score")
+
+
 def _measures_for(family: str) -> list[str]:
     return {
         "gaussian": ["mse", "mae"],
@@ -283,7 +291,9 @@ def _score_sparse(fit: OwlFit, df: DataFrame, sparse_features, label_col,
     out = _collect_partials(
         df.select(idx_col, val_col, *label_cols).mapInPandas(
             op, "part array<double>"), K + 1)
-    return _score_finish(fam, measure, out[:K], max(out[K], 1.0), m)
+    if out[K] == 0:
+        raise _NoRowsToScore()
+    return _score_finish(fam, measure, out[:K], out[K], m)
 
 
 # ---------------------------------------------------------------------------
@@ -509,6 +519,8 @@ def _score_spark(fit: OwlFit, df: DataFrame, feature_cols, label_col, measure, s
                        response, label=y, names=names).alias(f"s{mi}_{k}")
             for mi, meas in enumerate(measures) for k in range(K)]
     row = df.agg(*aggs).collect()[0]
+    if row[0] is None:  # an average over no rows
+        raise _NoRowsToScore()
     out = np.array([[float(row[f"s{mi}_{k}"]) for k in range(K)]
                     for mi in range(len(measures))])
     return out[0] if isinstance(measure, str) else out

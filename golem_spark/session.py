@@ -39,6 +39,11 @@ from pyspark.sql import SparkSession
 # a static conf: it takes effect only when the session is created
 CODEGEN_CACHE_ENTRIES = 4096
 
+# the checkout holding this package: shipped to the Python workers, which
+# unpickle the Arrow closures' module-level helpers by importing
+# golem_spark, so a driver started from any working directory works
+_CHECKOUT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "golem_spark", shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
@@ -87,6 +92,8 @@ def get_spark(app_name: str = "golem_spark", shuffle_partitions: int | None = No
         # timestamp — read as long and rebuild micros in load_tables.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
+        # merged ahead of the workers' inherited PYTHONPATH
+        .config("spark.executorEnv.PYTHONPATH", _CHECKOUT_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

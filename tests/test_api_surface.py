@@ -347,3 +347,38 @@ def test_entry_imports_its_own_checkout(tmp_path):
                          cwd=tmp_path.parent, env=env, capture_output=True,
                          text=True, check=True).stdout.strip()
     assert Path(out).resolve().is_relative_to(tmp_path.resolve())
+
+
+def test_workers_import_golem_spark_from_any_directory(tmp_path):
+    """A driver run outside the checkout, with the root only on its own
+    sys.path and no PYTHONPATH, must still fit: its Python workers
+    unpickle golem_spark helpers, so get_spark ships them the root."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    code = (
+        "import sys; sys.path.insert(0, sys.argv[1])\n"
+        "import numpy as np\n"
+        "from golem_spark import owl\n"
+        "from golem_spark.session import get_spark\n"
+        "spark = get_spark('workers_path', shuffle_partitions=2)\n"
+        "rng = np.random.default_rng(0)\n"
+        "x = rng.normal(size=(200, 3))\n"
+        "y = (x[:, 0] + rng.normal(size=200) > 0).astype(int)\n"
+        "df = spark.createDataFrame([(float(a), float(b), float(c), int(t))\n"
+        "                            for (a, b, c), t in zip(x, y)],\n"
+        "                           'a double, b double, c double, y long')\n"
+        "fit = owl(df=df, feature_cols=['a', 'b', 'c'], label_col='y',\n"
+        "          family='binomial', n_sigma=3)\n"
+        "print('fit ok', fit.coefficients.shape[0])\n"
+        "spark.stop()\n")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    res = subprocess.run([sys.executable, "-c", code, str(root)],
+                         cwd=tmp_path, env=env, capture_output=True,
+                         text=True, timeout=300)
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert "fit ok 4" in res.stdout

@@ -160,16 +160,20 @@ def test_empty_fold_has_no_speculative_score(spark):
 
 
 def test_empty_fold_fails_alike_on_both_routes(spark):
+    """An empty held-out fold has no score: every Spark CV route raises
+    the same ValueError naming the fold and the repeat."""
     df = _empty_fold_frame(spark)
-    errors = {}
-    for grouped in (None, False):  # fused, per-cell
-        with pytest.raises(Exception) as exc:
+    for family, measure, grouped in [
+            ("binomial", "deviance", None),   # fused route
+            ("binomial", "deviance", False),  # per-cell route
+            ("gaussian", "mse", None),        # grouped-moments route
+            ("gaussian", "mse", False)]:      # per-cell route
+        with pytest.raises(ValueError,
+                           match="CV fold 2 of repeat 0 holds no rows"):
             train_owl_spark(df, ["x1", "x2"], "y", "id", q=(0.2,), number=3,
-                            family="binomial", sigma=_SIGMAS,
+                            family=family, measure=measure, sigma=_SIGMAS,
                             beta_init_by_cell=_zero_warm, max_workers=1,
                             _grouped=grouped)
-        errors[grouped] = exc.type
-    assert errors[None] is errors[False] is TypeError
 
 
 def _fold_backend(spark, family, p, y_cols):
